@@ -18,22 +18,33 @@ it gets an identifier, a counter, an N-Triples payload and a canonical hash,
 and the run ends with a manifest record per catalogue — semantics preserved
 from ``ImportingRdfVerticle.kt:84-96`` incl. duplicates-kept (J4).
 
-Scale notes: the only driver-side loop is the CC fixpoint (O(log d)
-iterations, skipped for broadcast-scale dictionaries). The extraction path
-moves the corpus through exactly one wide shuffle (stable ordering) and at
-most one Arrow round-trip (none on the JVM extraction strategy); only
-relation triples — the one kind that can duplicate
-across turns — pay a dedup shuffle. ``rewrite_canonical`` remains the
-at-scale path for entity dictionaries too large to compose into the
-linking map. Hot conversations spread across partitions because the
-stable-ordering shuffle keys are fine-grained; ``salted_repartition`` is
-available when a caller needs explicit spread before a conv-grouped stage.
+Scale notes: the work splits into a per-run dictionary and a per-slice
+plan. :func:`build_kg_dictionary` does everything that depends on the
+gazetteer alone, once: one ``take`` decides small vs at-scale, and the
+small branch turns the rows into the linking map (canonicalization
+composed in: MinHash→LSH→Jaccard→CC over the gazetteer, exact on the
+driver) and the extraction ``Column``s; the at-scale branch holds the
+distributed canonical map instead, so its driver-side CC fixpoint
+(O(log d) iterations) also runs once. :func:`kg_triples` then only plans
+DataFrames, so a caller that commits one slice at a time
+(``plans.resume.run_resumable``) pays the dictionary once per run, not
+once per slice. The extraction path moves the corpus through exactly one
+wide shuffle (stable ordering) and at most one Arrow round-trip (none on
+the JVM extraction strategy); only relation triples — the one kind that
+can duplicate across turns — pay a dedup shuffle. ``rewrite_canonical``
+remains the at-scale path for entity dictionaries too large to compose
+into the linking map. Hot conversations spread across partitions because
+the stable-ordering shuffle keys are fine-grained; ``salted_repartition``
+is available when a caller needs explicit spread before a conv-grouped
+stage.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import canonical_hash_agg
@@ -159,8 +170,9 @@ def best_alias_map(aliases: DataFrame) -> dict[str, str]:
 
 def _best_alias_map_rows(rows) -> dict[str, str]:
     """Driver-side core of :func:`best_alias_map` over already-collected
-    gazetteer rows — lets ``build_kg`` reuse ONE collect for the threshold
-    probe, the alias list, the argmax map and the canonical map."""
+    gazetteer rows — lets :func:`build_kg_dictionary` reuse ONE collect for
+    the threshold probe, the alias list, the argmax map and the canonical
+    map."""
     best: dict[str, tuple[bool, float, str]] = {}
     for r in rows:
         cur = best.get(r.alias)
@@ -216,59 +228,37 @@ def _row(subj, pred, obj, kind, lang=None, dt=None):
     )
 
 
-def extract_candidate_triples(
-    turns: DataFrame,
-    aliases: DataFrame,
-    alias_list: list[str],
-    entity_map: dict[str, str] | None = None,
-    engine: str | None = None,
-) -> DataFrame:
-    """Per-turn triple extraction: mention, relation, year, text, type rows.
+@dataclass(frozen=True)
+class ExtractionColumns:
+    """The broadcast-scale extraction as prebuilt ``Column``s over a turns
+    frame (``conv_id, turn_idx, text``).
 
-    Dedup-by-construction, shuffle-minimal:
+    The gazetteer is baked in as literals (the trie pattern, the membership
+    array, the alias → entity map), so BUILDING these is the driver-side
+    cost — one Py4J call per literal, thousands for a real gazetteer —
+    while applying them to another slice of turns costs nothing."""
 
-    - text/type/year/mention triples have the TURN URI (or a per-turn
-      unique key) as subject, so they cannot duplicate across turns —
-      emitted narrowly (mention duplicates within a turn collapse with an
-      ``array_distinct`` over the *string* entity array, which is cheap;
-      struct-array equality is interpreted and 2.4× slower).
-    - only relation triples (entity-subject) can repeat across a
-      conversation's turns → they alone pay the conv-level dedup shuffle,
-      a few % of the bytes.
+    #: fused ``struct<mentions, rel>`` extraction, aliased ``_mr``
+    mr: Column
+    #: per-turn ``array<triple struct>`` over ``_mr``, exploded as ``t``
+    turn_rows: Column
+    #: select list of the relation branch over ``_mr`` (subj … obj_datatype)
+    rel_rows: tuple[Column, ...]
 
-    ``entity_map`` (alias → entity URI) defaults to the prior-argmax map;
-    ``build_kg`` passes the CANONICALIZED composition so no rewrite join is
-    needed afterwards.
-    """
-    entity_map = entity_map or best_alias_map(aliases)
+
+def extraction_columns(
+    alias_list: list[str], entity_map: dict[str, str], engine: str
+) -> ExtractionColumns:
+    """Build the :class:`ExtractionColumns` for one gazetteer.
+
+    ``entity_map`` is alias → entity URI; :func:`build_kg_dictionary`
+    passes the CANONICALIZED composition so no rewrite join is needed
+    afterwards. ``engine`` is the physical extraction strategy
+    (:func:`~.mentions.pick_extraction_engine`)."""
     entity_of = F.create_map(
         *[F.lit(x) for kv in sorted(entity_map.items()) for x in kv]
     )
-
     turn_uri = _turn_uri()
-    # persisted: the per-turn branch and the relation branch both scan this
-    # — without persistence the extraction subtree (4 regex passes over the
-    # corpus text) would execute twice (MEMORY_AND_DISK: spills rather than
-    # OOMs). A persist, NOT a localCheckpoint: the columnar cache lets each
-    # branch prune to the columns it reads (the rel branch never touches
-    # text), which a row-RDD checkpoint cannot — measured ~1s on the bench
-    # corpus (round 6). Projected to the three columns the consumers read —
-    # role/tool/ts would otherwise sit in every cached block behind the
-    # column-pruning barrier a persist creates. RETENTION (round-5 verdict
-    # hygiene #1): the frame is registered for
-    # :func:`release_extraction_caches`, so long-lived sessions iterating
-    # gazetteers can drop the blocks without a session-wide clearCache.
-    with_m = turns.select(
-        "conv_id",
-        "turn_idx",
-        "text",
-        extract_mentions_and_relations(
-            F.col("text"),
-            alias_list,
-            engine or pick_extraction_engine(turns.sparkSession),
-        ).alias("_mr"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _EXTRACTION_CACHES.append(with_m)
     mention_structs = F.transform(
         F.array_distinct(
             F.transform(F.col("_mr.mentions"), lambda m: entity_of[m])
@@ -286,26 +276,66 @@ def extract_candidate_triples(
         _row(turn_uri, PRED_TEXT, F.col("text"), "literal"),
         _row(turn_uri, RDF_TYPE, F.lit(CLASS_TURN), "iri"),
     )
-    per_turn = with_m.select(
-        "conv_id",
-        "turn_idx",
-        F.explode(
+    return ExtractionColumns(
+        mr=extract_mentions_and_relations(
+            F.col("text"), alias_list, engine
+        ).alias("_mr"),
+        turn_rows=F.explode(
             F.concat(mention_structs, year_structs, fixed_structs)
         ).alias("t"),
-    ).select("conv_id", "turn_idx", "t.*")
-
-    rel_rows = (
-        with_m.filter(rel["subj_alias"].isNotNull())
-        .select(
-            "conv_id",
-            "turn_idx",
+        rel_rows=(
             entity_of[rel["subj_alias"]].alias("subj"),
             F.lit(PRED_RELEASED).alias("pred"),
             entity_of[rel["obj_alias"]].alias("obj_value"),
             F.lit("iri").alias("obj_kind"),
             F.lit(None).cast("string").alias("obj_lang"),
             F.lit(None).cast("string").alias("obj_datatype"),
-        )
+        ),
+    )
+
+
+def extract_candidate_triples(
+    turns: DataFrame,
+    columns: ExtractionColumns,
+    caches: list[DataFrame] | None = None,
+) -> DataFrame:
+    """Per-turn triple extraction: mention, relation, year, text, type rows.
+
+    Dedup-by-construction, shuffle-minimal:
+
+    - text/type/year/mention triples have the TURN URI (or a per-turn
+      unique key) as subject, so they cannot duplicate across turns —
+      emitted narrowly (mention duplicates within a turn collapse with an
+      ``array_distinct`` over the *string* entity array, which is cheap;
+      struct-array equality is interpreted and 2.4× slower).
+    - only relation triples (entity-subject) can repeat across a
+      conversation's turns → they alone pay the conv-level dedup shuffle,
+      a few % of the bytes.
+
+    The fused extraction frame is persisted and appended to ``caches``
+    (default: the module registry :func:`release_extraction_caches`
+    drains); a caller that passes its own list owns the unpersist.
+    """
+    # persisted: the per-turn branch and the relation branch both scan this
+    # — without persistence the extraction subtree (4 regex passes over the
+    # corpus text) would execute twice (MEMORY_AND_DISK: spills rather than
+    # OOMs). A persist, NOT a localCheckpoint: the columnar cache lets each
+    # branch prune to the columns it reads (the rel branch never touches
+    # text), which a row-RDD checkpoint cannot — measured ~1s on the bench
+    # corpus. Projected to the three columns the consumers read —
+    # role/tool/ts would otherwise sit in every cached block behind the
+    # column-pruning barrier a persist creates.
+    with_m = turns.select("conv_id", "turn_idx", "text", columns.mr).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    (_EXTRACTION_CACHES if caches is None else caches).append(with_m)
+    per_turn = with_m.select(
+        "conv_id", "turn_idx", columns.turn_rows
+    ).select("conv_id", "turn_idx", "t.*")
+
+    rel_rows = (
+        with_m.filter(F.col("_mr.rel.subj_alias").isNotNull())
+        .select("conv_id", "turn_idx", *columns.rel_rows)
         .groupBy(
             "conv_id", "subj", "pred", "obj_value", "obj_kind",
             "obj_lang", "obj_datatype",
@@ -600,15 +630,28 @@ def rewrite_canonical(triples: DataFrame, canon: DataFrame) -> DataFrame:
     return out.groupBy(*key).agg(F.min("turn_idx").alias("turn_idx"))
 
 
-def build_kg(
+@dataclass(frozen=True)
+class KGDictionary:
+    """Everything the KG DAG derives from the gazetteer alone — built once
+    per run by :func:`build_kg_dictionary`, applied to any number of
+    transcript slices by :func:`kg_triples`."""
+
+    #: the gazetteer (``alias, entity_uri, prior``) as given
+    aliases: DataFrame
+    #: ``(entity_uri, canonical_id)``: driver-built rows when small, the
+    #: distributed blocking + CC frame at scale
+    canon: DataFrame
+    #: the broadcast-scale extraction; ``None`` selects the at-scale
+    #: join-based matcher + ``rewrite_canonical``
+    columns: ExtractionColumns | None
+
+
+def build_kg_dictionary(
     spark: SparkSession,
-    transcripts: DataFrame,
     aliases: DataFrame,
-    catalogue: str = "transcripts",
-    salt_partitions: int | None = None,
     small_dim_threshold: int = 50_000,
-) -> dict[str, DataFrame]:
-    """Run the full DAG. Returns {triples, entities, datasets, manifest}.
+) -> KGDictionary:
+    """The per-run dictionary side of :func:`build_kg`.
 
     Canonicalization has two physical strategies keyed on ONE threshold —
     the same one ``canonical_entity_map`` branches on, so the two decisions
@@ -629,46 +672,73 @@ def build_kg(
       between the two paths. A mined 10^8-alias dictionary flows through
       this branch end to end as DataFrames.
     """
+    # ONE driver action covers the whole dictionary side of the small
+    # branch: take(threshold+1) IS the threshold probe (same evaluation
+    # canonical_entity_map branches on, so the two decisions cannot
+    # disagree) and, when small, the returned rows feed the alias list,
+    # the argmax linking map and the driver canonicalization directly.
+    taken = aliases.take(small_dim_threshold + 1)
+    if len(taken) > small_dim_threshold:
+        canon = canonical_entity_map(aliases, small_dim_threshold, small=False)
+        return KGDictionary(aliases, canon, None)
+    best = _best_alias_map_rows(taken)
+    mapping = _driver_canonical_map([(r.entity_uri, r.alias) for r in taken])
+    # the canonical map DataFrame is only consumed by build_kg's lazy
+    # `entities` output — building it from the driver-side mapping costs
+    # no job here
+    canon = spark.createDataFrame(
+        sorted(mapping.items()), "entity_uri string, canonical_id string"
+    )
+    columns = extraction_columns(
+        sorted({r.alias for r in taken}),
+        {a: mapping.get(e, e) for a, e in best.items()},
+        pick_extraction_engine(spark),
+    )
+    return KGDictionary(aliases, canon, columns)
+
+
+def kg_triples(
+    dictionary: KGDictionary,
+    transcripts: DataFrame,
+    salt_partitions: int | None = None,
+    caches: list[DataFrame] | None = None,
+) -> DataFrame:
+    """The per-slice side of :func:`build_kg`: the triples plan for
+    ``transcripts`` under a prebuilt dictionary — stable ordering,
+    extraction, canonical linking and the ``dataset_id`` column. Plans
+    DataFrames only; ``caches`` is passed on to
+    :func:`extract_candidate_triples`."""
     # an extra salted repartition only pays when a caller wants a specific
     # parallelism before the (narrow) extraction stage — stable_turns'
     # conv_id shuffle already distributes the corpus
     turns = stable_turns(transcripts)
     if salt_partitions:
         turns = salted_repartition(turns, salt_partitions)
-
-    # ONE driver action covers the whole dictionary side of the small
-    # branch: take(threshold+1) IS the threshold probe (same evaluation
-    # canonical_entity_map branches on, so the two decisions cannot
-    # disagree) and, when small, the returned rows feed the alias list,
-    # the argmax linking map and the driver canonicalization directly.
-    # Round 5 ran five separate Spark jobs here (limit+count probe,
-    # alias-distinct collect, best_alias_map collect,
-    # canonical_entity_map's collect, canon.collect) — ~1.5s of pure
-    # fixed job latency per build_kg call at bench scale, independent of
-    # corpus size.
-    taken = aliases.take(small_dim_threshold + 1)
-    small = len(taken) <= small_dim_threshold
-    if small:
-        alias_list = sorted({r.alias for r in taken})
-        best = _best_alias_map_rows(taken)
-        mapping = _driver_canonical_map(
-            [(r.entity_uri, r.alias) for r in taken]
-        )
-        # the canonical map DataFrame is only consumed by the lazy
-        # `entities` output — building it from the driver-side mapping
-        # costs no job here
-        canon = spark.createDataFrame(
-            sorted(mapping.items()), "entity_uri string, canonical_id string"
-        )
-        composed = {a: mapping.get(e, e) for a, e in best.items()}
-        triples = extract_candidate_triples(
-            turns, aliases, alias_list, entity_map=composed
-        )
+    if dictionary.columns is not None:
+        triples = extract_candidate_triples(turns, dictionary.columns, caches)
     else:
-        canon = canonical_entity_map(aliases, small_dim_threshold, small=False)
-        raw = extract_candidate_triples_join(turns, aliases)
-        triples = rewrite_canonical(raw, canon)
-    triples = triples.withColumn("dataset_id", _conv_uri())
+        raw = extract_candidate_triples_join(turns, dictionary.aliases)
+        triples = rewrite_canonical(raw, dictionary.canon)
+    return triples.withColumn("dataset_id", _conv_uri())
+
+
+def build_kg(
+    spark: SparkSession,
+    transcripts: DataFrame,
+    aliases: DataFrame,
+    catalogue: str = "transcripts",
+    salt_partitions: int | None = None,
+    small_dim_threshold: int = 50_000,
+) -> dict[str, DataFrame]:
+    """Run the full DAG. Returns {triples, entities, datasets, manifest}.
+
+    The dictionary (:func:`build_kg_dictionary`, small vs at-scale
+    strategy) and the triples plan (:func:`kg_triples`) are the two parts
+    a resumable run calls separately; this adds the per-conversation
+    datasets, the manifest and the entity table on top.
+    """
+    dictionary = build_kg_dictionary(spark, aliases, small_dim_threshold)
+    triples = kg_triples(dictionary, transcripts, salt_partitions)
 
     rendered = triples.withColumn(
         "nt",
@@ -698,7 +768,7 @@ def build_kg(
         .groupBy(F.col("obj_value").alias("canonical_id"))
         .agg(F.count(F.lit(1)).alias("n_mentions"))
         .join(
-            canon.groupBy("canonical_id").agg(
+            dictionary.canon.groupBy("canonical_id").agg(
                 F.collect_set("entity_uri").alias("merged_uris")
             ),
             "canonical_id",

@@ -8,6 +8,13 @@ restart, committed conversations are anti-joined away and only the remainder
 recomputes. With Iceberg available this becomes snapshot-append + a ``runs``
 table; the parquet + marker emulation keeps the same commit semantics
 (partition overwrite is atomic per bucket directory).
+
+The gazetteer side of the KG DAG is per run, the triples plan per bucket:
+``run_resumable`` builds the dictionary (``kg.pipeline.build_kg_dictionary``:
+the alias ``take``, the linking and canonical maps, the extraction
+expressions) once, before the first bucket and only if a bucket remains;
+each bucket then plans only its triples (``kg.pipeline.kg_triples``) and
+drops its extraction cache once committed.
 """
 
 from __future__ import annotations
@@ -72,7 +79,7 @@ def run_resumable(
     """
     import uuid
 
-    from ..kg.pipeline import build_kg
+    from ..kg.pipeline import build_kg_dictionary, kg_triples
     from .lineage import stage_metrics, union_metrics
 
     run_id = str(uuid.uuid4())
@@ -81,35 +88,45 @@ def run_resumable(
         r[BUCKET_COL]
         for r in todo.select(BUCKET_COL).distinct().collect()
     )
+    if not buckets:
+        return 0
+    dictionary = build_kg_dictionary(spark, aliases)
     marker = os.path.join(out_dir, "_committed")
     n_done = 0
     for b in buckets:
         part = todo.filter(F.col(BUCKET_COL) == b).drop(BUCKET_COL)
-        out = build_kg(spark, part, aliases)
-        triples_path = os.path.join(out_dir, f"triples/bucket={b}")
-        out["triples"].write.mode("overwrite").parquet(triples_path)
-        # per-partition lineage rows for the bucket (north rule): counted
-        # over the COMMITTED parquet, so metrics describe what was durably
-        # written, not a recomputation
-        written = spark.read.parquet(triples_path)
-        metrics = union_metrics(
-            [
-                stage_metrics(part, run_id, f"bucket={b}/transcripts_in"),
-                stage_metrics(written, run_id, f"bucket={b}/triples_out"),
-            ]
-        )
-        # bucket-partitioned overwrite, NOT a flat append: a crash between
-        # this write and the marker append would otherwise leave duplicate
-        # lineage rows when the bucket replays (the triples overwrite is
-        # idempotent; the metrics write must be too)
-        metrics.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"lineage_metrics/bucket={b}")
-        )
-        # the marker append IS the commit point: triples + metrics for
-        # bucket b are fully written before b is recorded
-        spark.createDataFrame([(b,)], "bucket int").write.mode("append").parquet(
-            marker
-        )
+        caches: list[DataFrame] = []
+        triples = kg_triples(dictionary, part, caches=caches)
+        try:
+            triples_path = os.path.join(out_dir, f"triples/bucket={b}")
+            triples.write.mode("overwrite").parquet(triples_path)
+            # per-partition lineage rows for the bucket (north rule):
+            # counted over the COMMITTED parquet, so metrics describe what
+            # was durably written, not a recomputation
+            written = spark.read.parquet(triples_path)
+            metrics = union_metrics(
+                [
+                    stage_metrics(part, run_id, f"bucket={b}/transcripts_in"),
+                    stage_metrics(written, run_id, f"bucket={b}/triples_out"),
+                ]
+            )
+            # bucket-partitioned overwrite, NOT a flat append: a crash
+            # between this write and the marker append would otherwise
+            # leave duplicate lineage rows when the bucket replays (the
+            # triples overwrite is idempotent; the metrics write must be too)
+            metrics.write.mode("overwrite").parquet(
+                os.path.join(out_dir, f"lineage_metrics/bucket={b}")
+            )
+            # the marker append IS the commit point: triples + metrics for
+            # bucket b are fully written before b is recorded. The row is
+            # built on the JVM — a local-data frame would start a Python
+            # worker job per bucket
+            spark.range(1, numPartitions=1).select(
+                F.lit(b).cast("int").alias("bucket")
+            ).write.mode("append").parquet(marker)
+        finally:
+            for df in caches:
+                df.unpersist()
         n_done += 1
         if fail_after_bucket is not None and n_done >= fail_after_bucket:
             raise RuntimeError(f"injected failure after bucket {b}")

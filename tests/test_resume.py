@@ -84,3 +84,77 @@ def test_remaining_conversations_filters_committed(spark, tmp_path):
     t = synth_transcripts(spark, n_conv=6, seed=9)
     rem0 = remaining_conversations(spark, t, out_dir, n_buckets=4)
     assert rem0.count() == t.count()
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _four_bucket_corpus(spark):
+    from bop_consus_importing_rdf_spark.plans.resume import BUCKET_COL, with_bucket
+
+    t = synth_transcripts(spark, n_conv=20, seed=5)
+    assert with_bucket(t, 4).select(BUCKET_COL).distinct().count() == 4
+    return t
+
+
+def test_run_resumable_builds_dictionary_once(spark, tmp_path, monkeypatch):
+    """The gazetteer side is per run: one dictionary for four buckets, none
+    for a rerun with nothing left to commit; each bucket's extraction
+    cache is released once the bucket commits."""
+    from bop_consus_importing_rdf_spark.kg import pipeline
+
+    built = []
+    original = pipeline.build_kg_dictionary
+
+    def counting(*args, **kwargs):
+        built.append(1)
+        return original(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "build_kg_dictionary", counting)
+    out_dir = str(tmp_path / "kg_out")
+    t = _four_bucket_corpus(spark)
+    aliases = alias_table(spark)
+
+    before = _persistent_rdds(spark)
+    assert run_resumable(spark, t, aliases, out_dir, n_buckets=4) == 4
+    assert len(built) == 1
+    assert _persistent_rdds(spark) <= before
+
+    assert run_resumable(spark, t, aliases, out_dir, n_buckets=4) == 0
+    assert len(built) == 1
+
+
+def test_run_resumable_releases_caches_on_injected_failure(spark, tmp_path):
+    out_dir = str(tmp_path / "kg_out")
+    t = _four_bucket_corpus(spark)
+    aliases = alias_table(spark)
+
+    before = _persistent_rdds(spark)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_resumable(spark, t, aliases, out_dir, n_buckets=4, fail_after_bucket=2)
+    assert _persistent_rdds(spark) <= before
+    assert run_resumable(spark, t, aliases, out_dir, n_buckets=4) == 2
+    assert _persistent_rdds(spark) <= before
+    assert committed_buckets(spark, out_dir) == {0, 1, 2, 3}
+
+
+def test_committed_buckets_reads_local_data_marker(spark, tmp_path):
+    """A marker file written from a local-data frame (a nullable ``bucket
+    int`` column) reads back together with the markers run_resumable
+    writes from a JVM-built row."""
+    out_dir = str(tmp_path / "kg_out")
+    t = _four_bucket_corpus(spark)
+    spark.createDataFrame([(0,)], "bucket int").write.mode("append").parquet(
+        f"{out_dir}/_committed"
+    )
+    assert committed_buckets(spark, out_dir) == {0}
+
+    assert run_resumable(spark, t, alias_table(spark), out_dir, n_buckets=4) == 3
+    assert committed_buckets(spark, out_dir) == {0, 1, 2, 3}
+    done = {
+        r.bucket
+        for r in spark.read.parquet(f"{out_dir}/triples")
+        .select("bucket").distinct().collect()
+    }
+    assert done == {1, 2, 3}
