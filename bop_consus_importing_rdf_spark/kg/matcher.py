@@ -27,7 +27,7 @@ Shape (tokenize + bucket join + per-turn verification):
    sequence. JVM-side, no Python workers.
 
 Relation-template groups come from
-``mentions.extract_relation_candidates`` (the template is fixed-size —
+``mentions.with_relation_candidates`` (the template is fixed-size —
 regex stays); gazetteer MEMBERSHIP of the groups is validated by joining
 against the dictionary instead of an ``array_contains`` literal.
 

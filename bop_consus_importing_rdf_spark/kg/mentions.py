@@ -5,25 +5,27 @@ Replaces the reference's RDF parse stage (``JenaUtils.read``, reference
 here the unstructured input is conversation text and the parser is a
 gazetteer matcher.
 
-Round 2: the extraction is **pure JVM column expressions** —
-``regexp_extract_all`` over the longest-first alias alternation for
-mentions, three ``regexp_extract`` groups + ``array_contains`` validation
-for the template relation. Whole-stage codegen, zero Python workers, no
-Arrow round-trip on the corpus hot path (measured: removing the
-ArrowEvalPython node is worth ~15% pipeline throughput). The pattern gets
-the ``(?U)`` inline flag so Java's ``\\b`` uses unicode word classes —
-matching Python ``re`` semantics exactly; the original Arrow
-implementations remain below (``*_arrow``) as the reference
-implementations the equivalence test compares against.
+The extraction is **pure JVM column expressions**, applied as a DataFrame
+transform (:func:`mention_relation_extractor`): ``regexp_extract_all``
+over a trie-factored alias pattern for mentions, one packed
+``regexp_replace`` pass for the three template groups and an
+``array_contains`` membership test for the relation. Stacked projections
+compute each intermediate once, so every regex runs once per turn.
+Whole-stage codegen, zero Python workers, no Arrow round-trip on the
+corpus hot path. The pattern gets the ``(?U)`` inline flag so Java's
+``\\b`` uses unicode word classes — matching Python ``re`` semantics
+exactly. The Arrow implementations below (``*_arrow``) are the second
+physical engine and the reference the equivalence tests compare against.
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 from functools import lru_cache
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -97,86 +99,113 @@ def detect_mentions(text: Column, aliases: list[str]) -> Column:
     return F.regexp_extract_all(filled, F.lit(alias_pattern(aliases)), 1)
 
 
-def extract_relation_candidates(text: Column) -> Column:
-    """Template group extraction WITHOUT the gazetteer-membership gate:
-    ``struct<subj_alias, obj_alias, year>`` with nulls when the text does
-    not instantiate the ``<A> released <B> in <year>`` template (year
-    checked; A/B are raw stripped groups). :func:`extract_relations` adds
-    the membership test against a literal alias array; the join-based
-    at-scale matcher (``kg/matcher.py``) validates membership with a join
-    against the alias table instead — same split as mention detection.
-    """
-    def strip(c: Column) -> Column:
-        # explicit Unicode-whitespace class — identical set in both engines
-        return F.regexp_replace(c, f"^[{_WS_CLASS}]+|[{_WS_CLASS}]+$", "")
+_SEP = "\x01"
+_REL_FIELDS = ("subj_alias", "obj_alias", "year")
+_GROUPS = ("_g1", "_g2", "_g3")
 
-    filled = F.coalesce(text, F.lit(""))
-    # ONE regex pass for all three groups (the same packing trick as the
-    # N-Triples parser): swallow the tail with (?s:.*) so the replacement
-    # is exactly the packed groups; a non-matching text passes through
-    # unchanged and splits into a single part. Three independent
+
+def _strip(c: Column) -> Column:
+    # explicit Unicode-whitespace class — identical set in both engines
+    return F.regexp_replace(c, f"^[{_WS_CLASS}]+|[{_WS_CLASS}]+$", "")
+
+
+def _template_groups(df: DataFrame) -> DataFrame:
+    """Stages 1–2 of the staged extraction over ``df.text``: adds the
+    template groups as ``_g1``/``_g2`` (whitespace-stripped) and ``_g3``,
+    ``""`` where the template does not match."""
+    filled = F.coalesce(F.col("text"), F.lit(""))
+    # Stage 1, one regex pass for all three groups (the same packing trick
+    # as the N-Triples parser): swallow the tail with (?s:.*) so the
+    # replacement is exactly the packed groups; a non-matching text passes
+    # through unchanged and splits into a single part. Three independent
     # regexp_extract calls measured ~35% slower per core on the 7M-turn
     # scaling corpus — per-row regex passes are the whole cost out here.
-    sep = "\x01"
     packed = F.regexp_replace(
-        filled, _RELATION_TMPL + r"(?s:.*)$", f"$1{sep}$2{sep}$3"
+        filled, _RELATION_TMPL + r"(?s:.*)$", f"$1{_SEP}$2{_SEP}$3"
     )
-    parts = F.split(packed, sep)
-    # A real match test, not split-arity inference: adversarial text carrying
-    # raw \x01 bytes would otherwise fabricate a 3-way split without the
-    # template ever matching. rlike + arity together are sound: when the
-    # anchored template DID match, arity==3 additionally proves the captured
-    # groups themselves are \x01-free, so parts[i] == group i exactly (text
-    # with \x01 inside a group inflates the arity and is rejected here —
-    # and rejected by the Arrow twin too, since a group containing \x01 can
-    # never be a gazetteer alias).
-    matched = (F.size(parts) == 3) & filled.rlike(_RELATION_TMPL)
-    # F.get, not parts[i]: ANSI-safe on arity≠3 rows under eager evaluation
-    g1 = F.when(matched, strip(F.get(parts, 0))).otherwise(F.lit(""))
-    g2 = F.when(matched, strip(F.get(parts, 1))).otherwise(F.lit(""))
-    g3 = F.when(matched, F.get(parts, 2)).otherwise(F.lit(""))
-    ok = g3.rlike(r"^\d{4}$")  # belt-and-braces year invariant
-    return F.struct(
-        F.when(ok, g1).alias("subj_alias"),
-        F.when(ok, g2).alias("obj_alias"),
-        F.when(ok, g3).alias("year"),
+    staged = df.withColumns(
+        {
+            "_parts": F.split(packed, _SEP),
+            "_tmpl": filled.rlike(_RELATION_TMPL),
+        }
     )
+    # Stage 2 reads _parts and _tmpl three times each, so CollapseProject
+    # cannot inline stage 1 into it (it only inlines a non-trivial
+    # expression read once). The rlike is a real match test, not
+    # split-arity inference: adversarial text carrying raw \x01 bytes would
+    # otherwise fabricate a 3-way split without the template ever
+    # matching. rlike + arity together are sound: when the anchored template
+    # DID match, arity==3 additionally proves the captured groups themselves
+    # are \x01-free, so parts[i] == group i exactly (text with \x01 inside a
+    # group inflates the arity and is rejected here — and rejected by the
+    # Arrow twin too, since a group containing \x01 can never be a gazetteer
+    # alias).
+    parts = F.col("_parts")
+    matched = (F.size(parts) == 3) & F.col("_tmpl")
+
+    def group(i: int) -> Column:
+        # F.get, not parts[i]: ANSI-safe on arity≠3 rows
+        g = F.get(parts, i)
+        return F.when(matched, _strip(g) if i < 2 else g).otherwise(F.lit(""))
+
+    return staged.withColumns(
+        {name: group(i) for i, name in enumerate(_GROUPS)}
+    ).drop("_parts", "_tmpl")
 
 
-def extract_relations(text: Column, aliases: list[str]) -> Column:
-    """Template relation extraction: ``<A> released <B> in <year>``.
-
-    Returns ``struct<subj_alias, obj_alias, year>`` (nulls when the text
-    does not instantiate the template or A/B are not gazetteer aliases).
-    Pure column expressions; the gazetteer membership test is an
-    ``array_contains`` over a constant-folded literal array.
-    """
-    cand = extract_relation_candidates(text)
-    valid = F.array(*[F.lit(a) for a in sorted(aliases)])
-    ok = (
-        cand["subj_alias"].isNotNull()
-        & F.array_contains(valid, cand["subj_alias"])
-        & F.array_contains(valid, cand["obj_alias"])
-    )
-    return F.struct(
-        F.when(ok, cand["subj_alias"]).alias("subj_alias"),
-        F.when(ok, cand["obj_alias"]).alias("obj_alias"),
-        F.when(ok, cand["year"]).alias("year"),
+def _relation(ok: Column) -> Column:
+    """``struct<subj_alias, obj_alias, year>`` of the groups where ``ok``,
+    all-null fields elsewhere; ``ok`` is evaluated once per row."""
+    return F.when(
+        ok,
+        F.struct(*[F.col(g).alias(f) for g, f in zip(_GROUPS, _REL_FIELDS)]),
+    ).otherwise(
+        F.struct(*[F.lit(None).cast("string").alias(f) for f in _REL_FIELDS])
     )
 
 
-def extract_mentions_and_relations(
-    text: Column, aliases: list[str], engine: str = "jvm"
-) -> Column:
-    """Fused extractor: ``struct<mentions: array<string>,
-    rel: struct<subj_alias, obj_alias, year>>``.
+def _year_ok() -> Column:
+    # belt-and-braces year invariant over the third group
+    return F.col("_g3").rlike(r"^\d{4}$")
 
-    Two physical strategies with IDENTICAL semantics (row-exact equivalence
-    test in ``test_mentions_jvm``):
 
-    - ``"jvm"``: pure column expressions — trie-factored
-      ``regexp_extract_all`` + single-pass packed relation extraction,
-      whole-stage codegen, zero Python workers.
+def with_relation_candidates(df: DataFrame) -> DataFrame:
+    """Template group extraction WITHOUT the gazetteer-membership gate:
+    adds ``_relc struct<subj_alias, obj_alias, year>`` over ``df.text``,
+    nulls when the text does not instantiate the ``<A> released <B> in
+    <year>`` template (year checked; A/B are raw stripped groups). The
+    join-based at-scale matcher (``kg/matcher.py``) validates membership
+    with a join against the alias table — same split as mention detection.
+    Staged like :func:`mention_relation_extractor`'s JVM engine."""
+    return (
+        _template_groups(df)
+        .withColumn("_relc", _relation(_year_ok()))
+        .drop(*_GROUPS)
+    )
+
+
+def mention_relation_extractor(
+    aliases: list[str], engine: str = "jvm"
+) -> Callable[[DataFrame], DataFrame]:
+    """Fused extractor for one gazetteer: a DataFrame transform adding
+    ``_mr struct<mentions: array<string>, rel: struct<subj_alias,
+    obj_alias, year>>`` over ``df.text``. ``rel`` holds the
+    ``<A> released <B> in <year>`` groups when A and B are gazetteer
+    aliases, nulls otherwise.
+
+    The gazetteer literals are built here, once, as ``Column``s; applying
+    the returned transform to another frame costs no Py4J literal calls.
+    Two physical strategies with IDENTICAL semantics (row-exact
+    equivalence tests in ``test_mentions_jvm``):
+
+    - ``"jvm"``: pure column expressions in stacked projections — the
+      packed template pass, its ``rlike`` and the trie-factored
+      ``regexp_extract_all``; the stripped groups; the year check and an
+      ``array_contains`` over a constant-folded literal array. Each stage
+      reads the one before it several times, so Catalyst's
+      ``CollapseProject`` keeps them apart and every regex runs once per
+      row (inlined into one projection, the plan held 59
+      ``regexp_replace`` calls). Whole-stage codegen, zero Python workers.
     - ``"arrow"``: the pandas-UDF batch matcher.
 
     Pick with :func:`pick_extraction_engine` when auto-selecting: on a
@@ -189,11 +218,36 @@ def extract_mentions_and_relations(
     Catalyst philosophy applied to the extraction stage.
     """
     if engine == "arrow":
-        return extract_mentions_and_relations_arrow(text, aliases)
-    return F.struct(
-        detect_mentions(text, aliases).alias("mentions"),
-        extract_relations(text, aliases).alias("rel"),
-    )
+        mr = extract_mentions_and_relations_arrow(F.col("text"), aliases)
+        return lambda df: df.withColumn("_mr", mr)
+    pattern = F.lit(alias_pattern(aliases))
+    members = F.array(*[F.lit(a) for a in sorted(aliases)])
+
+    def extract(df: DataFrame) -> DataFrame:
+        mentions = F.regexp_extract_all(
+            F.coalesce(F.col("text"), F.lit("")), pattern, 1
+        )
+        # stage 3 reads each group twice (this test and the struct), so it
+        # stays a projection of its own over stage 2
+        ok = (
+            _year_ok()
+            & F.array_contains(members, F.col("_g1"))
+            & F.array_contains(members, F.col("_g2"))
+        )
+        # the mention pass merges into stage 1 (read once there)
+        return (
+            _template_groups(df.withColumn("_mentions", mentions))
+            .withColumn(
+                "_mr",
+                F.struct(
+                    F.col("_mentions").alias("mentions"),
+                    _relation(ok).alias("rel"),
+                ),
+            )
+            .drop("_mentions", *_GROUPS)
+        )
+
+    return extract
 
 
 def pick_extraction_engine(spark) -> str:
@@ -240,7 +294,7 @@ def extract_mentions_and_relations_arrow(
     text: Column, aliases: list[str]
 ) -> Column:
     """Arrow-batched reference implementation of
-    :func:`extract_mentions_and_relations`."""
+    :func:`mention_relation_extractor`."""
     alias_key = tuple(sorted(aliases))
     out_type = T.StructType(
         [

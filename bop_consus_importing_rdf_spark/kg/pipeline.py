@@ -41,6 +41,7 @@ stage.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark import StorageLevel
@@ -54,7 +55,11 @@ from ..operators.manifest import with_counter
 from ..vocab import KG_NS, RDF_TYPE, XSD_NS
 from .blocking import entity_similarity_edges
 from .cc import connected_components
-from .mentions import extract_mentions_and_relations, pick_extraction_engine
+from .mentions import (
+    mention_relation_extractor,
+    pick_extraction_engine,
+    with_relation_candidates,
+)
 
 PRED_MENTIONS = KG_NS + "pred:mentions"
 PRED_RELEASED = KG_NS + "pred:released"
@@ -238,8 +243,10 @@ class ExtractionColumns:
     cost — one Py4J call per literal, thousands for a real gazetteer —
     while applying them to another slice of turns costs nothing."""
 
-    #: fused ``struct<mentions, rel>`` extraction, aliased ``_mr``
-    mr: Column
+    #: adds the fused ``struct<mentions, rel>`` extraction as ``_mr``
+    #: (:func:`~.mentions.mention_relation_extractor`; holds the trie
+    #: pattern and membership array ``Column``s)
+    add_mr: Callable[[DataFrame], DataFrame]
     #: per-turn ``array<triple struct>`` over ``_mr``, exploded as ``t``
     turn_rows: Column
     #: select list of the relation branch over ``_mr`` (subj … obj_datatype)
@@ -277,9 +284,7 @@ def extraction_columns(
         _row(turn_uri, RDF_TYPE, F.lit(CLASS_TURN), "iri"),
     )
     return ExtractionColumns(
-        mr=extract_mentions_and_relations(
-            F.col("text"), alias_list, engine
-        ).alias("_mr"),
+        add_mr=mention_relation_extractor(alias_list, engine),
         turn_rows=F.explode(
             F.concat(mention_structs, year_structs, fixed_structs)
         ).alias("t"),
@@ -317,16 +322,19 @@ def extract_candidate_triples(
     drains); a caller that passes its own list owns the unpersist.
     """
     # persisted: the per-turn branch and the relation branch both scan this
-    # — without persistence the extraction subtree (4 regex passes over the
-    # corpus text) would execute twice (MEMORY_AND_DISK: spills rather than
+    # — without persistence the extraction subtree (the template pass, its
+    # rlike, the trie mention pass and the group strips over the corpus
+    # text) would execute twice (MEMORY_AND_DISK: spills rather than
     # OOMs). A persist, NOT a localCheckpoint: the columnar cache lets each
     # branch prune to the columns it reads (the rel branch never touches
     # text), which a row-RDD checkpoint cannot — measured ~1s on the bench
     # corpus. Projected to the three columns the consumers read —
     # role/tool/ts would otherwise sit in every cached block behind the
     # column-pruning barrier a persist creates.
-    with_m = turns.select("conv_id", "turn_idx", "text", columns.mr).persist(
-        StorageLevel.MEMORY_AND_DISK
+    with_m = (
+        turns.select("conv_id", "turn_idx", "text")
+        .transform(columns.add_mr)
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     (_EXTRACTION_CACHES if caches is None else caches).append(with_m)
     per_turn = with_m.select(
@@ -365,8 +373,6 @@ def extract_candidate_triples_join(
         mentions_from_candidates,
         turn_candidate_aliases,
     )
-    from .mentions import extract_relation_candidates
-
     best = best_alias_entities(aliases)
     cands = turn_candidate_aliases(turns, alias_match_table(aliases))
     enriched = (
@@ -378,8 +384,8 @@ def extract_candidate_triples_join(
             mentions_from_candidates(
                 F.col("text"), F.col("cand_aliases")
             ).alias("_mentions"),
-            extract_relation_candidates(F.col("text")).alias("_relc"),
         )
+        .transform(with_relation_candidates)
         # localCheckpoint, not persist (ADVICE r4): four branches consume
         # this subtree, so it must materialize once — but a persist here
         # would pin executor blocks for the session (the caller can't

@@ -71,10 +71,24 @@ def alias_table(spark: SparkSession) -> DataFrame:
     priors) and near-duplicate entity pairs (``X Corp`` vs ``X Corporation``
     minted as distinct URIs on even index) that MinHash+CC must merge during
     canonicalization.
+
+    An inline ``VALUES`` table, i.e. a local relation: a ``take`` or
+    ``collect`` of it runs on the driver without a Spark job, where a
+    ``createDataFrame(list)`` frame is a Python RDD whose every read starts
+    Python workers.
     """
-    return spark.createDataFrame(
-        alias_rows(), "alias string, entity_uri string, prior double"
+    values = ", ".join(
+        f"({_sql_string(a)}, {_sql_string(e)}, CAST({p!r} AS DOUBLE))"
+        for a, e, p in alias_rows()
     )
+    return spark.sql(
+        f"SELECT * FROM VALUES {values} AS t(alias, entity_uri, prior)"
+    )
+
+
+def _sql_string(s: str) -> str:
+    """Spark SQL string literal (backslash escapes, the parser default)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def e2e_transcript_rows(

@@ -12,7 +12,7 @@ from bop_consus_importing_rdf_spark.kg.linking import (
 )
 from bop_consus_importing_rdf_spark.kg.mentions import (
     detect_mentions,
-    extract_relations,
+    mention_relation_extractor,
 )
 from bop_consus_importing_rdf_spark.kg.pipeline import (
     PRED_MENTIONS,
@@ -20,7 +20,12 @@ from bop_consus_importing_rdf_spark.kg.pipeline import (
     build_kg,
     canonical_entity_map,
 )
-from bop_consus_importing_rdf_spark.kg.synth import alias_table, synth_transcripts
+from bop_consus_importing_rdf_spark.kg.synth import (
+    _sql_string,
+    alias_rows,
+    alias_table,
+    synth_transcripts,
+)
 from bop_consus_importing_rdf_spark.vocab import KG_NS
 
 
@@ -57,12 +62,39 @@ def test_extract_relations(spark, alias_list):
         ],
         "text string",
     )
-    got = df.select(extract_relations(F.col("text"), alias_list).alias("r")).collect()
+    got = (
+        df.transform(mention_relation_extractor(alias_list))
+        .select(F.col("_mr.rel").alias("r"))
+        .collect()
+    )
     assert got[0].r.subj_alias == "Globex Corp"
     assert got[0].r.obj_alias == "The Kestrel"
     assert got[0].r.year == "1999"
     assert got[1].r.subj_alias is None  # non-gazetteer slot rejected
     assert got[2].r.subj_alias is None
+
+
+def test_alias_table_take_starts_no_spark_job(spark):
+    """The gazetteer is a local relation: the dictionary's per-run
+    ``take(threshold+1)`` reads it on the driver, with no Spark job."""
+    sc = spark.sparkContext
+    aliases = alias_table(spark)
+    group = "test-alias-table-take"
+    sc.setJobGroup(group, "alias take")
+    try:
+        rows = aliases.take(50_001)
+        no_job = list(sc.statusTracker().getJobIdsForGroup(group))
+        spark.range(4).selectExpr("sum(id)").collect()  # control: a job
+        control = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert no_job == [] and len(control) >= 1
+    assert [tuple(r) for r in rows] == alias_rows()
+    assert aliases.dtypes == [
+        ("alias", "string"), ("entity_uri", "string"), ("prior", "double"),
+    ]
+    tricky = "it's a \\ back'slash"
+    assert spark.sql(f"SELECT {_sql_string(tricky)} AS s").first().s == tricky
 
 
 def test_linking_picks_max_prior_deterministically(spark, aliases):
