@@ -2,36 +2,37 @@
 
 ``Resource.extractAsModel()`` (reference ``Flows.kt:114``) computes the
 statements reachable from a dataset resource — following object IRIs and
-blank nodes. Relationally this is an iterative equi-join to fixpoint:
+blank nodes. Relationally this is an iterative equi-join to fixpoint, run
+as ONE driver-side loop over blocks of hops:
 
-    frontier := seed subjects
-    repeat: frontier := (frontier ⋈ edges on node=src).dst  \\ visited
+    frontier := seeds
+    repeat: block := frontier expanded ``depth`` hops, grouped by
+                     (root, node) with the longest hop index seen
+            block := block \\ visited          (every block after the first)
+            frontier := block nodes whose hop index == depth
 
-Driver-side ``while`` over DataFrames with ``localCheckpoint()`` per
-iteration (cuts lineage — the classic failure mode of iterative Spark jobs);
-AQE picks broadcast joins automatically once the frontier shrinks below the
-broadcast threshold. DCAT graphs are shallow (~3-4 hops) so the loop runs a
-handful of iterations regardless of data size.
-
-Scale/latency design:
-
-- the loop probes a SLIM persisted edge projection ``(src, dst)`` — two
+- The loop probes a SLIM persisted edge projection ``(_src, _dst)`` — two
   columns instead of the six-column statement rows, and only the follow-kind
-  statements — so each iteration scans roughly half the bytes;
-- ``hops_per_iter=2``: each iteration joins the frontier through the edge
-  table twice before the distinct/anti-join bookkeeping, halving the number
-  of Spark jobs (checkpoint + isEmpty actions dominate wall time on shallow
-  graphs; at 100 TB they dominate scheduler pressure instead);
-- the visited set is a lazy union of checkpointed per-iteration frontiers —
-  never re-materialized as a whole (the union+checkpoint-per-iteration
-  variant rewrites O(V) rows every round, turning O(E·d) work into O(V·d²)).
+  statements. One stats job fills that cache and sizes the two gates below.
+- A block is one plan: ``depth`` hop joins whose outputs are unioned and
+  reduced by one ``groupBy(root, node).agg(max(_k))``, then one
+  ``localCheckpoint`` job and one emptiness probe of the checkpoint.
+  Catalogue-shaped RDF is 3-4 hops deep, so it closes inside the first
+  block: three Spark actions in all, because the per-iteration driver
+  actions — not data volume — dominate the loop on shallow graphs.
+- A node whose longest in-block path is shorter than ``depth`` had all its
+  successors expanded inside the block; only the nodes at exactly
+  ``depth`` hops carry on. The anti-join against the visited blocks keeps
+  the fixpoint exact on cycles, shared subgraphs and deep chains.
+- The visited set is a lazy union of the checkpointed blocks, never
+  re-materialized as a whole (re-checkpointing the union every round
+  rewrites O(V) rows per iteration).
 
 The oracle twin is a recursive CTE (DuckDB) — see ``oracle.py::SPLIT_CTE``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
 from functools import reduce
 
 from pyspark import StorageLevel
@@ -40,237 +41,105 @@ from pyspark.sql import functions as F
 
 from ..vocab import KIND_BNODE, KIND_IRI
 
+# Broadcasting the edge relation turns every hop join into a narrow
+# broadcast-hash probe, so a block is one shuffle-free stage up to its
+# groupBy. Above this edge count the hops plan as shuffle joins, the right
+# plan once the edge table dwarfs executor memory. Measured on local[32]
+# (fresh-JVM A/B pairs): broadcast wins clearly to ~1M edges and ties with
+# shuffle at 3.4M. In long-lived sessions with pinned checkpoint state the
+# broadcast plan degraded much harder than the shuffle plan (46-108 s vs
+# 18-20 s on the isolated closure). On a multi-node cluster the cost that
+# matters is bytes shipped per executor, which this count cannot see.
+_BROADCAST_EDGES_MAX = 4_000_000
+# Hops per block. The hops inside a block do not dedupe, so a block holds
+# paths rather than nodes: O(frontier · fanout^depth) rows before its
+# groupBy. Catalogue graphs have an average follow fan-out of 1-2, where
+# paths ≈ nodes; on denser (untrusted, cyclic) graphs the block shrinks
+# to two hops.
+_DEPTH = 4
+_DENSE_DEPTH = 2
+_DENSE_FANOUT = 4.0
 
-def _hop(
-    hop: DataFrame,
-    edges: DataFrame,
-    tag: str,
-    scope: list[str],
-    broadcast: bool,
-) -> DataFrame:
+
+def _hop(hop: DataFrame, edges: DataFrame, tag: str, broadcast: bool) -> DataFrame:
     """One frontier ⋈ edges expansion; ``tag`` disambiguates the self-join."""
     eh = edges.alias(tag)
     if broadcast:
         eh = F.broadcast(eh)
-    cond = [hop["node"] == F.col(f"{tag}._src")]
-    cond += [hop[c] == F.col(f"{tag}.{c}") for c in scope]
-    return hop.join(eh, cond).select(
-        hop["root"], F.col(f"{tag}._dst").alias("node"), *[hop[c] for c in scope]
+    return hop.join(eh, hop["node"] == F.col(f"{tag}._src")).select(
+        hop["root"], F.col(f"{tag}._dst").alias("node")
     )
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    return reduce(lambda a, b: a.union(b), parts)
 
 
 def reachable_closure(
-    triples: DataFrame,
-    seeds: DataFrame,
-    follow: Sequence[str] = (KIND_IRI, KIND_BNODE),
-    scope_cols: Sequence[str] = (),
-    max_iters: int = 32,
-    prune_to_subjects: bool = False,
-    unroll: int = 4,
-    hops_per_iter: int = 2,
-    broadcast_edges_max: int = 4_000_000,
-    unroll_fanout_max: float = 4.0,
-    prune_subjects_max: int = 500_000,
+    triples: DataFrame, seeds: DataFrame, max_iters: int = 32
 ) -> DataFrame:
-    """All nodes reachable from each seed root.
+    """All nodes reachable from each seed root, following IRI and blank-node
+    objects.
 
-    ``seeds``: columns ``root, node`` (+ ``scope_cols``); usually
-    ``root == node`` = the dataset subject. ``triples``: the statement table
-    (+ ``scope_cols``). The closure never leaves a scope partition when
-    ``scope_cols`` is set (used to stay inside one dataset's model).
+    ``seeds``: columns ``root, node``; usually ``root == node`` = the
+    dataset subject. ``triples``: the statement table. Returns
+    ``(root, node)`` including the seeds themselves.
 
-    Returns ``(root, node, *scope_cols)`` including the seeds themselves.
-
-    **Unrolled prefix**: the first ``unroll`` hops are expanded as UNION
-    branches of ONE plan — a single distinct + a single checkpoint + a single
-    emptiness probe — because catalogue-shaped RDF is 3-4 hops deep and the
-    per-iteration driver actions (checkpoint job + isEmpty job), not data
-    volume, dominate the fixpoint loop there. Catalyst reuses the shared
-    join prefix across branches (ReusedExchange). If the graph is deeper,
-    the anti-join loop below picks up where the unroll stopped, 2 hops per
-    iteration, with exact fixpoint semantics. ``unroll=0`` disables the
-    prefix for graphs with heavy cyclic fan-out (the unrolled branches do
-    not dedupe between hops, so a dense cycle would enumerate paths, not
-    nodes — the loop's per-iteration distinct is the right tool there).
-
-    Raises ``RuntimeError`` if the loop hits ``max_iters`` with a non-empty
-    frontier — a silently truncated closure would quietly drop statements on
-    adversarial deep graphs.
-
-    ``prune_to_subjects=True`` drops reached nodes that never appear as a
-    statement subject (leaf IRIs — class constants, literal-like targets).
-    They can't expand the frontier and contribute nothing to a subsequent
-    ``subgraph_triples`` join. BEST-EFFORT: applied only while the edge
-    relation broadcasts AND the distinct-source estimate stays under
-    ``prune_subjects_max`` (so the semi-join build side is genuinely
-    broadcast-sized and the unrolled expansion stays one shuffle-free
-    stage); past either gate the flag is a no-op. Callers must therefore
-    treat leaf nodes as MAYBE present in the returned NODE SET —
-    extracted statements are identical either way.
+    Raises ``RuntimeError`` if the frontier is still non-empty after
+    ``max_iters`` blocks — a silently truncated closure would quietly drop
+    statements on adversarial deep graphs.
     """
-    scope = list(scope_cols)
     edges = (
-        triples.filter(F.col("obj_kind").isin(*follow))
-        .select(
-            F.col("subj").alias("_src"), F.col("obj_value").alias("_dst"), *scope
-        )
+        triples.filter(F.col("obj_kind").isin(KIND_IRI, KIND_BNODE))
+        .select(F.col("subj").alias("_src"), F.col("obj_value").alias("_dst"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # Broadcasting the edge relation turns every hop join into a narrow
-    # broadcast-hash probe — the whole unrolled expansion collapses into a
-    # single stage with NO shuffles (the per-stage scheduling latency of the
-    # shuffle alternative dominates wall time on shallow graphs). Above the
-    # threshold (count as a cheap proxy for bytes) the joins fall back to
-    # shuffle joins, which is the correct 100-TB plan — there the edge
-    # table dwarfs executor memory and stage latency is noise.
-    #
-    # Threshold placement (measured, local[32], round-3 scale probe, clean
-    # fresh-JVM A/B pairs): broadcast wins clearly to ~1M edges (8.3s vs
-    # 9.2-10.4s) and is a statistical TIE with shuffle at 3.4M edges on
-    # the end-to-end split (82.9s vs 83.8s; one fast-host window showed
-    # broadcast +45%) — so 4M stays the local-mode default. Two honest
-    # caveats the probe surfaced: (a) in LONG-LIVED sessions with pinned
-    # checkpoint state the broadcast plan degrades much harder than the
-    # shuffle plan (46-108s vs 18-20s on the isolated closure — memory
-    # pressure hits the ~450MB hash relation first), and (b) local mode
-    # cannot see the network fan-out of a real cluster, where broadcasting
-    # ~450MB x N executors is the dominant cost. On a multi-node
-    # deployment, size this parameter as a BYTES x executor-count budget
-    # (e.g. edges such that ~100MB per executor ships acceptably), not by
-    # this local count proxy.
-    #
-    # ONE aggregation job computes the row count AND the distinct-source
-    # estimate for the unroll fan-out gate, and doubles as the cache-fill
-    # action — the previous separate `select(_src).distinct().count()`
-    # measured as a full extra pass over the fresh cache at sf0.1.
-    # approx_count_distinct (HLL, ±5% default rsd) is plenty for a coarse
-    # gate ratio; a 5% miss needs a graph sitting exactly on the threshold,
-    # where both plans are fine.
-    stats = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.approx_count_distinct("_src").alias("n_src"),
-    ).first()
-    n_edges = stats["n"]
-    broadcast = n_edges <= broadcast_edges_max
-    if unroll > 0 and unroll_fanout_max is not None:
-        # The unrolled prefix enumerates PATHS (no dedup between hops), so on
-        # densely cyclic graphs — harvested RDF is untrusted — the union
-        # grows ~O(frontier·d^unroll) before the single distinct. Gate it on
-        # average follow-out-degree: catalogue-shaped graphs sit near 1-2,
-        # where path≈node and the unroll's one-job latency win is real; past
-        # the threshold fall back to the loop, whose per-iteration distinct
-        # bounds the blowup.
-        if stats["n_src"] and n_edges / stats["n_src"] > unroll_fanout_max:
-            unroll = 0
-    subj_nodes = None
-    if (
-        prune_to_subjects
-        and broadcast
-        and (stats["n_src"] or 0) <= prune_subjects_max
-    ):
-        # Pruning is BEST-EFFORT and gated twice: (a) the edge relation
-        # must be in the broadcast regime, so the extra semi-joins stay
-        # inside the one shuffle-free unrolled stage instead of planting
-        # per-hop sort-merge exchanges; (b) the subject set itself must be
-        # small (n_src, the HLL distinct-source estimate from the stats
-        # job, as a zero-cost proxy) — a forced broadcast of a multi-
-        # million-row subject set measured as a clear LOSS at the sf1
-        # probe (~1.7M subjects: build + memory pressure outweighed the
-        # ~1/6 row reduction; 63s -> 100s on the full split). Past either
-        # gate the flag degrades to a no-op (callers must treat leaf
-        # nodes as MAYBE included; extracted statements are identical
-        # either way). Materialized once — probed by every hop part.
-        subj_nodes = (
-            triples.select(F.col("subj").alias("node"))
-            .distinct()
-            .localCheckpoint()
-        )
+    try:
+        # ONE job fills the cache and reads both gates; the HLL distinct
+        # estimate (±5%) is plenty for a coarse fan-out ratio
+        stats = edges.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.approx_count_distinct("_src").alias("n_src"),
+        ).first()
+        broadcast = stats["n"] <= _BROADCAST_EDGES_MAX
+        dense = bool(stats["n_src"]) and stats["n"] / stats["n_src"] > _DENSE_FANOUT
+        depth = _DENSE_DEPTH if dense else _DEPTH
 
-    def _prune(df: DataFrame) -> DataFrame:
-        if subj_nodes is None:
-            return df
-        # restore column ORDER after the USING-join: a semi join on "node"
-        # moves the join key first, and the unrolled prefix unions parts
-        # POSITIONALLY — without the select, pruned parts contributed
-        # (node, root) swapped into (root, node) and corrupted the whole
-        # closure (latent round-5 bug: the option had no caller then)
-        return df.join(F.broadcast(subj_nodes), "node", "left_semi").select(
-            "root", "node", *scope
-        )
-
-    first = seeds.select("root", "node", *scope).distinct()
-    if unroll > 0:
-        parts = [first.withColumn("_k", F.lit(0))]
-        hop = first
-        for h in range(unroll):
-            hop = _hop(hop, edges, f"_u{h}", scope, broadcast)
-            parts.append(_prune(hop).withColumn("_k", F.lit(h + 1)))
-        # ONE aggregation carries both outputs of the unroll: the node set
-        # (groupBy keys) and the continuation frontier (max hop index ==
-        # unroll ⇒ the node has a longest known path of exactly `unroll`
-        # hops, so its successors may be unexplored; max < unroll ⇒ every
-        # successor was reached within the unroll). One checkpoint job,
-        # and the emptiness probe below is a cheap checkpoint scan instead
-        # of a full recompute of the unrolled plan.
-        agg = (
-            reduce(lambda a, b: a.union(b), parts)
-            .groupBy("root", "node", *scope)
-            .agg(F.max("_k").alias("_k"))
-            .localCheckpoint()
-        )
-        base = agg.drop("_k")
-        pieces = [base]
-        frontier = agg.filter(F.col("_k") == unroll).drop("_k")
-        if frontier.isEmpty():
-            edges.unpersist()
-            return base
-        frontier = frontier.localCheckpoint()
-    else:
-        frontier = first.localCheckpoint()
-        pieces = [frontier]
-    exhausted = True
-    for _ in range(max_iters):
-        # multi-hop expansion: hop h may re-expand already-visited nodes
-        # (wasted join fan-out, bounded by the frontier's 2-hop ball) but the
-        # trailing anti-join keeps the fixpoint exact
-        hop = frontier
-        hop_results = []
-        for h in range(hops_per_iter):
-            hop = _hop(hop, edges, f"_e{h}", scope, broadcast)
-            hop_results.append(_prune(hop))
-        step = reduce(lambda a, b: a.union(b), hop_results).distinct()
-        visited = reduce(lambda a, b: a.union(b), pieces)
-        frontier = step.join(
-            visited, ["root", "node", *scope], "left_anti"
-        ).localCheckpoint()
-        if frontier.isEmpty():
-            exhausted = False
-            break
-        pieces.append(frontier)
-    edges.unpersist()
-    if exhausted:
+        frontier = seeds.select("root", "node").distinct()
+        pieces: list[DataFrame] = []
+        for _ in range(max_iters):
+            parts = [frontier.withColumn("_k", F.lit(0))]
+            hop = frontier
+            for h in range(1, depth + 1):
+                hop = _hop(hop, edges, f"_e{h}", broadcast)
+                parts.append(hop.withColumn("_k", F.lit(h)))
+            # the groupBy keys are the block's node set; max(_k) < depth
+            # means every successor of the node was reached in this block
+            block = _union(parts).groupBy("root", "node").agg(F.max("_k").alias("_k"))
+            if pieces:
+                block = block.join(_union(pieces), ["root", "node"], "left_anti")
+            block = block.localCheckpoint()
+            pieces.append(block.drop("_k"))
+            frontier = block.filter(F.col("_k") == depth).drop("_k")
+            if frontier.isEmpty():
+                return _union(pieces)
         raise RuntimeError(
             f"reachable_closure did not converge within {max_iters} "
-            f"iterations ({max_iters * hops_per_iter} hops) — residual "
-            f"frontier is non-empty; raise max_iters for deeper graphs"
+            f"iterations ({max_iters * depth} hops) — residual frontier is "
+            f"non-empty; raise max_iters for deeper graphs"
         )
-    return reduce(lambda a, b: a.union(b), pieces)
+    finally:
+        edges.unpersist()
 
 
 def subgraph_triples(
-    triples: DataFrame,
-    closure: DataFrame,
-    root_alias: str = "dataset_id",
-    scope_cols: Sequence[str] = (),
+    triples: DataFrame, closure: DataFrame, root_alias: str = "dataset_id"
 ) -> DataFrame:
     """J1 step 2: tag every statement with the root(s) whose closure owns it.
 
     A statement shared by two datasets' closures is emitted for both — same
     semantics as the reference extracting an independent model per dataset.
     """
-    scope = list(scope_cols)
-    cond = [closure["node"] == triples["subj"]]
-    cond += [closure[c] == triples[c] for c in scope]
-    return triples.join(closure, cond).select(
+    return triples.join(closure, closure["node"] == triples["subj"]).select(
         closure["root"].alias(root_alias), *[triples[c] for c in triples.columns]
     )

@@ -5,10 +5,10 @@ F1 typo cleanup → F2 subject scan → X1 identify → F3 blank filter →
 J1 subgraph closure → J3 nested-catalogue subtraction → F4 empty filter.
 
 Where the reference loops dataset-at-a-time over an in-memory Jena model,
-this runs set-at-a-time: ONE closure computation for all datasets at once
-(the frontier join parallelizes over every dataset simultaneously), then one
-scoped closure for all nested catalogues. No per-dataset Python loop exists
-anywhere — the dataset count can be billions.
+this runs set-at-a-time: ONE closure computation for all dataset and
+catalogue roots at once (the frontier join parallelizes over every root
+simultaneously). No per-dataset Python loop exists anywhere — the dataset
+count can be billions.
 
 At 100 TB, feed this a triple table persisted BUCKETED BY ``subj``
 (``sources/bucketed.py``): every stage here is a pure filter/project over
@@ -120,9 +120,7 @@ def split_datasets(
         # re-run the scan + distinct; the set is catalogue-roots-sized
         .localCheckpoint()
     )
-    closure = reachable_closure(
-        t, ds_seeds.union(cat_roots), prune_to_subjects=True
-    )
+    closure = reachable_closure(t, ds_seeds.union(cat_roots))
 
     # Split the closure's roots back into dataset vs catalogue closures
     # with an ANTI join against the (small) catalogue-root set instead of
@@ -179,13 +177,12 @@ def split_datasets(
     t.unpersist()
 
     # F4: drop datasets whose model ended up empty. The non-empty set is
-    # spelled as the KEYS OF THE TRIPLE-COUNT AGGREGATION, not a bare
-    # distinct — callers that also need per-dataset counts (the split
-    # consumer queries do) build the byte-identical groupBy/count, and the
-    # physical planner then REUSES one exchange for both (the round-5
-    # spelling's distinct vs count aggregates canonicalized differently,
-    # so the checkpointed statement table was scanned twice per consumer
-    # plan). Key set is identical either way.
+    # the key set of the per-dataset counts; the optimizer prunes the unused
+    # count, so this is a keys-only aggregate of `final`. A consumer that
+    # also joins split_triple_counts(final) (the split queries do)
+    # aggregates `final` a second time: the two aggregates differ, so the
+    # executed plan reuses no exchange. Both combine map-side, so each
+    # exchange carries about one row per dataset per partition.
     non_empty = split_triple_counts(final).select(
         F.col("dataset_id").alias("subj")
     )
@@ -198,9 +195,9 @@ def split_datasets(
 def split_triple_counts(ds_triples: DataFrame) -> DataFrame:
     """Per-dataset statement counts ``(dataset_id, n_triples)``.
 
-    The canonical spelling shared by :func:`split_datasets`'s F4 filter and
-    the consumer queries — byte-identical expression trees are what lets
-    the planner collapse the two aggregations onto one exchange."""
+    :func:`split_datasets`'s F4 filter takes its key set; the consumer
+    queries join the counts themselves, which aggregates the statement
+    table once more (no exchange is shared between the two)."""
     return ds_triples.groupBy("dataset_id").agg(
         F.count(F.lit(1)).alias("n_triples")
     )

@@ -875,9 +875,9 @@ def q_split_datasets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.split import split_triple_counts
 
     ds_triples, datasets = _split(spark, sf_dir)
-    # split_triple_counts is the same expression tree F4 uses internally,
-    # so this plan's two aggregations over the checkpointed statement
-    # table share one exchange (ReusedExchange)
+    # this plan aggregates the checkpointed statement table twice: F4's
+    # keys-only aggregate inside `datasets` and these counts (no exchange
+    # is reused; both combine map-side to about one row per dataset)
     counts = split_triple_counts(ds_triples)
     return datasets.join(
         counts, datasets["subj"] == counts["dataset_id"]

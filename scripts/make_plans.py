@@ -25,22 +25,20 @@ COMMENTARY = {
     "minhash_lsh_pairs": "LSH band self-join shuffles on the uniform band key; jaccard intersection joins shuffle on doc id — every shuffle carries a semantically required key. The hot-bucket cap (max_bucket=4096) adds one map-side-combinable count + semi-join on the band key, the guard that keeps candidate generation linear on boilerplate-heavy corpora.",
     "split_datasets": (
         "The iterative closure runs as separate driver-materialized jobs "
-        "(unrolled 4-hop prefix = ONE plan whose hop joins are broadcast-hash "
-        "probes of the slim edge projection, one groupBy exchange, one "
-        "checkpoint; the anti-join loop only fires on graphs deeper than the "
-        "unroll), so the counts below cover the final consumer plan reading "
-        "the checkpointed per-dataset statement table. Round-6 rewrites "
-        "(OPTIMIZATION_r06.md §1, outputs byte-identical): dataset-subject "
-        "scan + identifier aggregation FUSED into one filtered groupBy; "
+        "(one loop of 4-hop blocks; a block is ONE plan whose hop joins are "
+        "broadcast-hash probes of the slim edge projection, one groupBy "
+        "exchange, one checkpoint; the fixture graph closes inside the "
+        "first block), so the counts below cover the final consumer plan "
+        "reading the checkpointed tables. The dataset-subject scan and the "
+        "identifier aggregation are FUSED into one filtered groupBy; the "
         "closure roots split ds-vs-catalogue by a broadcast ANTI join "
-        "against the small catalogue-root set (was a 150k-row left-semi); "
-        "the closure is pruned to statement subjects inside the unroll "
-        "(broadcast regime only); F4's non-empty filter is the KEYS of the "
-        "triple-count aggregation, so this consumer plan's two aggregations "
-        "share one reused exchange. NOTE: the TPC-H columns in ReadSchema "
-        "are NOT stale evidence — the RDF fixture graph is DERIVED from the "
-        "TPC-H tables by RDF_GRAPH_SQL (oracle.py), so orders/customer/"
-        "nation scans are exactly what feeding the triple table looks like."
+        "against the small catalogue-root set. This plan aggregates the "
+        "checkpointed per-dataset statement table TWICE: F4's non-empty "
+        "filter is a keys-only aggregate (the optimizer prunes its unused "
+        "count) and the consumer's counts a full count, so the two do not "
+        "match and no exchange is reused (0 ReusedExchange). Both combine "
+        "map-side, so each exchange carries about one row per dataset per "
+        "partition."
     ),
     "split_datasets_bucketed": (
         "The GRADED bench variant: identical split semantics, probe side "

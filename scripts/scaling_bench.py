@@ -95,7 +95,8 @@ Findings the probe produced (both fixed in round 3):
   Two caveats recorded in closure.py: long-lived sessions with pinned
   checkpoint state degrade the broadcast plan much harder than shuffle
   (46-108s vs 18-20s isolated), and local mode hides real-cluster network
-  fan-out — deployments should size broadcast_edges_max as a
+  fan-out — on a multi-node deployment the 4M bound (the module
+  constant _BROADCAST_EDGES_MAX in closure.py) should be re-sized as a
   bytes x executor budget. The shuffle fixpoint itself holds to 18M
   triples (sf2, 6.76M edges, split_datasets 98.5s). A separate
   methodology lesson: single measurements on this box are worthless

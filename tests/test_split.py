@@ -8,6 +8,8 @@ duplicate ids kept, empty-model drop.
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from bop_consus_importing_rdf_spark.operators.cleanup import (
@@ -84,9 +86,9 @@ def test_j1_closure_follows_bnode_chain(spark, fixture_triples):
     seeds = spark.createDataFrame(
         [(EX + "ds1", EX + "ds1")], "root string, node string"
     )
-    nodes = {
-        r.node for r in reachable_closure(fixture_triples, seeds).collect()
-    }
+    closure = reachable_closure(fixture_triples, seeds)
+    assert closure.columns == ["root", "node"]
+    nodes = {r.node for r in closure.collect()}
     # ds1 itself, _:b1, _:b2, plus IRI objects of ds1's statements
     assert {"_:b1", "_:b2", EX + "ds1"} <= nodes
     assert EX + "cat1" not in nodes  # unreachable from ds1
@@ -122,41 +124,11 @@ def test_remove_prefix_variant(spark, fixture_triples):
     assert ids == ["ds1", "ds2", "ds3", "ds4", "ds5"]
 
 
-def test_scoped_closure_never_leaks_across_scopes(spark):
-    """Same node names in two scopes: the closure stays inside each scope
-    partition (exercises the scope_cols path through the unrolled prefix
-    and the hop joins)."""
-    from bop_consus_importing_rdf_spark.operators.closure import (
-        reachable_closure,
-    )
-
-    rows = [
-        ("g1", "a", "p", "b", "iri", None, None),
-        ("g1", "b", "p", "c", "iri", None, None),
-        ("g2", "a", "p", "z", "iri", None, None),
-    ]
-    t = spark.createDataFrame(
-        rows,
-        "doc_id string, subj string, pred string, obj_value string, "
-        "obj_kind string, obj_lang string, obj_datatype string",
-    )
-    seeds = spark.createDataFrame(
-        [("a", "a", "g1"), ("a", "a", "g2")],
-        "root string, node string, doc_id string",
-    )
-    out = reachable_closure(t, seeds, scope_cols=("doc_id",))
-    got = sorted((r.doc_id, r.root, r.node) for r in out.collect())
-    assert got == [
-        ("g1", "a", "a"), ("g1", "a", "b"), ("g1", "a", "c"),
-        ("g2", "a", "a"), ("g2", "a", "z"),
-    ]
-
-
 def test_dense_cyclic_graph_fanout_gate(spark):
-    """High average fan-out (untrusted cyclic RDF) disables the path-
-    enumerating unrolled prefix; the anti-join loop still reaches the exact
-    fixpoint. Both configurations must agree (ADVICE r2)."""
-    # K8-ish digraph: every node points at every other → out-degree 7
+    """High average fan-out (untrusted cyclic RDF) shrinks the closure's
+    block to two hops, because the hops inside a block enumerate paths;
+    the anti-join between blocks still reaches the exact fixpoint."""
+    # K8 digraph: every node points at every other → out-degree 7
     nodes = [f"n{i}" for i in range(8)]
     rows = [
         (a, "p", b, "iri", None, None) for a in nodes for b in nodes if a != b
@@ -165,42 +137,91 @@ def test_dense_cyclic_graph_fanout_gate(spark):
     seeds = spark.createDataFrame(
         [("n0", "n0")], "root string, node string"
     )
-    gated = reachable_closure(t, seeds)
-    forced = reachable_closure(t, seeds, unroll_fanout_max=None, unroll=2)
-    want = {("n0", n) for n in nodes}
-    assert {(r.root, r.node) for r in gated.collect()} == want
-    assert {(r.root, r.node) for r in forced.collect()} == want
+    got = {(r.root, r.node) for r in reachable_closure(t, seeds).collect()}
+    assert got == {("n0", n) for n in nodes}
 
 
-def test_prune_to_subjects_same_statements_and_column_order(spark):
-    """Round-6 regression: the prune semi-join (a USING join) moves the
-    join key first, and the unrolled prefix unions parts positionally —
-    without an explicit re-select the pruned parts contributed
-    (node, root) swapped. Pruned closure must equal unpruned ∩ subjects
-    and extract the identical statement set."""
-    from pyspark.sql import functions as F
+def _chain(spark, hops):
+    rows = [(f"urn:c{i}", "urn:p", f"urn:c{i + 1}", "iri") for i in range(hops)]
+    seeds = spark.createDataFrame([("urn:c0", "urn:c0")], "root string, node string")
+    return triples_df(spark, rows), seeds
 
-    from bop_consus_importing_rdf_spark.operators.closure import (
-        reachable_closure,
-        subgraph_triples,
-    )
 
+def test_closure_raises_when_not_converged(spark):
+    """A 9-hop chain needs three 4-hop blocks; one is not enough."""
+    t, seeds = _chain(spark, 9)
+    with pytest.raises(RuntimeError, match="did not converge within 1 "):
+        reachable_closure(t, seeds, max_iters=1)
+    got = {r.node for r in reachable_closure(t, seeds, max_iters=3).collect()}
+    assert got == {f"urn:c{i}" for i in range(10)}
+
+
+def _cached_rdds(spark):
+    """Persisted RDDs other than local checkpoints: the closure's result
+    reads its blocks from local checkpoints, which register as persisted
+    RDDs too; the edge cache must not outlive the call."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
+    return sum(not r.isCheckpointed() for r in rdds)
+
+
+def test_closure_releases_edge_cache(spark):
+    t, seeds = _chain(spark, 9)
+    before = _cached_rdds(spark)
+    assert reachable_closure(t, seeds).count() == 10
+    assert _cached_rdds(spark) <= before
+    with pytest.raises(RuntimeError):
+        reachable_closure(t, seeds, max_iters=1)
+    assert _cached_rdds(spark) <= before
+
+
+def _pairs(n):
+    return st.tuples(st.integers(0, n - 1), st.integers(0, n - 1))
+
+
+@st.composite
+def _digraphs(draw):
+    """A random digraph (shared subgraphs, cycles, self-loops) with a
+    5-25 hop chain hanging off one node, literal objects that spell node
+    names (never followed), and up to three seed roots, one of them
+    possibly not in the graph."""
+    n = draw(st.integers(2, 12))
+    node = "urn:n{}".format
+    pairs = draw(st.lists(_pairs(n), max_size=3 * n))
     rows = [
-        ("urn:d1", "urn:p:type", "urn:Dataset", "iri"),
-        ("urn:d1", "urn:p:link", "urn:mid", "iri"),
-        ("urn:mid", "urn:p:link", "urn:leaf", "iri"),
-        ("urn:mid", "urn:p:name", "m", "literal"),
+        (node(a), "urn:p", node(b), draw(st.sampled_from(["iri", "bnode"])))
+        for a, b in pairs
     ]
+    hops = draw(st.integers(5, 25))
+    chain = [node(draw(st.integers(0, n - 1)))] + [f"_:c{i}" for i in range(hops)]
+    rows += [(a, "urn:q", b, "bnode") for a, b in zip(chain, chain[1:])]
+    if draw(st.booleans()):  # close the chain into a cycle
+        rows.append((chain[-1], "urn:q", chain[0], "iri"))
+    lits = draw(st.lists(_pairs(n), max_size=n))
+    rows += [(node(a), "urn:name", node(b), "literal") for a, b in lits]
+    # the chain's head is always a root, so every example runs 2-7 blocks
+    roots = draw(st.lists(st.integers(0, n), max_size=2))
+    return rows, sorted({chain[0], *map(node, roots)})
+
+
+def _bfs(rows, root):
+    out = {}
+    for s, _, o, kind in rows:
+        if kind in ("iri", "bnode"):
+            out.setdefault(s, set()).add(o)
+    seen, todo = {root}, [root]
+    while todo:
+        for m in out.get(todo.pop(), ()):
+            if m not in seen:
+                seen.add(m)
+                todo.append(m)
+    return seen
+
+
+@settings(max_examples=10, deadline=None, derandomize=True)
+@given(graph=_digraphs())
+def test_closure_matches_python_bfs_property(spark, graph):
+    rows, roots = graph
     t = triples_df(spark, rows)
-    seeds = spark.createDataFrame(
-        [("urn:d1", "urn:d1")], "root string, node string"
-    )
-    full = reachable_closure(t, seeds)
-    pruned = reachable_closure(t, seeds, prune_to_subjects=True)
-    assert pruned.columns == ["root", "node"]
-    got = {tuple(r) for r in pruned.collect()}
-    # urn:leaf is reached but never a statement subject -> pruned
-    assert got == {("urn:d1", "urn:d1"), ("urn:d1", "urn:mid")}
-    a = sorted(map(tuple, subgraph_triples(t, full).collect()))
-    b = sorted(map(tuple, subgraph_triples(t, pruned).collect()))
-    assert a == b
+    seeds = spark.createDataFrame([(r, r) for r in roots], "root string, node string")
+    got = {(r.root, r.node) for r in reachable_closure(t, seeds).collect()}
+    assert got == {(r, m) for r in roots for m in _bfs(rows, r)}
