@@ -14,8 +14,9 @@ compute each intermediate once, so every regex runs once per turn.
 Whole-stage codegen, zero Python workers, no Arrow round-trip on the
 corpus hot path. The pattern gets the ``(?U)`` inline flag so Java's
 ``\\b`` uses unicode word classes — matching Python ``re`` semantics
-exactly. The Arrow implementations below (``*_arrow``) are the second
-physical engine and the reference the equivalence tests compare against.
+exactly. :func:`extract_mentions_and_relations_arrow` below is a
+pandas-UDF twin kept only as the reference ``test_mentions_jvm`` compares
+the JVM extraction against, row for row; no production path runs it.
 """
 
 from __future__ import annotations
@@ -176,7 +177,7 @@ def with_relation_candidates(df: DataFrame) -> DataFrame:
     <year>`` template (year checked; A/B are raw stripped groups). The
     join-based at-scale matcher (``kg/matcher.py``) validates membership
     with a join against the alias table — same split as mention detection.
-    Staged like :func:`mention_relation_extractor`'s JVM engine."""
+    Staged like :func:`mention_relation_extractor`."""
     return (
         _template_groups(df)
         .withColumn("_relc", _relation(_year_ok()))
@@ -185,7 +186,7 @@ def with_relation_candidates(df: DataFrame) -> DataFrame:
 
 
 def mention_relation_extractor(
-    aliases: list[str], engine: str = "jvm"
+    aliases: list[str],
 ) -> Callable[[DataFrame], DataFrame]:
     """Fused extractor for one gazetteer: a DataFrame transform adding
     ``_mr struct<mentions: array<string>, rel: struct<subj_alias,
@@ -195,31 +196,16 @@ def mention_relation_extractor(
 
     The gazetteer literals are built here, once, as ``Column``s; applying
     the returned transform to another frame costs no Py4J literal calls.
-    Two physical strategies with IDENTICAL semantics (row-exact
-    equivalence tests in ``test_mentions_jvm``):
-
-    - ``"jvm"``: pure column expressions in stacked projections — the
-      packed template pass, its ``rlike`` and the trie-factored
-      ``regexp_extract_all``; the stripped groups; the year check and an
-      ``array_contains`` over a constant-folded literal array. Each stage
-      reads the one before it several times, so Catalyst's
-      ``CollapseProject`` keeps them apart and every regex runs once per
-      row (inlined into one projection, the plan held 59
-      ``regexp_replace`` calls). Whole-stage codegen, zero Python workers.
-    - ``"arrow"``: the pandas-UDF batch matcher.
-
-    Pick with :func:`pick_extraction_engine` when auto-selecting: on a
-    machine whose executor slots UNDERSUBSCRIBE the physical cores, the
-    Arrow path wins end-to-end because its Python workers run on the idle
-    cores (measured local[8] on a 32-core box: 262k vs 176k turns/s);
-    fully subscribed, the JVM path wins big by avoiding oversubscription
-    and Arrow transfer (local[32]: ~92k vs ~28k turns/s on the bench
-    corpus). Same logical plan, different physical operator — the
-    Catalyst philosophy applied to the extraction stage.
+    Pure column expressions in stacked projections: the packed template
+    pass, its ``rlike`` and the trie-factored ``regexp_extract_all``; the
+    stripped groups; the year check and an ``array_contains`` over a
+    constant-folded literal array. Each stage reads the one before it
+    several times, so Catalyst's ``CollapseProject`` keeps them apart and
+    every regex runs once per row (inlined into one projection, the plan
+    held 59 ``regexp_replace`` calls). Whole-stage codegen, zero Python
+    workers; row-exact against the Arrow reference
+    (``test_mentions_jvm``).
     """
-    if engine == "arrow":
-        mr = extract_mentions_and_relations_arrow(F.col("text"), aliases)
-        return lambda df: df.withColumn("_mr", mr)
     pattern = F.lit(alias_pattern(aliases))
     members = F.array(*[F.lit(a) for a in sorted(aliases)])
 
@@ -250,24 +236,9 @@ def mention_relation_extractor(
     return extract
 
 
-def pick_extraction_engine(spark) -> str:
-    """Resource-aware physical-strategy choice for the extraction stage.
-
-    ``jvm`` when the session's task slots saturate the machine's cores
-    (Python workers would only oversubscribe); ``arrow`` when slots
-    undersubscribe (the workers harvest otherwise-idle cores). On a real
-    cluster executors are typically sized to their hosts → ``jvm``.
-    """
-    import os
-
-    total = os.cpu_count() or 8
-    slots = spark.sparkContext.defaultParallelism
-    return "jvm" if slots >= total else "arrow"
-
-
 # ---------------------------------------------------------------------------
-# Arrow reference implementations (kept for the JVM-vs-Python equivalence
-# test and as the fallback pattern for matchers regex can't express)
+# Arrow reference implementation (kept only for the JVM-vs-Python
+# equivalence tests)
 # ---------------------------------------------------------------------------
 
 @lru_cache(maxsize=8)
@@ -278,23 +249,12 @@ def _compiled(aliases: tuple[str, ...]) -> re.Pattern:
     )
 
 
-def detect_mentions_arrow(text: Column, aliases: list[str]) -> Column:
-    """Arrow-batched reference implementation of :func:`detect_mentions`."""
-    alias_key = tuple(sorted(aliases))
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _detect(s: pd.Series) -> pd.Series:
-        pat = _compiled(alias_key)
-        return s.fillna("").str.findall(pat)
-
-    return _detect(text)
-
-
 def extract_mentions_and_relations_arrow(
     text: Column, aliases: list[str]
 ) -> Column:
     """Arrow-batched reference implementation of
-    :func:`mention_relation_extractor`."""
+    :func:`mention_relation_extractor`, used only by the equivalence tests
+    in ``test_mentions_jvm``."""
     alias_key = tuple(sorted(aliases))
     out_type = T.StructType(
         [

@@ -5,11 +5,10 @@ collect loop, reference ``ImportingRdfVerticle.kt:59-96``) with one Spark
 batch DAG:
 
     transcripts ─ stable order (ONE wide shuffle) ─ fused mention/relation
-      extraction (resource-aware physical strategy: JVM regexp codegen on
-      fully-subscribed machines, Arrow pandas UDF when idle cores exist
-      for Python workers — identical semantics, see kg/mentions.py) ─
-      map-lookup linking (canonicalization composed in:
-      MinHash→LSH→Jaccard→CC over the gazetteer) ─ per-turn triple arrays
+      extraction (JVM regexp codegen in stacked projections, every regex
+      once per turn, see kg/mentions.py) ─ map-lookup linking
+      (canonicalization composed in: MinHash→LSH→Jaccard→CC over the
+      gazetteer) ─ per-turn triple arrays
       exploded narrowly ─ relation-only conv-level dedup (small shuffle)
       → datasets / manifest / N-Triples render
 
@@ -29,14 +28,13 @@ distributed canonical map instead, so its driver-side CC fixpoint
 DataFrames, so a caller that commits one slice at a time
 (``plans.resume.run_resumable``) pays the dictionary once per run, not
 once per slice. The extraction path moves the corpus through exactly one
-wide shuffle (stable ordering) and at most one Arrow round-trip (none on
-the JVM extraction strategy); only relation triples — the one kind that
-can duplicate across turns — pay a dedup shuffle. ``rewrite_canonical``
-remains the at-scale path for entity dictionaries too large to compose
-into the linking map. Hot conversations spread across partitions because
-the stable-ordering shuffle keys are fine-grained; ``salted_repartition``
-is available when a caller needs explicit spread before a conv-grouped
-stage.
+wide shuffle (stable ordering) and no Python worker; only relation
+triples — the one kind that can duplicate across turns — pay a dedup
+shuffle. ``rewrite_canonical`` remains the at-scale path for entity
+dictionaries too large to compose into the linking map. Skew: the one
+wide shuffle is keyed on ``conv_id``, so a hot conversation's turns share
+a partition (bounded by its turn count, not the corpus); the joins after
+it rely on AQE's skew-join split.
 """
 
 from __future__ import annotations
@@ -55,11 +53,7 @@ from ..operators.manifest import with_counter
 from ..vocab import KG_NS, RDF_TYPE, XSD_NS
 from .blocking import entity_similarity_edges
 from .cc import connected_components
-from .mentions import (
-    mention_relation_extractor,
-    pick_extraction_engine,
-    with_relation_candidates,
-)
+from .mentions import mention_relation_extractor, with_relation_candidates
 
 PRED_MENTIONS = KG_NS + "pred:mentions"
 PRED_RELEASED = KG_NS + "pred:released"
@@ -98,15 +92,6 @@ def stable_turns(transcripts: DataFrame) -> DataFrame:
         .filter(F.col("_prev").isNull() | (F.col("_prev") != F.col("turn_idx")))
         .drop("_prev")
     )
-
-
-def salted_repartition(df: DataFrame, n: int | None = None) -> DataFrame:
-    """Deterministic salt on (conv_id, turn_idx-hash): a hot conversation
-    spreads over ~16 partitions instead of pinning one executor."""
-    salt = F.pmod(F.xxhash64("turn_idx"), F.lit(16))
-    if n:
-        return df.repartition(n, F.col("conv_id"), salt)
-    return df.repartition(F.col("conv_id"), salt)
 
 
 def sft_examples(
@@ -254,14 +239,13 @@ class ExtractionColumns:
 
 
 def extraction_columns(
-    alias_list: list[str], entity_map: dict[str, str], engine: str
+    alias_list: list[str], entity_map: dict[str, str]
 ) -> ExtractionColumns:
     """Build the :class:`ExtractionColumns` for one gazetteer.
 
     ``entity_map`` is alias → entity URI; :func:`build_kg_dictionary`
     passes the CANONICALIZED composition so no rewrite join is needed
-    afterwards. ``engine`` is the physical extraction strategy
-    (:func:`~.mentions.pick_extraction_engine`)."""
+    afterwards."""
     entity_of = F.create_map(
         *[F.lit(x) for kv in sorted(entity_map.items()) for x in kv]
     )
@@ -284,7 +268,7 @@ def extraction_columns(
         _row(turn_uri, RDF_TYPE, F.lit(CLASS_TURN), "iri"),
     )
     return ExtractionColumns(
-        add_mr=mention_relation_extractor(alias_list, engine),
+        add_mr=mention_relation_extractor(alias_list),
         turn_rows=F.explode(
             F.concat(mention_structs, year_structs, fixed_structs)
         ).alias("t"),
@@ -698,7 +682,6 @@ def build_kg_dictionary(
     columns = extraction_columns(
         sorted({r.alias for r in taken}),
         {a: mapping.get(e, e) for a, e in best.items()},
-        pick_extraction_engine(spark),
     )
     return KGDictionary(aliases, canon, columns)
 
@@ -706,7 +689,6 @@ def build_kg_dictionary(
 def kg_triples(
     dictionary: KGDictionary,
     transcripts: DataFrame,
-    salt_partitions: int | None = None,
     caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """The per-slice side of :func:`build_kg`: the triples plan for
@@ -714,12 +696,7 @@ def kg_triples(
     extraction, canonical linking and the ``dataset_id`` column. Plans
     DataFrames only; ``caches`` is passed on to
     :func:`extract_candidate_triples`."""
-    # an extra salted repartition only pays when a caller wants a specific
-    # parallelism before the (narrow) extraction stage — stable_turns'
-    # conv_id shuffle already distributes the corpus
     turns = stable_turns(transcripts)
-    if salt_partitions:
-        turns = salted_repartition(turns, salt_partitions)
     if dictionary.columns is not None:
         triples = extract_candidate_triples(turns, dictionary.columns, caches)
     else:
@@ -733,7 +710,6 @@ def build_kg(
     transcripts: DataFrame,
     aliases: DataFrame,
     catalogue: str = "transcripts",
-    salt_partitions: int | None = None,
     small_dim_threshold: int = 50_000,
 ) -> dict[str, DataFrame]:
     """Run the full DAG. Returns {triples, entities, datasets, manifest}.
@@ -744,7 +720,7 @@ def build_kg(
     datasets, the manifest and the entity table on top.
     """
     dictionary = build_kg_dictionary(spark, aliases, small_dim_threshold)
-    triples = kg_triples(dictionary, transcripts, salt_partitions)
+    triples = kg_triples(dictionary, transcripts)
 
     rendered = triples.withColumn(
         "nt",

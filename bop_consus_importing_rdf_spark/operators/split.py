@@ -20,7 +20,6 @@ probe join plans with no exchange on the (big) triple side — asserted by
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -37,7 +36,6 @@ def split_datasets(
     triples: DataFrame,
     remove_prefix: bool = False,
     precedence_uri_ref: bool = False,
-    input_materialized: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Split a triple table into per-dataset subgraphs.
 
@@ -45,38 +43,23 @@ def split_datasets(
 
     - ``dataset_triples``: the input statement columns + ``dataset_id`` (the
       owning dataset subject URI), after nested-catalogue subtraction;
-    - ``datasets``: ``(subj, identifier)`` — one row per non-blank-id,
-      non-empty dataset (F3 + F4 applied).
+    - ``datasets``: ``(subj, identifier, n_triples)`` — one row per
+      non-blank-id, non-empty dataset (F3 + F4 applied) with its statement
+      count in ``dataset_triples``.
 
-    ``input_materialized=True`` declares that ``triples`` is already a
-    durable materialization — the bucketed-by-``subj`` table the
-    production harvest lands (``harvest.py``), or any parquet scan — so
-    the defensive input persist is skipped: every consumer re-reads the
-    (column-pruned, predicate-pushed) scan instead of filling an
-    executor-memory copy first, and a bucketed scan keeps its
-    exchange-free subj distribution all the way into the subgraph probe
-    join. This is the 100-TB calling convention; the persist branch exists
-    for ad-hoc in-memory inputs.
+    ``triples`` must be cheap to re-read — a table or parquet scan, a
+    cache or a checkpoint — because several stages scan it and nothing
+    here persists it. The production harvest passes its bucketed-by-``subj``
+    table or its in-memory parse cache (``harvest.py``); over the bucketed
+    table the column-pruned scan keeps its exchange-free subj distribution
+    all the way into the subgraph probe join.
     """
-    if input_materialized:
-        t = remove_lowercase_dataset_typo(triples)
-    else:
-        # F1 first (before the scan). Persist WITHOUT repartitioning: the
-        # closure loop probes its own slim edge cache (closure.py), so
-        # nothing left here exploits a subj hash partitioning — the
-        # subgraph SMJ exchanges t exactly once either way, and a
-        # pre-emptive repartition(subj) measured as a pure ~10s loss at
-        # sf0.1 (MEMORY_AND_DISK: spills instead of OOM at scale)
-        t = remove_lowercase_dataset_typo(triples).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+    t = remove_lowercase_dataset_typo(triples)  # F1, before the scan
 
-    # F2 + X1 FUSED into one scan (round-6): dataset membership and the
-    # min dct:identifier are both per-subj aggregates of the same table,
-    # so one filtered groupBy replaces the previous two scans + left join
-    # (dataset_subjects().distinct ⋈ with_identifier's groupBy) — same
-    # rows, one less pass over the statement table and no join. Over a
-    # bucketed-by-subj input the aggregation is exchange-free.
+    # F2 + X1 in one scan: dataset membership and the min dct:identifier
+    # are both per-subj aggregates of the same table, so one filtered
+    # groupBy computes both, with no join. Over a bucketed-by-subj input
+    # the aggregation is exchange-free.
     is_ds_stmt = (F.col("pred") == RDF_TYPE) & (
         F.col("obj_value") == DCAT_DATASET
     )
@@ -97,7 +80,7 @@ def split_datasets(
             ).alias("identifier"),
         )
     )
-    # checkpointed: feeds both the closure seeds and the final F4 semi-join
+    # checkpointed: feeds both the closure seeds and the final F4 join
     named = drop_blank_identifiers(subjects_with_id).localCheckpoint()  # F3
 
     # J1 + J3 closures FUSED into one loop. The reference computes the
@@ -123,15 +106,12 @@ def split_datasets(
     closure = reachable_closure(t, ds_seeds.union(cat_roots))
 
     # Split the closure's roots back into dataset vs catalogue closures
-    # with an ANTI join against the (small) catalogue-root set instead of
-    # round-5's left-semi against the dataset-count-sized `named` table —
-    # a broadcast-sized build side instead of a 150k-row one. Equivalence
-    # incl. the mistyped-dataset corner: a dataset root D that is ALSO
-    # typed dcat:Catalog previously generated its full ds_triples and then
-    # removal (cat_root = D ∈ closure(D)) subtracted every one of them,
-    # emptying D before F4; the anti join drops D's closure up front, so D
-    # contributes no ds_triples at all — `final` is identical (oracle hash
-    # unchanged), minus the generate-then-subtract work.
+    # with an ANTI join against the small catalogue-root set (a
+    # broadcast-sized build side, not the dataset-count-sized `named`).
+    # A dataset root D that is ALSO typed dcat:Catalog drops out here: J3
+    # would subtract its whole model (cat_root = D ∈ closure(D)) and F4
+    # drop it, so dropping its closure up front yields the same `final`
+    # without the generate-then-subtract work.
     ds_closure = closure.join(
         cat_roots.select("root"), "root", "left_anti"
     )
@@ -139,8 +119,8 @@ def split_datasets(
     # outputPartitioning (Scan ExistingRDD — verified empirically), so a
     # pre-checkpoint repartition(dataset_id) is a pure wasted wide shuffle.
     # Downstream groupBy(dataset_id) consumers shuffle off the checkpoint,
-    # but F4's distinct and the triple counts reduce map-side first — their
-    # exchanges carry ~one row per dataset, not the statement table.
+    # but F4's counts aggregate reduces map-side first — its exchange
+    # carries ~one row per dataset, not the statement table.
     ds_triples = subgraph_triples(t, ds_closure, root_alias="dataset_id")
 
     # J3: nested-catalogue subtraction — faithful to the reference, which
@@ -148,15 +128,13 @@ def split_datasets(
     # (Flows.kt:117-121) INCLUDING the dataset root itself when it is
     # (mis)typed dcat:Catalog: such a dataset's model empties and F4 drops it.
     #
-    # Round-5: the catalogue roots inside each dataset are detected on the
-    # CLOSURE NODE SET, not the extracted statement table — a statement
+    # The catalogue roots inside each dataset are detected on the CLOSURE
+    # NODE SET, not the extracted statement table — a statement
     # (s, rdf:type, dcat:Catalog) lands in dataset D's model iff s is in
     # D's closure and the statement exists in t, so
     # {(D, s) : s ∈ closure(D)} ⋈ cat_roots is set-identical to filtering
-    # ds_triples (proven equal by the unchanged oracle hash). That makes
-    # ds_triples SINGLE-consumer, dropping its full persist — previously
-    # the biggest intermediate materialized twice (persist + the final
-    # checkpoint below).
+    # ds_triples. That keeps ds_triples SINGLE-consumer: the checkpoint of
+    # `final` below is its only materialization.
     cat_in_ds = ds_closure.join(
         cat_roots.select(F.col("root").alias("cat_root")),
         ds_closure["node"] == F.col("cat_root"),
@@ -167,37 +145,24 @@ def split_datasets(
         .distinct()
     )
     # the finished per-dataset statement table is consumed by several
-    # downstream views (F4, counts, canonical hash, renders) — checkpoint it
+    # downstream views (F4's counts, canonical hash, renders) — checkpoint it
     # ONCE so every consumer reads materialized blocks instead of re-running
     # the subtraction (at cluster scale this materialization is the bucketed
     # parquet write the resume layer performs anyway)
     final = ds_triples.join(
         removal, ["dataset_id", "subj"], "left_anti"
     ).localCheckpoint()
-    t.unpersist()
 
-    # F4: drop datasets whose model ended up empty. The non-empty set is
-    # the key set of the per-dataset counts; the optimizer prunes the unused
-    # count, so this is a keys-only aggregate of `final`. A consumer that
-    # also joins split_triple_counts(final) (the split queries do)
-    # aggregates `final` a second time: the two aggregates differ, so the
-    # executed plan reuses no exchange. Both combine map-side, so each
-    # exchange carries about one row per dataset per partition.
-    non_empty = split_triple_counts(final).select(
-        F.col("dataset_id").alias("subj")
-    )
-    datasets = named.join(non_empty, "subj", "left_semi").select(
-        "subj", "identifier"
-    )
-    return final, datasets
-
-
-def split_triple_counts(ds_triples: DataFrame) -> DataFrame:
-    """Per-dataset statement counts ``(dataset_id, n_triples)``.
-
-    :func:`split_datasets`'s F4 filter takes its key set; the consumer
-    queries join the counts themselves, which aggregates the statement
-    table once more (no exchange is shared between the two)."""
-    return ds_triples.groupBy("dataset_id").agg(
+    # F4: drop datasets whose model ended up empty. ONE per-dataset counts
+    # aggregate over `final` is both the filter (the inner join keeps the
+    # datasets with at least one statement) and the `n_triples` column the
+    # consumers read, so a plan that uses both scans `final` once. It
+    # combines map-side, so its exchange carries about one row per dataset
+    # per partition.
+    counts = final.groupBy(F.col("dataset_id").alias("subj")).agg(
         F.count(F.lit(1)).alias("n_triples")
     )
+    datasets = named.join(counts, "subj").select(
+        "subj", "identifier", "n_triples"
+    )
+    return final, datasets

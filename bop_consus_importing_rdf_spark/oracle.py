@@ -864,24 +864,22 @@ def _split(spark: SparkSession, sf_dir: str):
         _, bucketed = _memo_get(_SPLIT_BUCKETED_CACHE, spark, sf_dir)
         if bucketed is not None:
             return bucketed
-        # split_datasets already checkpoints its outputs' expensive subtree;
-        # memoizing the DataFrames is enough for the six oracle views
+        # `_graph` is persisted, so the split reads it as it is;
+        # split_datasets already checkpoints its outputs' expensive subtree,
+        # and memoizing the DataFrames is enough for the six oracle views
         cached = split_datasets(_graph(spark, sf_dir))
         _memo_put(_SPLIT_CACHE, key, spark, cached)
     return cached
 
 
 def q_split_datasets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.split import split_triple_counts
-
-    ds_triples, datasets = _split(spark, sf_dir)
-    # this plan aggregates the checkpointed statement table twice: F4's
-    # keys-only aggregate inside `datasets` and these counts (no exchange
-    # is reused; both combine map-side to about one row per dataset)
-    counts = split_triple_counts(ds_triples)
-    return datasets.join(
-        counts, datasets["subj"] == counts["dataset_id"]
-    ).select(F.col("dataset_id"), F.col("identifier"), F.col("n_triples"))
+    # `datasets` carries the counts: the one per-dataset aggregate of the
+    # checkpointed statement table that is also the F4 filter, so this
+    # plan scans that table once
+    _, datasets = _split(spark, sf_dir)
+    return datasets.select(
+        F.col("subj").alias("dataset_id"), "identifier", "n_triples"
+    )
 
 
 # The production triple layout (harvest.py lands parse output bucketed by
@@ -920,9 +918,7 @@ def _split_bucketed(spark: SparkSession, sf_dir: str):
 
     key, cached = _memo_get(_SPLIT_BUCKETED_CACHE, spark, sf_dir)
     if cached is None:
-        cached = split_datasets(
-            bucketed_graph(spark, sf_dir), input_materialized=True
-        )
+        cached = split_datasets(bucketed_graph(spark, sf_dir))
         _memo_put(_SPLIT_BUCKETED_CACHE, key, spark, cached)
     return cached
 
@@ -930,13 +926,10 @@ def _split_bucketed(spark: SparkSession, sf_dir: str):
 def q_split_datasets_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Identical semantics (and oracle SQL) to ``split_datasets``, probe
     side reading the bucketed production layout."""
-    from .operators.split import split_triple_counts
-
-    ds_triples, datasets = _split_bucketed(spark, sf_dir)
-    counts = split_triple_counts(ds_triples)
-    return datasets.join(
-        counts, datasets["subj"] == counts["dataset_id"]
-    ).select(F.col("dataset_id"), F.col("identifier"), F.col("n_triples"))
+    _, datasets = _split_bucketed(spark, sf_dir)
+    return datasets.select(
+        F.col("subj").alias("dataset_id"), "identifier", "n_triples"
+    )
 
 
 def _counted_datasets(spark: SparkSession, sf_dir: str) -> DataFrame:

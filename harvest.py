@@ -354,10 +354,9 @@ def run_harvest(
     triples = parsed.filter(F.col("obj_kind").isNotNull())
 
     # the input is ALWAYS materialized here — a bucketed/resumed table or
-    # the in-memory cache above — so split's defensive persist would only
-    # duplicate it in executor memory
+    # the in-memory cache above — as split_datasets requires
     ds_triples, datasets = split_datasets(
-        triples, remove_prefix, precedence_uri_ref, input_materialized=True
+        triples, remove_prefix, precedence_uri_ref
     )
     counted = with_counter(
         datasets.withColumn("catalogue", F.lit(catalogue))

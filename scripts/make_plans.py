@@ -21,7 +21,7 @@ SF_DIR = "/root/testdata/sf0.001"
 COMMENTARY = {
     "token_counts": "Pure column expressions over documents: scan reads ONLY (doc_id, text).",
     "cosine_topk": "Brute-force exact top-k: the 8-query side broadcasts (BroadcastNestedLoopJoin), the corpus side never shuffles; the only hash exchange is the per-query window.",
-    "doc_entity_links": "Gazetteer joins broadcast; the Arrow-batched mention UDF runs in the scan stage.",
+    "doc_entity_links": "Gazetteer joins broadcast; mention detection is the JVM trie-pattern regexp_extract_all (detect_mentions), codegen'd into the scan stage with no Python worker.",
     "minhash_lsh_pairs": "LSH band self-join shuffles on the uniform band key; jaccard intersection joins shuffle on doc id — every shuffle carries a semantically required key. The hot-bucket cap (max_bucket=4096) adds one map-side-combinable count + semi-join on the band key, the guard that keeps candidate generation linear on boilerplate-heavy corpora.",
     "split_datasets": (
         "The iterative closure runs as separate driver-materialized jobs "
@@ -32,21 +32,19 @@ COMMENTARY = {
         "reading the checkpointed tables. The dataset-subject scan and the "
         "identifier aggregation are FUSED into one filtered groupBy; the "
         "closure roots split ds-vs-catalogue by a broadcast ANTI join "
-        "against the small catalogue-root set. This plan aggregates the "
-        "checkpointed per-dataset statement table TWICE: F4's non-empty "
-        "filter is a keys-only aggregate (the optimizer prunes its unused "
-        "count) and the consumer's counts a full count, so the two do not "
-        "match and no exchange is reused (0 ReusedExchange). Both combine "
-        "map-side, so each exchange carries about one row per dataset per "
-        "partition."
+        "against the small catalogue-root set. ONE per-dataset counts "
+        "aggregate over the checkpointed statement table is both F4's "
+        "non-empty filter (an inner join onto the named datasets) and the "
+        "n_triples column this query selects, so the plan scans that "
+        "checkpoint once. The aggregate combines map-side, so its exchange "
+        "carries about one row per dataset per partition."
     ),
     "split_datasets_bucketed": (
         "The GRADED bench variant: identical split semantics, probe side "
         "reading the bucketed-by-subj external table the production harvest "
         "lands (the one-time landing is ingest work, reported separately as "
-        "bucketed_landing_sec). The input persist is skipped "
-        "(input_materialized=True): every consumer re-reads the "
-        "column-pruned bucketed scan, and once the closure side exceeds the "
+        "bucketed_landing_sec). split_datasets persists no input, so "
+        "every consumer re-reads the column-pruned bucketed scan, and once the closure side exceeds the "
         "broadcast threshold the subgraph probe join plans with NO exchange "
         "on the triple side (1 exchange vs 2 over plain parquet — asserted "
         "by test_bucketed.py::test_split_probe_side_exchange_free_over_"

@@ -191,9 +191,8 @@ ROUND5_MD = """
   once, untimed, as the same bucketed external table `harvest.py` writes
   (the one-time landing cost is reported as `bucketed_landing_sec`,
   ~9-11s at sf0.1 — parse/ingest work amortized across every consumer);
-  the timed `split_datasets` query reads the durable table with
-  `split_datasets(input_materialized=True)`, skipping the defensive
-  input persist. 19.2s (r4 min) -> ~13s.
+  the timed `split_datasets` query reads the durable table as its
+  input, with no defensive input persist. 19.2s (r4 min) -> ~13s.
 - **Nested-catalogue roots from the closure node set**: a
   (s, rdf:type, dcat:Catalog) statement is in dataset D's model iff s is
   in D's closure and the statement is in the input — so cat_in_ds joins
@@ -542,13 +541,11 @@ Reference envelope (BASELINE.md): the reference's pulse throttle caps it at
 ~66.7 datasets/sec on 1 CPU, strictly sequential per catalogue. This
 pipeline sustains {tp[8]:,.0f} turns/sec on 8 cores.
 
-Extraction physical strategy (kg/mentions.py): at local[2]/local[8] the
-undersubscribed box lets Arrow Python workers run on idle cores, so the
-resource-aware selector picks the pandas-UDF matcher there; at local[32]
-(fully subscribed) it picks the zero-Python JVM regexp path, which is ~3×
-faster in that regime. Both strategies are row-exact equivalent
-(test_mentions_jvm); on a real cluster, executors sized to their hosts
-take the JVM path.
+Extraction physical strategy (kg/mentions.py): one path at every core
+count, the zero-Python JVM regexp extraction (stacked projections, each
+regex evaluated once per turn, whole-stage codegen). The pandas-UDF
+matcher survives only as the row-exact reference test_mentions_jvm
+compares it against.
 """ + SCALE_PROBE_MD + ROUND4_MD + ROUND5_MD
     out_path = REPO / "BENCH" / "BASELINE.md"
     out_path.parent.mkdir(exist_ok=True)

@@ -19,6 +19,7 @@ from bop_consus_importing_rdf_spark.kg.pipeline import (
     PRED_RELEASED,
     build_kg,
     canonical_entity_map,
+    release_extraction_caches,
 )
 from bop_consus_importing_rdf_spark.kg.synth import (
     _sql_string,
@@ -171,6 +172,28 @@ def test_build_kg_end_to_end(spark, aliases):
 
     # content hash is 64-hex
     assert all(len(r.content_hash) == 64 for r in datasets.collect())
+
+
+def test_build_kg_extraction_runs_no_python_udf(spark, aliases, monkeypatch):
+    """Extraction has one engine, the JVM one, whatever the host: with
+    far more cores than task slots the triples plan still holds no Python
+    UDF evaluation."""
+    import os
+
+    monkeypatch.setattr(os, "cpu_count", lambda: 64)
+    t = synth_transcripts(spark, n_conv=4, seed=5)
+    try:
+        plan = (
+            build_kg(spark, t, aliases)["triples"]
+            ._jdf.queryExecution()
+            .optimizedPlan()
+            .toString()
+        )
+    finally:
+        release_extraction_caches()
+    assert "ArrowEvalPython" not in plan
+    assert "BatchEvalPython" not in plan
+    assert "regexp_extract_all" in plan  # the cached extraction is printed
 
 
 def test_per_turn_text_equality_under_stable_ordering(spark, aliases):

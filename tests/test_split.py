@@ -7,6 +7,8 @@ duplicate ids kept, empty-model drop.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -18,6 +20,7 @@ from bop_consus_importing_rdf_spark.operators.cleanup import (
 )
 from bop_consus_importing_rdf_spark.operators.closure import reachable_closure
 from bop_consus_importing_rdf_spark.operators.split import split_datasets
+from bop_consus_importing_rdf_spark.oracle import SPARK_QUERIES
 from bop_consus_importing_rdf_spark.vocab import (
     DCAT_CATALOG,
     DCAT_DATASET,
@@ -26,7 +29,7 @@ from bop_consus_importing_rdf_spark.vocab import (
     RDF_TYPE,
 )
 
-from .conftest import triples_df
+from .conftest import SF_DIR, triples_df
 
 EX = "http://example.org/"
 
@@ -122,6 +125,20 @@ def test_remove_prefix_variant(spark, fixture_triples):
     ids = sorted(r.identifier for r in datasets.collect())
     # ds3 reappears: URI precedence bypasses its blank dct:identifier
     assert ids == ["ds1", "ds2", "ds3", "ds4", "ds5"]
+
+
+def test_split_query_scans_final_checkpoint_once(spark):
+    """F4 and the consumer share ONE per-dataset counts aggregate, so the
+    executed plan of the split query reads the checkpointed statement
+    table (the only checkpoint carrying ``dataset_id``) once."""
+    df = SPARK_QUERIES["split_datasets"](spark, SF_DIR)
+    assert df.collect()  # runs this frame's own execution: the AQE-final plan
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final_plan = plan.split("== Initial Plan ==")[0]
+    scans = re.findall(r"Scan ExistingRDD\[([^\]]*)\]", final_plan)
+    final_scans = [s for s in scans if "dataset_id#" in s]
+    assert len(final_scans) == 1, plan
 
 
 def test_dense_cyclic_graph_fanout_gate(spark):
