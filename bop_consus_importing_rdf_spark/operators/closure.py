@@ -11,15 +11,21 @@ as ONE driver-side loop over blocks of hops:
             block := block \\ visited          (every block after the first)
             frontier := block nodes whose hop index == depth
 
-- The loop probes a SLIM persisted edge projection ``(_src, _dst)`` — two
-  columns instead of the six-column statement rows, and only the follow-kind
-  statements. One stats job fills that cache and sizes the two gates below.
+- The loop probes a SLIM edge projection ``(_src, _dst)`` — two columns
+  instead of the six-column statement rows, and only the follow-kind
+  statements — held as a local checkpoint. One stats job fills it and
+  sizes the two gates below; it is freed when the loop ends.
 - A block is one plan: ``depth`` hop joins whose outputs are unioned and
   reduced by one ``groupBy(root, node).agg(max(_k))``, then one
-  ``localCheckpoint`` job and one emptiness probe of the checkpoint.
+  ``localCheckpoint`` and one emptiness probe of the checkpoint. Its
+  1 + 2 + … + ``depth`` hop joins all read the same checkpoint scan, so
+  AQE builds the edge broadcast (or, past the broadcast gate, the edge
+  shuffle) once per block and reuses it for the rest.
   Catalogue-shaped RDF is 3-4 hops deep, so it closes inside the first
-  block: three Spark actions in all, because the per-iteration driver
-  actions — not data volume — dominate the loop on shallow graphs.
+  block: three driver actions in all (the stats job, the block's
+  checkpoint, its probe), which AQE runs as about ten Spark jobs. The
+  per-iteration driver actions — not data volume — dominate the loop on
+  shallow graphs.
 - A node whose longest in-block path is shorter than ``depth`` had all its
   successors expanded inside the block; only the nodes at exactly
   ``depth`` hops carry on. The anti-join against the visited blocks keeps
@@ -33,9 +39,9 @@ The oracle twin is a recursive CTE (DuckDB) — see ``oracle.py::SPLIT_CTE``.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from functools import reduce
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -43,13 +49,14 @@ from ..vocab import KIND_BNODE, KIND_IRI
 
 # Broadcasting the edge relation turns every hop join into a narrow
 # broadcast-hash probe, so a block is one shuffle-free stage up to its
-# groupBy. Above this edge count the hops plan as shuffle joins, the right
-# plan once the edge table dwarfs executor memory. Measured on local[32]
-# (fresh-JVM A/B pairs): broadcast wins clearly to ~1M edges and ties with
-# shuffle at 3.4M. In long-lived sessions with pinned checkpoint state the
-# broadcast plan degraded much harder than the shuffle plan (46-108 s vs
-# 18-20 s on the isolated closure). On a multi-node cluster the cost that
-# matters is bytes shipped per executor, which this count cannot see.
+# groupBy, built on one broadcast. Above this edge count the hops plan as
+# shuffle joins against one reused edge shuffle per block, the right plan
+# once the edge table dwarfs executor memory. The bound comes from A/B
+# pairs on local[32] (broadcast won clearly to ~1M edges and tied with
+# shuffle at 3.4M), taken while each hop join still built its own
+# broadcast; it has not been re-measured since they share one. On a
+# multi-node cluster the cost that matters is bytes shipped per executor,
+# which this count cannot see.
 _BROADCAST_EDGES_MAX = 4_000_000
 # Hops per block. The hops inside a block do not dedupe, so a block holds
 # paths rather than nodes: O(frontier · fanout^depth) rows before its
@@ -75,8 +82,20 @@ def _union(parts: list[DataFrame]) -> DataFrame:
     return reduce(lambda a, b: a.union(b), parts)
 
 
+def release_checkpoints(frames: Iterable[DataFrame]) -> None:
+    """Free the blocks of ``localCheckpoint``ed frames now rather than when
+    the ContextCleaner reaches them. ``unpersist`` is a no-op on a
+    checkpointed frame: its blocks belong to the RDD its plan scans. Every
+    frame must be the checkpoint itself, not a frame derived from it."""
+    for df in frames:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def reachable_closure(
-    triples: DataFrame, seeds: DataFrame, max_iters: int = 32
+    triples: DataFrame,
+    seeds: DataFrame,
+    max_iters: int = 32,
+    checkpoints: list[DataFrame] | None = None,
 ) -> DataFrame:
     """All nodes reachable from each seed root, following IRI and blank-node
     objects.
@@ -88,15 +107,25 @@ def reachable_closure(
     Raises ``RuntimeError`` if the frontier is still non-empty after
     ``max_iters`` blocks — a silently truncated closure would quietly drop
     statements on adversarial deep graphs.
+
+    The result reads its blocks from local checkpoints. They are appended
+    to ``checkpoints`` when given, for the caller to free with
+    :func:`release_checkpoints` once the result is consumed; otherwise the
+    ContextCleaner frees them. On any error the blocks are freed here.
     """
+    # a checkpoint, not a persist: each hop join's build side is then the
+    # same `Scan ExistingRDD`, so AQE plans a block's hop joins against ONE
+    # broadcast (or edge shuffle) and reuses it; over a persist each hop
+    # reads its own cache scan and rebuilds the broadcast
     edges = (
         triples.filter(F.col("obj_kind").isin(KIND_IRI, KIND_BNODE))
         .select(F.col("subj").alias("_src"), F.col("obj_value").alias("_dst"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
+    blocks: list[DataFrame] = []
     try:
-        # ONE job fills the cache and reads both gates; the HLL distinct
-        # estimate (±5%) is plenty for a coarse fan-out ratio
+        # ONE job fills the checkpoint and reads both gates; the HLL
+        # distinct estimate (±5%) is plenty for a coarse fan-out ratio
         stats = edges.agg(
             F.count(F.lit(1)).alias("n"),
             F.approx_count_distinct("_src").alias("n_src"),
@@ -119,17 +148,23 @@ def reachable_closure(
             if pieces:
                 block = block.join(_union(pieces), ["root", "node"], "left_anti")
             block = block.localCheckpoint()
+            blocks.append(block)
             pieces.append(block.drop("_k"))
             frontier = block.filter(F.col("_k") == depth).drop("_k")
             if frontier.isEmpty():
+                if checkpoints is not None:
+                    checkpoints.extend(blocks)
                 return _union(pieces)
         raise RuntimeError(
             f"reachable_closure did not converge within {max_iters} "
             f"iterations ({max_iters * depth} hops) — residual frontier is "
             f"non-empty; raise max_iters for deeper graphs"
         )
+    except BaseException:
+        release_checkpoints(blocks)
+        raise
     finally:
-        edges.unpersist()
+        release_checkpoints([edges])
 
 
 def subgraph_triples(

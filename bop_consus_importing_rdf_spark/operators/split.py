@@ -36,6 +36,7 @@ def split_datasets(
     triples: DataFrame,
     remove_prefix: bool = False,
     precedence_uri_ref: bool = False,
+    checkpoints: list[DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Split a triple table into per-dataset subgraphs.
 
@@ -53,7 +54,14 @@ def split_datasets(
     table or its in-memory parse cache (``harvest.py``); over the bucketed
     table the column-pruned scan keeps its exchange-free subj distribution
     all the way into the subgraph probe join.
+
+    Both results read local checkpoints. Each one taken here, the
+    closure's blocks included, is appended to ``checkpoints`` when given,
+    for the caller to free with
+    :func:`~.closure.release_checkpoints` once both results are consumed.
     """
+    if checkpoints is None:
+        checkpoints = []
     t = remove_lowercase_dataset_typo(triples)  # F1, before the scan
 
     # F2 + X1 in one scan: dataset membership and the min dct:identifier
@@ -82,6 +90,7 @@ def split_datasets(
     )
     # checkpointed: feeds both the closure seeds and the final F4 join
     named = drop_blank_identifiers(subjects_with_id).localCheckpoint()  # F3
+    checkpoints.append(named)
 
     # J1 + J3 closures FUSED into one loop. The reference computes the
     # catalogue subgraph WITHIN each dataset's extracted model
@@ -103,7 +112,10 @@ def split_datasets(
         # re-run the scan + distinct; the set is catalogue-roots-sized
         .localCheckpoint()
     )
-    closure = reachable_closure(t, ds_seeds.union(cat_roots))
+    checkpoints.append(cat_roots)
+    closure = reachable_closure(
+        t, ds_seeds.union(cat_roots), checkpoints=checkpoints
+    )
 
     # Split the closure's roots back into dataset vs catalogue closures
     # with an ANTI join against the small catalogue-root set (a
@@ -152,6 +164,7 @@ def split_datasets(
     final = ds_triples.join(
         removal, ["dataset_id", "subj"], "left_anti"
     ).localCheckpoint()
+    checkpoints.append(final)
 
     # F4: drop datasets whose model ended up empty. ONE per-dataset counts
     # aggregate over `final` is both the filter (the inner join keeps the

@@ -269,6 +269,9 @@ def run_harvest(
     from pyspark.sql import functions as F
 
     from bop_consus_importing_rdf_spark.functions.ntriples import nt_line
+    from bop_consus_importing_rdf_spark.operators.closure import (
+        release_checkpoints,
+    )
     from bop_consus_importing_rdf_spark.operators.manifest import (
         duplicate_warnings,
         manifest,
@@ -324,7 +327,12 @@ def run_harvest(
         parsed = spark.table(bucketed_table)
     else:
         parsed = parsed.cache()
-    n_rejects = parsed.filter(F.col("obj_kind").isNull()).count()
+    # one aggregate counts both the rejects and the statements they leave
+    gate = parsed.agg(
+        F.count_if(F.col("obj_kind").isNull()).alias("n_rejects"),
+        F.count("obj_kind").alias("n_statements"),
+    ).first()
+    n_rejects = gate["n_rejects"]
     if n_rejects and not keep_malformed:
         # reference behavior: a parse error fails the pipe with context
         # (Flows.kt:75-77); --keep-malformed downgrades to counted rejects.
@@ -355,13 +363,19 @@ def run_harvest(
 
     # the input is ALWAYS materialized here — a bucketed/resumed table or
     # the in-memory cache above — as split_datasets requires
+    checkpoints: list = []
     ds_triples, datasets = split_datasets(
-        triples, remove_prefix, precedence_uri_ref
+        triples, remove_prefix, precedence_uri_ref, checkpoints
     )
     counted = with_counter(
         datasets.withColumn("catalogue", F.lit(catalogue))
     ).cache()
-    n_datasets = counted.count()
+    # fills the cache; every dataset_id in ds_triples is a counted dataset,
+    # so the n_triples sum is ds_triples' row count
+    totals = counted.agg(
+        F.count(F.lit(1)).alias("n"), F.sum("n_triples").alias("n_triples")
+    ).first()
+    n_datasets = totals["n"]
 
     rendered = ds_triples.select(
         "dataset_id",
@@ -399,15 +413,16 @@ def run_harvest(
         ]
     )
     metrics.write.mode("overwrite").parquet(f"{output}/metrics")
+    release_checkpoints(checkpoints)
 
     summary = {
         "run_id": run_id,
         "format": fmt,
         "resumed": resumed,
-        "n_statements": triples.count(),
+        "n_statements": gate["n_statements"],
         "n_rejects": n_rejects,
         "n_datasets": n_datasets,
-        "n_dataset_statements": ds_triples.count(),
+        "n_dataset_statements": totals["n_triples"] or 0,
         "datasets_layout": datasets_layout,
     }
     parsed.unpersist()

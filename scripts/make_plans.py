@@ -1,9 +1,13 @@
 #!/usr/bin/env python
 """Regenerate PLANS.md: physical-plan evidence for the headline operators.
 
+    python scripts/make_plans.py [QUERY ...]
+
 Runs each query at sf0.001, counts exchange/broadcast operators in the
 formatted explain, extracts ReadSchema/PushedFilters lines, and prepends a
-hand-maintained commentary block per query (edit COMMENTARY below).
+hand-maintained commentary block per query (edit COMMENTARY below). With
+query names, only those sections are regenerated and the rest of PLANS.md
+is kept as it is; with none, the whole file is rewritten.
 """
 
 from __future__ import annotations
@@ -17,6 +21,16 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SF_DIR = "/root/testdata/sf0.001"
+PLANS = Path(__file__).resolve().parent.parent / "PLANS.md"
+HEADER = (
+    "# PLANS — physical-plan evidence (`.explain`) for the headline operators\n"
+    "\n"
+    "Generated by `scripts/make_plans.py` from the executed plans at "
+    "sf0.001. What to look for, per the scale brief: filters/projections "
+    "reach the parquet scan (`PushedFilters`, `ReadSchema`), small "
+    "dimensions broadcast, exchanges only where a shuffle is "
+    "semantically required.\n"
+)
 
 COMMENTARY = {
     "token_counts": "Pure column expressions over documents: scan reads ONLY (doc_id, text).",
@@ -25,10 +39,12 @@ COMMENTARY = {
     "minhash_lsh_pairs": "LSH band self-join shuffles on the uniform band key; jaccard intersection joins shuffle on doc id — every shuffle carries a semantically required key. The hot-bucket cap (max_bucket=4096) adds one map-side-combinable count + semi-join on the band key, the guard that keeps candidate generation linear on boilerplate-heavy corpora.",
     "split_datasets": (
         "The iterative closure runs as separate driver-materialized jobs "
-        "(one loop of 4-hop blocks; a block is ONE plan whose hop joins are "
-        "broadcast-hash probes of the slim edge projection, one groupBy "
-        "exchange, one checkpoint; the fixture graph closes inside the "
-        "first block), so the counts below cover the final consumer plan "
+        "(one loop of 4-hop blocks; a block is ONE plan whose ten hop joins "
+        "are broadcast-hash probes of the slim edge projection, held as a "
+        "local checkpoint so that all ten read one scan and AQE builds ONE "
+        "edge broadcast per block and reuses it for the other nine; one "
+        "groupBy exchange, one checkpoint; the fixture graph closes inside "
+        "the first block), so the counts below cover the final consumer plan "
         "reading the checkpointed tables. The dataset-subject scan and the "
         "identifier aggregation are FUSED into one filtered groupBy; the "
         "closure roots split ds-vs-catalogue by a broadcast ANTI join "
@@ -48,9 +64,9 @@ COMMENTARY = {
         "broadcast threshold the subgraph probe join plans with NO exchange "
         "on the triple side (1 exchange vs 2 over plain parquet — asserted "
         "by test_bucketed.py::test_split_probe_side_exchange_free_over_"
-        "bucketed). 19.2s (r4) -> 13.3s (r5) -> 12.7s min-of-3 at sf0.1 "
-        "(r6, measured on a window where the r5 tree started at 15.6s; "
-        "see OPTIMIZATION_r06.md §1)."
+        "bucketed). One bench.py pass on 4 cores: 22.9-23.9s at sf0.1, "
+        "104-112s at the scripts/make_sfN.py sf1 (3.4M follow edges, "
+        "still under the closure's 4M-edge broadcast bound)."
     ),
     "jsonld_parse_roundtrip": (
         "Round-5 rebuild on the split-union parser architecture: the "
@@ -267,7 +283,47 @@ COMMENTARY = {
 }
 
 
-def main() -> None:
+def _section(name: str, df) -> str:
+    df.write.format("noop").mode("overwrite").save()  # AQE-final plan
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    plan = buf.getvalue()
+    n_shuffle = len(re.findall(r"\(\d+\) Exchange\b", plan))
+    n_bcast = len(re.findall(r"\(\d+\) BroadcastExchange\b", plan))
+    n_wsc = len(set(re.findall(r"codegen id : (\d+)", plan)))
+    schemas = sorted(set(re.findall(r"ReadSchema: \S+", plan)))
+    pushed = sorted(set(re.findall(r"PushedFilters: \[[^\]]*\]", plan)))
+    lines = [
+        f"## {name}",
+        "",
+        COMMENTARY[name],
+        "",
+        f"- shuffle exchanges: {n_shuffle}; broadcast exchanges: "
+        f"{n_bcast}; whole-stage-codegen spans: {n_wsc}",
+        *(f"- `{s}`" for s in schemas),
+        *(f"- `{p}`" for p in pushed),
+    ]
+    return "\n".join(lines) + "\n"
+
+
+def _sections(text: str) -> dict[str, str]:
+    """PLANS.md's ``## name`` sections, keyed by query name."""
+    parts = re.split(r"^(?=## )", text, flags=re.M)[1:]
+    return {p.split("\n", 1)[0][3:]: p.rstrip("\n") + "\n" for p in parts}
+
+
+def main(names: list[str]) -> None:
+    unknown = [n for n in names if n not in COMMENTARY]
+    if unknown:
+        raise SystemExit(f"unknown {unknown}; one of {list(COMMENTARY)}")
+    sections = {}
+    if names:
+        sections = _sections(PLANS.read_text())
+        missing = [n for n in COMMENTARY if n not in sections and n not in names]
+        if missing:
+            raise SystemExit(f"PLANS.md lacks sections {missing}; name them too")
+
     from bop_consus_importing_rdf_spark.oracle import SPARK_QUERIES
     from bop_consus_importing_rdf_spark.session import get_spark
     from bop_consus_importing_rdf_spark.sources.rdf_io import parse_ntriples
@@ -280,44 +336,12 @@ def main() -> None:
             SPARK_QUERIES["nt_render"](s, d).withColumnRenamed("line", "value")
         )
 
-    queries = {name: SPARK_QUERIES.get(name, q_nt_parse) for name in COMMENTARY}
-
-    out = [
-        "# PLANS — physical-plan evidence (`.explain`) for the headline operators",
-        "",
-        "Generated by `scripts/make_plans.py` from the executed plans at "
-        "sf0.001. What to look for, per the scale brief: filters/projections "
-        "reach the parquet scan (`PushedFilters`, `ReadSchema`), small "
-        "dimensions broadcast, exchanges only where a shuffle is "
-        "semantically required.",
-        "",
-    ]
-    for name, fn in queries.items():
-        df = fn(spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()  # AQE-final plan
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
-        n_shuffle = len(re.findall(r"\(\d+\) Exchange\b", plan))
-        n_bcast = len(re.findall(r"\(\d+\) BroadcastExchange\b", plan))
-        n_wsc = len(set(re.findall(r"codegen id : (\d+)", plan)))
-        schemas = sorted(set(re.findall(r"ReadSchema: \S+", plan)))
-        pushed = sorted(set(re.findall(r"PushedFilters: \[[^\]]*\]", plan)))
-        out.append(f"## {name}")
-        out.append("")
-        out.append(COMMENTARY[name])
-        out.append("")
-        out.append(
-            f"- shuffle exchanges: {n_shuffle}; broadcast exchanges: "
-            f"{n_bcast}; whole-stage-codegen spans: {n_wsc}"
-        )
-        out.extend(f"- `{s}`" for s in schemas)
-        out.extend(f"- `{p}`" for p in pushed)
-        out.append("")
-    Path("/root/repo/PLANS.md").write_text("\n".join(out))
-    print("PLANS.md written")
+    for name in names or COMMENTARY:
+        fn = SPARK_QUERIES.get(name, q_nt_parse)
+        sections[name] = _section(name, fn(spark, SF_DIR))
+    PLANS.write_text("\n".join([HEADER, *(sections[n] for n in COMMENTARY)]))
+    print(f"PLANS.md: {len(names or COMMENTARY)} section(s) written")
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

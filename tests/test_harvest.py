@@ -58,7 +58,10 @@ def test_harvest_nt_gz(spark, tmp_path, graph):
             f.write(r.line + "\n")
 
     out = str(tmp_path / "out")
+    before = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
     summary = run_harvest(spark, str(src), out, catalogue="cat-a")
+    # the parse cache, `counted` and every checkpoint of the split are freed
+    assert len(spark.sparkContext._jsc.sc().getRDDStorageInfo()) <= before
     exp_stmts, exp_datasets = _expected(spark, graph)
 
     assert summary["format"] == "nt"

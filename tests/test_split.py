@@ -18,7 +18,10 @@ from bop_consus_importing_rdf_spark.operators.cleanup import (
     dataset_subjects,
     remove_lowercase_dataset_typo,
 )
-from bop_consus_importing_rdf_spark.operators.closure import reachable_closure
+from bop_consus_importing_rdf_spark.operators.closure import (
+    reachable_closure,
+    release_checkpoints,
+)
 from bop_consus_importing_rdf_spark.operators.split import split_datasets
 from bop_consus_importing_rdf_spark.oracle import SPARK_QUERIES
 from bop_consus_importing_rdf_spark.vocab import (
@@ -173,22 +176,47 @@ def test_closure_raises_when_not_converged(spark):
     assert got == {f"urn:c{i}" for i in range(10)}
 
 
-def _cached_rdds(spark):
-    """Persisted RDDs other than local checkpoints: the closure's result
-    reads its blocks from local checkpoints, which register as persisted
-    RDDs too; the edge cache must not outlive the call."""
-    rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
-    return sum(not r.isCheckpointed() for r in rdds)
+def _persisted_rdd_ids(spark):
+    """Ids of every persisted RDD, local checkpoints included."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 def test_closure_releases_edge_cache(spark):
+    """The edge checkpoint never outlives the call: a converged closure
+    leaves only the blocks its result reads (three for a 9-hop chain), a
+    failed one leaves nothing. With a ``checkpoints`` list the caller owns
+    the blocks and frees them with ``release_checkpoints``."""
     t, seeds = _chain(spark, 9)
-    before = _cached_rdds(spark)
-    assert reachable_closure(t, seeds).count() == 10
-    assert _cached_rdds(spark) <= before
+    before = _persisted_rdd_ids(spark)
+    closure = reachable_closure(t, seeds)
+    assert closure.count() == 10
+    assert len(_persisted_rdd_ids(spark) - before) == 3
+    before = _persisted_rdd_ids(spark)
+    checkpoints = []
     with pytest.raises(RuntimeError):
-        reachable_closure(t, seeds, max_iters=1)
-    assert _cached_rdds(spark) <= before
+        reachable_closure(t, seeds, max_iters=1, checkpoints=checkpoints)
+    assert not checkpoints
+    assert not _persisted_rdd_ids(spark) - before
+    assert reachable_closure(t, seeds, checkpoints=checkpoints).count() == 10
+    assert len(checkpoints) == 3
+    release_checkpoints(checkpoints)
+    assert not _persisted_rdd_ids(spark) - before
+
+
+def test_closure_block_broadcasts_edges_once(spark):
+    """A block's hop joins share one edge broadcast. A one-block closure
+    (a 3-hop chain) runs 11 Spark jobs, counting the final ``count``; a
+    broadcast per hop join would add nine more. The bound leaves room for
+    the job count's run-to-run flip."""
+    t, seeds = _chain(spark, 3)
+    sc = spark.sparkContext
+    group = "closure-one-block"
+    sc.setJobGroup(group, group)
+    try:
+        assert reachable_closure(t, seeds).count() == 4
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 14
 
 
 def _pairs(n):
