@@ -329,36 +329,26 @@ _GRAPH_CACHE: dict[tuple[int, str], _MemoEntry] = {}
 
 
 def _graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The derived RDF graph as a DataFrame, memoized + persisted per
-    (session, sf_dir).
+    """The derived RDF graph as a DataFrame, memoized per (session,
+    sf_dir) as an eager local checkpoint.
 
     Spark inlines SQL CTEs, so the UNION ALL branches would each
     re-execute the orders⋈customer base join; caching the (small) base
-    relation turns that into one join + N cache scans, and persisting the
-    assembled graph means the ~10 graph-derived driver queries build it
-    ONCE per session instead of once each. The DuckDB oracle runs the
-    plain CTE text — DuckDB materializes CTEs itself.
+    relation while the graph is built turns that into one join + N cache
+    scans. The checkpoint means the ~10 graph-derived driver queries
+    build the graph ONCE per session, and a session-wide
+    ``clearCache()`` (bench.py runs one after the KG pipeline) cannot
+    evict it. The DuckDB oracle runs the plain CTE text — DuckDB
+    materializes CTEs itself.
     """
-    from pyspark import StorageLevel
-
     key, cached = _memo_get(_GRAPH_CACHE, spark, sf_dir)
-    if cached is not None and cached.storageLevel == StorageLevel.NONE:
-        # A session-wide clearCache() (bench.py runs one after the KG
-        # pipeline) evicts the persisted graph AND the `base` cache but
-        # leaves this memo entry; returning the evicted frame would make
-        # every later graph-derived query re-run the orders⋈customer base
-        # join once per UNION branch (~19×). Drop the stale entry and
-        # rebuild/re-pin below — within whatever query pays for it, like
-        # the first build.
-        del _GRAPH_CACHE[key]
-        cached = None
     if cached is None:
         register_views(spark, sf_dir)
         base = spark.sql(_BASE_SQL).cache()
         base.createOrReplaceTempView("base")
-        cached = spark.sql(_GRAPH_SELECT_SQL).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        cached = spark.sql(_GRAPH_SELECT_SQL).localCheckpoint()
+        spark.catalog.dropTempView("base")
+        base.unpersist()
         _memo_put(_GRAPH_CACHE, key, spark, cached)
     return cached
 
@@ -761,10 +751,9 @@ def q_nquads_parse_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N-Quads parse ∘ render == id, graph label included."""
     from .sources.rdf_io import parse_nquads
 
-    # materialize the rendered lines before parsing — the parsers' caller
-    # contract (sources/turtle_io.parse_turtle docstring): real ingestion
-    # reads bytes, and a live multi-branch render producer is unsafe to
-    # feed a split-union parser directly
+    # the parsers materialize nothing (sources/rdf_io.parse_ntriples
+    # docstring) and both parse branches read their input, so the render
+    # is checkpointed once here — real ingestion reads bytes the same way
     lines = (
         q_nquads_render(spark, sf_dir)
         .withColumnRenamed("line", "value")
@@ -786,7 +775,7 @@ def q_trig_parse_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.formats import PREFIXES
     from .sources.turtle_io import parse_trig
 
-    # materialized per the parsers' caller contract (see nquads roundtrip)
+    # checkpointed for the same reason as the nquads roundtrip
     docs = q_trig_render(spark, sf_dir).localCheckpoint()
     parsed = parse_trig(docs, prefixes=PREFIXES, carry_cols=("doc_id",))
     return parsed.select(
@@ -864,7 +853,7 @@ def _split(spark: SparkSession, sf_dir: str):
         _, bucketed = _memo_get(_SPLIT_BUCKETED_CACHE, spark, sf_dir)
         if bucketed is not None:
             return bucketed
-        # `_graph` is persisted, so the split reads it as it is;
+        # `_graph` is checkpointed, so the split reads it as it is;
         # split_datasets already checkpoints its outputs' expensive subtree,
         # and memoizing the DataFrames is enough for the six oracle views
         cached = split_datasets(_graph(spark, sf_dir))
@@ -1956,12 +1945,27 @@ MIX_TARGETS = {f"src{i}": (80 if i < 10 else 20) for i in range(20)}
 def q_mix_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic DoReMi-style domain re-mixing of the documents
     corpus to target token shares; oracle mirrors the binding-domain
-    argmin, the BIGINT rate arithmetic and the md5 ppm draw."""
+    argmin, the exact rate arithmetic and the md5 ppm draw."""
     from .operators.pretrain import mix_domains
     from .sources.catalog import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     return mix_domains(docs, MIX_TARGETS)
+
+
+#: the mix oracle's binding-domain and keep-rate CTEs over
+#: ``sized(domain, s, t)``. HUGEINT, like the Spark side's DECIMAL(38,0)
+#: (``operators/pretrain.RATE_PPM_EXPR``): in BIGINT, ``s·t_b·10⁶`` passes
+#: 2⁶³ at ~9×10⁹ binding-domain tokens with shares near 1000‰ and DuckDB
+#: raises an overflow error. The binding order is the struct-min's
+#: ``(cap, t, s)``; the rate is cast back to BIGINT, Spark's output type.
+MIX_RATES_SQL = (
+    "binding AS (SELECT t AS t_b, s AS s_b FROM sized "
+    "  ORDER BY cast(t AS hugeint) * 1000000 // s, t, s LIMIT 1), "
+    "rates AS (SELECT domain, cast(least(1000000, "
+    "  (cast(s AS hugeint) * t_b * 1000000) // (cast(s_b AS hugeint) * t)) "
+    "  AS bigint) AS rate_ppm FROM sized, binding)"
+)
 
 
 def _mix_oracle_sql() -> str:
@@ -1978,12 +1982,7 @@ def _mix_oracle_sql() -> str:
         "  FROM tok GROUP BY domain), "
         "sized AS (SELECT tgt.domain, cast(tgt.s AS bigint) AS s, t "
         "  FROM tgt JOIN t_dom USING (domain)), "
-        # binding domain: same (cap, t, s) ordering as the struct-min
-        "binding AS (SELECT t AS t_b, s AS s_b FROM sized "
-        "  ORDER BY t * 1000000 // s, t, s LIMIT 1), "
-        "rates AS (SELECT domain, least(1000000, "
-        "  (s * t_b * 1000000) // (s_b * t)) AS rate_ppm "
-        "  FROM sized, binding) "
+        f"{MIX_RATES_SQL} "
         "SELECT id, domain, n_tokens, rate_ppm FROM tok "
         "JOIN rates USING (domain) "
         "WHERE ('0x' || substring(md5(cast(id AS varchar)), 1, 8))::bigint "

@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .rdf_io import PARSED_SCHEMA
+from .rdf_io import PARSED_SCHEMA, plan_barrier
 
 _JSTR = r'(?:[^"\\]|\\.)*'
 _LINE_PATTERN = (
@@ -105,11 +105,8 @@ def parse_jsonld(
       ``asNondeterministic`` as the plan barrier, malformed-drop on the
       output struct (same discipline as ``rdf_io.parse_ntriples``).
 
-    Entry materialization (``ensure_materialized``) enforces the shared
-    caller contract."""
-    from .rdf_io import ensure_materialized
-
-    lines = ensure_materialized(lines)
+    Same input contract as ``rdf_io.parse_ntriples``: both branches read
+    ``lines``, so pass a scan, a cache or a checkpoint."""
 
     @F.pandas_udf(f"struct<{PARSED_SCHEMA}>")
     def _parse_fallback(s: pd.Series) -> pd.DataFrame:
@@ -133,8 +130,7 @@ def parse_jsonld(
         line.contains("\x01") | line.contains("\x02")
         | line.contains("\\u") | line.rlike(r'\\[^"\\/bfnrtu]')
     )
-    nd_guard = F.rand(7) > F.lit(-1.0)
-    base = lines.filter(nd_guard & (stripped != ""))
+    base = lines.filter(plan_barrier() & (stripped != ""))
 
     # two-step clean branch: the packed pass once into an attribute, the
     # anchored inner-object extracts once into attributes, the final
@@ -144,7 +140,7 @@ def parse_jsonld(
     packed = F.regexp_replace(line, _LINE_PATTERN, f"$1{sep}$2{sep}$3")
     step = base.filter(~has_ctl).select(
         line.alias("_l"),
-        (F.rand(17) > F.lit(-1.0)).alias("_g"),
+        plan_barrier().alias("_g"),
         F.split(packed, sep).alias("_parts"),
     )
     parts = F.col("_parts")

@@ -32,71 +32,32 @@ PARSED_SCHEMA = (
     "obj_lang string, obj_datatype string"
 )
 
-#: analyzed-plan node markers whose presence makes a LIVE producer unsafe
-#: to feed a split-union parser (see ``ensure_materialized``): a Union gets
-#: every branch filter pushed into every producer branch
-#: (PushProjectionThroughUnion clones the assist ArrowEvalPython per
-#: branch — measured 5× plan inflation off an 18-branch render union), and
-#: a Python-eval producer (pandas UDF / mapInPandas) re-executes once per
-#: consuming branch because nothing materializes between them.
-_RISKY_PRODUCER_MARKERS = (
-    "Union",
-    "ArrowEvalPython",
-    "BatchEvalPython",
-    "MapInPandas",
-    "FlatMapGroupsInPandas",
-    "PythonUDF",
-)
+
+def plan_barrier() -> Column:
+    """An always-true NONDETERMINISTIC predicate, for the split-union
+    parsers. Catalyst does not push the branch filters above it, nor
+    substitute a projection it rides in, so the two branches keep reading
+    one upstream plan (see :func:`parse_ntriples`). Spelled on the
+    partition id: Spark 4 folds ``rand() > -1`` to ``true``
+    (``OptimizeRand``), which removed the barrier."""
+    return F.spark_partition_id() >= F.lit(0)
 
 
-def ensure_materialized(df: DataFrame) -> DataFrame:
-    """Structural enforcement of the parsers' caller contract (round-4 it
-    was docstring-only): a split-union parser must be fed MATERIALIZED
-    lines — a file scan, a cache, a checkpoint — never a live multi-branch
-    or Python-producer plan, or Catalyst clones the assist-branch UDF into
-    every producer branch and constraint inference pushes deterministic
-    predicate copies below any nondeterministic guard (the only real
-    barriers are cache/checkpoint/exchange materialization).
+def fan_out_lines(lines: DataFrame) -> DataFrame:
+    """The split-union parsers' fan-out guard: a narrow line stream (one
+    gzip file, a few normalized documents) starves the regex parse stage,
+    so it is repartitioned to the session parallelism and MATERIALIZED.
+    Left in-plan, predicate pushdown moves the two branches' differing
+    filter copies below the repartition exchange onto the narrow source
+    partitions, defeating exchange reuse — measured 22.5s in-plan vs 6.1s
+    materialized for the identical 905k-line parse. No-op on sized file
+    scans, tiny fixtures and streams already at the session parallelism
+    (a normalizer's checkpoint)."""
+    from ..operators.parallelism import ensure_min_parallelism
 
-    Cheap detection, no physical planning: already-persisted frames pass
-    through; otherwise the CACHED-SUBSTITUTED analyzed plan (cached
-    subtrees already replaced by InMemoryRelation, so a live view over a
-    cached graph counts as materialized) is scanned for union/Python-eval
-    markers. Clean plans — file scans, LocalRelation fixtures, checkpoint
-    RDDs, projections over caches — pass through untouched; risky ones are
-    ``localCheckpoint``-ed eagerly (blocks are reclaimed by the
-    ContextCleaner once the frame is garbage-collected, so no manual
-    unpersist bookkeeping leaks across a long session).
+    fanned = ensure_min_parallelism(lines, multiplier=8.0)
+    return lines if fanned is lines else fanned.localCheckpoint()
 
-    A risky plan that is also NARROW (fewer physical partitions than the
-    session default parallelism — e.g. ``normalize_turtle_docs``'s
-    mapInPandas output, which inherits the document partitioning) is
-    repartitioned BEFORE the checkpoint: the downstream parse fan-out
-    guard (``ensure_min_parallelism``) would otherwise immediately
-    repartition + re-checkpoint the stream, serializing the full line set
-    to block storage twice back-to-back (r5 review). One
-    ``repartition().localCheckpoint()`` serves both the plan-barrier and
-    the fan-out with a single copy, and the later guard provably no-ops
-    on the resulting ≥-parallelism checkpoint RDD. The partition probe
-    plans (but never executes) the risky plan — that one planning pass
-    happens only on plans that are about to be checkpointed anyway."""
-    sl = df.storageLevel
-    if sl.useMemory or sl.useDisk:
-        return df
-    # NOTE (round-6 probe): a shuffling Repartition at the plan root is NOT
-    # a sufficient barrier for the two-branch parse consumption — when the
-    # same cached-graph subtree feeds both union branches, the analyzer's
-    # relation dedup re-ids one side and the cache lookup stops matching,
-    # so the producer subtree INLINES into both branches (measured: the
-    # graph union expanded 2× and nt_parse ran 1.3-2× slower without this
-    # checkpoint). The localCheckpoint below stays load-bearing.
-    plan = df._jdf.queryExecution().withCachedData().toString()
-    if any(marker in plan for marker in _RISKY_PRODUCER_MARKERS):
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < target:
-            df = df.repartition(target)
-        return df.localCheckpoint()
-    return df
 
 _NT_LINE = re.compile(
     r"^\s*(?P<subj><[^>]*>|_:\S+)\s+"
@@ -248,22 +209,13 @@ def parse_ntriples(
     (then returned with ``obj_kind`` NULL and the raw line in
     ``obj_value`` for lineage auditing).
 
-    CALLER CONTRACT, structurally enforced at entry: a live multi-branch
-    or Python-producer plan is auto-checkpointed by
-    :func:`ensure_materialized` (file scans / caches / checkpoints pass
-    through untouched) — see its docstring for the measured failure mode.
+    INPUT: both branches read ``lines``, so it should be cheap to scan
+    twice — a file scan, a cache or a checkpoint. Code that builds a
+    Python or union line stream materializes it once itself (as
+    ``turtle_io.normalize_turtle_docs`` does); a live union fed here has
+    the assist branch's UDF cloned into every producer branch.
     """
-    lines = ensure_materialized(lines)
-    # fan narrow inputs out to the session parallelism, MATERIALIZED when
-    # it fires (no-op on sized file scans and tiny fixtures) — see
-    # turtle_io._parse_statement_lines for the measured in-plan-exchange
-    # pathology this avoids
-    from ..operators.parallelism import ensure_min_parallelism
-
-    fanned = ensure_min_parallelism(lines, multiplier=8.0)
-    if fanned is not lines:
-        fanned = fanned.localCheckpoint()
-    lines = fanned
+    lines = fan_out_lines(lines)
 
     @F.pandas_udf(f"struct<{PARSED_SCHEMA}>")
     def _parse_py(s: pd.Series) -> pd.DataFrame:
@@ -280,17 +232,14 @@ def parse_ntriples(
 
     line = F.col(line_col)
     stripped = F.trim(line)
-    # The always-true NONDETERMINISTIC guard is the FIRST conjunct of the
-    # base filter: predicate pushdown only moves the deterministic prefix
-    # BEFORE the first nondeterministic conjunct, so nothing here (or in
-    # the branch filters above) pushes below this point. With an upstream
-    # exchange (a repartition, a shuffle) the two branches then share ONE
-    # reused upstream execution; without the guard, every deterministic
-    # predicate is pushed into each upstream union branch/scan separately
-    # and an expensive producer runs once per branch.
-    nd_guard = F.rand(7) > F.lit(-1.0)
+    # The always-true NONDETERMINISTIC guard in the base filter keeps the
+    # branch filters above it. With an upstream exchange (a repartition,
+    # a shuffle) the two branches then share ONE reused upstream
+    # execution; without the guard, every branch predicate is pushed into
+    # each upstream union branch/scan separately and an expensive
+    # producer runs once per branch.
     base = lines.filter(
-        nd_guard & (stripped != "") & ~stripped.startswith("#")
+        plan_barrier() & (stripped != "") & ~stripped.startswith("#")
     )
     # assist-branch routing (see docstring): raw sentinel bytes would
     # corrupt the packed split / replace-chain; \u \U need Python. Four

@@ -63,7 +63,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..vocab import RDF_TYPE, XSD_NS
-from .rdf_io import PARSED_SCHEMA
+from .rdf_io import PARSED_SCHEMA, fan_out_lines, plan_barrier
 
 XSD_BOOLEAN = XSD_NS + "boolean"
 XSD_INTEGER = XSD_NS + "integer"
@@ -414,18 +414,11 @@ def parse_turtle(
     always-true nondeterministic guard keeps Catalyst from duplicating an
     expensive upstream into both branch filters.
 
-    CALLER CONTRACT, structurally enforced at entry (round-5; previously
-    docstring-only): a live multi-branch producer plan (e.g. a render
-    union) or Python producer (e.g. ``normalize_turtle_docs``) is
-    auto-checkpointed by ``rdf_io.ensure_materialized`` — without the
-    barrier, ``PushProjectionThroughUnion`` clones the assist branch's
-    Python UDF into every producer branch and constraint inference
-    re-derives deterministic copies of the filters below any guard
-    (measured 5× inflation parsing straight off an 18-branch render
-    union). File scans / caches / checkpoints pass through untouched."""
-    from .rdf_io import ensure_materialized
-
-    lines = ensure_materialized(lines)
+    INPUT: the same contract as ``rdf_io.parse_ntriples`` — the prefix
+    extraction and both branches read ``lines``, so pass a file scan, a
+    cache or a checkpoint (``normalize_turtle_docs`` returns one). A live
+    render union fed here gets the assist UDF cloned into every producer
+    branch (measured 5× plan inflation off an 18-branch render union)."""
     if prefixes is None:
         prefixes = extract_prefixes(lines, line_col)
     return _parse_statement_lines(lines, line_col, prefixes, keep_malformed)
@@ -457,23 +450,7 @@ def _parse_statement_lines(
       field expansion (a post-expansion filter plans a SECOND
       ArrowEvalPython that re-runs the parser — round-5 contract test).
     """
-    from ..operators.parallelism import ensure_min_parallelism
-
-    # A normalized-line checkpoint inherits the DOCUMENT partitioning (a
-    # handful of partitions for a grouped dump), starving the regex parse
-    # stage — measured 26s on 8 of 32 cores for 905k lines. The guard
-    # fans narrow inputs out to the session parallelism and provably
-    # no-ops on real file scans (which already split) and tiny fixtures.
-    # When it DOES fire, the fan-out must be MATERIALIZED: left in-plan,
-    # predicate pushdown / constraint inference move filter copies below
-    # the repartition exchange onto the narrow source partitions, and the
-    # two branches' differing filters defeat exchange reuse — measured
-    # 22.5s in-plan vs 6.1s materialized for the identical 905k-line
-    # parse (plan skeleton verified: Filter below Exchange, per branch).
-    fanned = ensure_min_parallelism(lines, multiplier=8.0)
-    if fanned is not lines:
-        fanned = fanned.localCheckpoint()
-    lines = fanned
+    lines = fan_out_lines(lines)
 
     line = F.col(line_col)
     stripped = F.trim(line)
@@ -486,9 +463,8 @@ def _parse_statement_lines(
         line.contains("\x01") | line.contains("\x02")
         | line.contains("\\u") | line.contains("\\U")
     )
-    nd_guard = F.rand(7) > F.lit(-1.0)
     base = lines.filter(
-        nd_guard
+        plan_barrier()
         & (stripped != "")
         & ~stripped.startswith("#")
         & ~stripped.rlike(_DIRECTIVE_FILTER)
@@ -496,7 +472,7 @@ def _parse_statement_lines(
     step = base.filter(~needs_py).select(
         *carry,
         line.alias("_l"),
-        (F.rand(17) > F.lit(-1.0)).alias("_g"),
+        plan_barrier().alias("_g"),
         ttl_packed_parts(line).alias("_parts"),
     )
     cols = ttl_statement_columns(
@@ -1175,16 +1151,35 @@ def _expand_statement(tokens: list[str], gen: list[int]) -> list[str]:
 MAX_TTL_DOC_BYTES = 1 << 30
 
 
+def _materialize_lines(lines: DataFrame, line_transform) -> DataFrame:
+    """A normalizer's output, materialized ONCE: the re-assembly is a
+    Python producer, and the parse reads its lines from several places
+    (prefix extraction, both split-union branches). ``line_transform``
+    (Column → Column on ``value``) runs before the checkpoint. The stream
+    inherits the DOCUMENT partitioning (a handful of partitions for a
+    grouped dump), so a narrow one is repartitioned to the session
+    parallelism first; the parse fan-out guard then no-ops on it."""
+    if line_transform is not None:
+        lines = lines.withColumn("value", line_transform(F.col("value")))
+    target = lines.sparkSession.sparkContext.defaultParallelism
+    if lines.rdd.getNumPartitions() < target:
+        lines = lines.repartition(target)
+    return lines.localCheckpoint()
+
+
 def normalize_turtle_docs(
     docs: DataFrame,
     ttl_col: str = "ttl",
     carry_cols: tuple[str, ...] = (),
     base_iri: str | None = None,
     base_iri_col: str | None = None,
+    line_transform=None,
 ) -> DataFrame:
     """Whole Turtle documents → one normalized statement/directive line per
     row (column ``value`` + ``carry_cols``), via an Arrow-batched
-    per-document re-assembly pass.
+    per-document re-assembly pass, returned as one local checkpoint at
+    no less than the session parallelism (``line_transform`` — e.g.
+    ``harvest.py``'s line-scoped space-in-IRI fix — runs before it).
 
     ``base_iri`` is the initial base for relative-IRI resolution (the
     reference passes the request address as ``baseUri``, ``Flows.kt:69``);
@@ -1224,7 +1219,7 @@ def normalize_turtle_docs(
                     rows.append([*(r[c] for c in carry), line])
             yield pd.DataFrame(rows, columns=[*carry, "value"])
 
-    return docs.mapInPandas(_norm, schema)
+    return _materialize_lines(docs.mapInPandas(_norm, schema), line_transform)
 
 
 def parse_turtle_docs(
@@ -1242,10 +1237,9 @@ def parse_turtle_docs(
     relative IRIs (``base_iri`` = the document address, reference
     ``Flows.kt:69``); the existing single-statement machinery (prefix
     extraction, JVM statement parse, sentinel fallback) runs unchanged on
-    the normalized lines. The line stream is a live Python producer, so
-    ``parse_turtle``'s entry materialization (see ``_ensure_materialized``)
-    checkpoints it once — the re-assembly pass runs exactly once no matter
-    how many branches consume it."""
+    the normalized lines. The normalizer returns its lines checkpointed,
+    so the re-assembly pass runs exactly once no matter how many branches
+    consume it."""
     lines = normalize_turtle_docs(
         docs, ttl_col, base_iri=base_iri, base_iri_col=base_iri_col
     )
@@ -1260,6 +1254,7 @@ def normalize_trig_docs(
     carry_cols: tuple[str, ...] = (),
     base_iri: str | None = None,
     base_iri_col: str | None = None,
+    line_transform=None,
 ) -> DataFrame:
     """Whole TriG documents → one ``(graph, value)`` row per normalized
     statement/directive line, via the shared tokenizer-based re-assembly
@@ -1267,7 +1262,9 @@ def normalize_trig_docs(
     graph blocks (multi-line, ``;``/``,`` lists, ``[...]``/``(...)``,
     ``@base``), ``GRAPH`` keyword and anonymous/default-graph forms,
     optional final ``.`` before ``}``. ``graph`` is NULL for directives
-    and default-graph statements."""
+    and default-graph statements. Materialized like
+    :func:`normalize_turtle_docs`: one local checkpoint, taken after
+    ``line_transform``."""
     import pandas as pd  # noqa: F811 — local for the executor closure
 
     carry = list(carry_cols)
@@ -1293,7 +1290,7 @@ def normalize_trig_docs(
                     rows.append([*(r[c] for c in carry), g, line])
             yield pd.DataFrame(rows, columns=[*carry, "graph", "value"])
 
-    return docs.mapInPandas(_norm, schema)
+    return _materialize_lines(docs.mapInPandas(_norm, schema), line_transform)
 
 
 def parse_trig_docs(
@@ -1310,23 +1307,17 @@ def parse_trig_docs(
     ``graph`` column — the TriG twin of :func:`parse_turtle_docs`
     (:func:`parse_trig` remains the line-oriented fast path for dumps in
     the shape our own renderer emits: no Python re-assembly pass, the
-    explode/window runs fully JVM-side). The normalized line stream is a
-    live Python producer, so the entry materialization checkpoints it
-    once; prefix extraction then reads materialized blocks.
+    explode/window runs fully JVM-side). The normalizer returns its lines
+    checkpointed, so prefix extraction and the parse read materialized
+    blocks.
 
     ``line_transform`` (Column → Column) runs on each normalized
     statement line before the parse — the hook ``harvest.py`` uses for
     the line-scoped space-in-IRI pre-process fix-up."""
-    from .rdf_io import ensure_materialized
-
     lines = normalize_trig_docs(
-        docs, trig_col, carry_cols, base_iri, base_iri_col=base_iri_col
+        docs, trig_col, carry_cols, base_iri, base_iri_col=base_iri_col,
+        line_transform=line_transform,
     )
-    if line_transform is not None:
-        lines = lines.select(
-            *carry_cols, "graph", line_transform(F.col("value")).alias("value")
-        )
-    lines = ensure_materialized(lines)
     if prefixes is None:
         prefixes = extract_prefixes(lines, "value")
     return _parse_statement_lines(
@@ -1365,13 +1356,9 @@ def parse_trig(
     default RANGE frame would leak graph headers between documents).
     ``carry_cols`` are pass-through annotation columns only.
 
-    Same entry materialization as :func:`parse_turtle`: a live union /
-    Python-producer document plan is auto-checkpointed, so the per-document
-    explode + graph-context window run over materialized documents and are
-    never cloned into the split-union branches."""
-    from .rdf_io import ensure_materialized
-
-    docs = ensure_materialized(docs)
+    Same input contract as :func:`parse_turtle`: the prefix extraction
+    and the per-document explode read ``docs``, so pass a scan, a cache
+    or a checkpoint."""
     if prefixes is None:
         prefixes = extract_prefixes(
             docs.select(
@@ -1397,9 +1384,9 @@ def parse_trig(
             "graph", F.last("_hdr", ignorenulls=True).over(w)
         )
         .filter(
-            # guard-first: keeps these predicates (and the branch filters
-            # above) from pushing below the per-document explode
-            (F.rand(13) > F.lit(-1.0))
+            # the barrier keeps the branch filters above from pushing
+            # below the per-document explode
+            plan_barrier()
             & F.col("_hdr").isNull()
             & (F.trim("_line") != "")
             & (F.trim("_line") != "}")
@@ -1429,7 +1416,7 @@ def parse_trig(
         *carry_cols,
         "graph",
         line.alias("_l"),
-        (F.rand(17) > F.lit(-1.0)).alias("_g"),
+        plan_barrier().alias("_g"),
         ttl_packed_parts(line).alias("_parts"),
     )
     cols = ttl_statement_columns(

@@ -149,6 +149,8 @@ def load_triples(spark, path: str, fmt: str, pre: bool, keep_malformed: bool):
         base = (
             input_base_iri(path) if "://" not in path else path
         )
+        # the space-in-IRI fix runs per re-assembled statement, before
+        # the normalizer's checkpoint
         lines = normalize_turtle_docs(
             docs.select(
                 F.col("value").alias("ttl"),
@@ -156,11 +158,8 @@ def load_triples(spark, path: str, fmt: str, pre: bool, keep_malformed: bool):
             ),
             base_iri=base,
             base_iri_col="_src",
+            line_transform=pre_process_iri_spaces if pre else None,
         )
-        if pre:
-            lines = lines.select(
-                pre_process_iri_spaces(F.col("value")).alias("value")
-            )
         return parse_turtle(lines, keep_malformed=keep_malformed)
     if fmt == "jsonld-doc":
         # compact-form JSON-LD documents (inline @context); the

@@ -85,10 +85,11 @@ COMMENTARY = {
         "\\x01/\\x02 or a \\u escape route whole to one ArrowEvalPython "
         "exact-parser branch. Measured 2.4x vs the previous always-on "
         "Python-exchange plan (2.7s vs 6.5s, 905k lines, local[32]). The "
-        "Scan ExistingRDD source below is the round-5 structural caller "
-        "contract at work: this evidence query feeds the LIVE 18-branch "
-        "render union, which ensure_materialized auto-checkpoints at entry "
-        "so the union is never cloned into the parse branches."
+        "parser materializes nothing: this evidence query feeds the render "
+        "projection over the checkpointed fixture graph, so both branches "
+        "read the graph's Scan ExistingRDD and no render union is cloned "
+        "into them. The branch filters sit above a SPARK_PARTITION_ID() >= 0 "
+        "barrier filter (Spark 4 folds the former rand() > -1 guard away)."
     ),
     "simhash_near_pairs": (
         "64-bit SimHash block LSH: token explode + two aggregations build "

@@ -238,11 +238,10 @@ ROUND5_MD = """
   `asNondeterministic()` (a plan barrier, not semantics) and filter the
   output struct before field expansion. The new contract pytest pins
   exactly ONE ArrowEvalPython in the plan.
-- **Structural caller contract**: `ensure_materialized` auto-checkpoints
-  live union/Python-producer plans at parser entry (cached-substituted
-  analyzed plan scan — no physical planning; file scans/caches pass
-  through). parse_turtle_docs' normalization now runs exactly once per
-  parse regardless of consumer branch count.
+- **Parser input contract**: parsers take a scan, cache or checkpoint as
+  given; the Turtle/TriG normalizers return their Python-built line
+  stream as one local checkpoint, so parse_turtle_docs' normalization
+  runs exactly once per parse regardless of consumer branch count.
 - **Round-5 final full bench** (3 interleaved fresh-JVM passes, per-query
   min, sf0.1 local[32]): **total 34.7s** vs 42.1s in round 4 (1.21x).
   split_datasets 13.3s (bucketed consumption; r4 19.2 — round-3's <=15s

@@ -42,6 +42,23 @@ def test_memo_cache_rejects_stale_session_entry(spark):
     assert oracle._GRAPH_CACHE[key][0]() is spark
 
 
+def test_graph_memo_survives_clear_cache(spark):
+    """The memoized graph is a checkpoint, which ``clearCache()`` cannot
+    evict: after it, ``_graph`` hands back the same frame and a render
+    over it scans the checkpoint instead of rebuilding the UNION ALL
+    graph (bench.py clears the cache between the KG pipeline and the
+    renders)."""
+    from bop_consus_importing_rdf_spark import oracle
+
+    g = oracle._graph(spark, SF_DIR)
+    spark.catalog.clearCache()
+    assert oracle._graph(spark, SF_DIR) is g
+    render = oracle.q_nt_render(spark, SF_DIR)
+    assert render.count() == g.count()
+    plan = render._jdf.queryExecution().executedPlan().toString()
+    assert "Union" not in plan, plan
+
+
 def test_build_kg_extraction_caches_are_releasable(spark):
     """Repeated build_kg calls must not accumulate pinned blocks for the
     session lifetime: every retained extraction persist is registered so

@@ -615,6 +615,34 @@ def test_mix_domains_rate_expr_survives_int64_overflow_scale(spark):
     assert got == 500_000
 
 
+def test_mix_oracle_rate_matches_spark_at_int64_overflow_scale(spark):
+    """The DuckDB mix oracle's rate CTEs agree with ``RATE_PPM_EXPR`` on
+    the overflow-scale row above: binding domain ``b`` (cap 2e13 < 4e13),
+    rate 500000 for ``a`` and the 10⁶ cap for ``b``. In BIGINT DuckDB
+    raises on the 2e19 numerator."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from bop_consus_importing_rdf_spark.oracle import MIX_RATES_SQL
+    from bop_consus_importing_rdf_spark.operators.pretrain import RATE_PPM_EXPR
+
+    sized = [("a", 1000, 40_000_000_000), ("b", 1000, 20_000_000_000)]
+    values = ", ".join(f"('{d}', {s}, {t})" for d, s, t in sized)
+    duck = dict(duckdb.sql(
+        f"WITH sized(domain, s, t) AS (SELECT col0, cast(col1 AS bigint), "
+        f"cast(col2 AS bigint) FROM (VALUES {values})), {MIX_RATES_SQL} "
+        "SELECT domain, rate_ppm FROM rates"
+    ).fetchall())
+    rows = spark.createDataFrame(
+        [(d, s, t, 20_000_000_000, 1000) for d, s, t in sized],
+        "domain string, s long, t long, t_b long, s_b long",
+    ).select(
+        "domain",
+        F.least(F.lit(1_000_000).cast("long"), F.expr(RATE_PPM_EXPR)),
+    )
+    assert duck == dict(rows.collect()) == {"a": 500_000, "b": 1_000_000}
+
+
 def test_mix_domains_rejects_over_1000_permille(spark):
     import pytest
 

@@ -107,33 +107,31 @@ def test_pre_process_fixes(spark):
 
 
 def test_materialize_folds_fanout_single_checkpoint(spark):
-    """r5 review finding 6: a risky NARROW producer (mapInPandas output at
-    the document partitioning) is repartitioned to the session parallelism
-    INSIDE the entry materialization — one repartition().localCheckpoint()
-    instead of checkpoint + fan-out re-checkpoint (the full line stream
-    previously serialized to block storage twice back-to-back)."""
+    """A normalizer's NARROW output (the re-assembly inherits the document
+    partitioning) is repartitioned to the session parallelism inside its
+    one local checkpoint, so the parse fan-out guard no-ops on it instead
+    of writing the line stream to block storage a second time."""
     from bop_consus_importing_rdf_spark.operators.parallelism import (
         ensure_min_parallelism,
     )
-    from bop_consus_importing_rdf_spark.sources.rdf_io import (
-        ensure_materialized,
+    from bop_consus_importing_rdf_spark.sources.turtle_io import (
+        normalize_trig_docs,
+        normalize_turtle_docs,
     )
 
-    def gen(batches):
-        for pdf in batches:
-            yield pdf
-
-    narrow = (
-        spark.createDataFrame([("x",)], "value string")
-        .coalesce(1)
-        .mapInPandas(gen, "value string")
-    )
-    mat = ensure_materialized(narrow)
     target = spark.sparkContext.defaultParallelism
-    # materialized once, already at session parallelism
-    assert mat.rdd.getNumPartitions() >= target
-    # ... so the parse fan-out guard provably no-ops (no second copy)
-    assert ensure_min_parallelism(mat, multiplier=8.0) is mat
-    # wide-enough or clean plans still pass through untouched
-    clean = spark.range(10).selectExpr("cast(id as string) as value")
-    assert ensure_materialized(clean) is clean
+    for normalize, doc in (
+        (normalize_turtle_docs, "<urn:a> <urn:p> <urn:b> ."),
+        (normalize_trig_docs, "<urn:g> { <urn:a> <urn:p> <urn:b> . }"),
+    ):
+        narrow = spark.createDataFrame([(doc,)], "d string").coalesce(1)
+        lines = normalize(narrow, "d")
+        # one checkpoint: the plan is the checkpoint's RDD scan alone
+        assert lines._jdf.queryExecution().analyzed().nodeName() == (
+            "LogicalRDD"
+        )
+        assert lines.rdd.getNumPartitions() >= target
+        assert ensure_min_parallelism(lines, multiplier=8.0) is lines
+        assert lines.select("value").first().value == (
+            "<urn:a> <urn:p> <urn:b> ."
+        )

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -115,26 +117,53 @@ def test_ttl_base_directive_raises(spark):
         extract_prefixes(lines)
 
 
-def test_parser_auto_materializes_live_union_producer(spark, tmp_path):
-    """Round-5 structural enforcement of the caller contract (round-4 it
-    was docstring-only): feeding a LIVE multi-branch render union straight
-    into a split-union parser must NOT clone the assist branch's Python
-    UDF into every producer branch (PushProjectionThroughUnion) — the
-    parser auto-checkpoints such producers at entry, so the executed plan
-    carries exactly ONE ArrowEvalPython node."""
-    import re as _re
+def _run_counting_plan_nodes(spark, run):
+    """``run()``'s result and the physical-plan node names summed over
+    every SQL execution it starts (read from the SQL status store)."""
+    sc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
 
+    def execution_ids():
+        sc.listenerBus().waitUntilEmpty()
+        it = store.executionsList().iterator()
+        ids = set()
+        while it.hasNext():
+            ids.add(it.next().executionId())
+        return ids
+
+    before = execution_ids()
+    result = run()
+    counts = Counter()
+    for eid in execution_ids() - before:
+        nodes = store.planGraph(eid).allNodes().iterator()
+        while nodes.hasNext():
+            counts[nodes.next().name()] += 1
+    return result, counts
+
+
+def test_parser_plans_one_python_eval_over_materialized_lines(spark, tmp_path):
+    """The split-union parse runs each Python pass once. A render union
+    the caller checkpointed is parsed with ONE ArrowEvalPython (the assist
+    branch is not cloned into the producer branches); on the production
+    path, ``parse_turtle_docs``' re-assembly MapInPandas runs once, in
+    the normalizer's checkpoint, and the parse adds the one
+    ArrowEvalPython."""
     from bop_consus_importing_rdf_spark.functions.formats import (
-        prefix_directives, ttl_line,
+        prefix_directives, ttl_grouped_docs, ttl_line,
     )
+    from bop_consus_importing_rdf_spark.sources.turtle_io import (
+        parse_turtle_docs,
+    )
+
     from .conftest import triples_df
 
     triples_df(spark, ROWS).write.mode("overwrite").parquet(
         f"{tmp_path}/t"
     )
     t = spark.read.parquet(f"{tmp_path}/t")
-    # a live multi-branch producer: one rendered branch per object kind
-    # plus the directive rows — the shape of the S10 render union
+    want = _nt(triples_df(spark, ROWS))
+    # a multi-branch producer: one rendered branch per object kind plus
+    # the directive rows — the shape of the S10 render union
     branches = [
         spark.createDataFrame(
             [(d,) for d in prefix_directives()], "value string"
@@ -145,16 +174,28 @@ def test_parser_auto_materializes_live_union_producer(spark, tmp_path):
         )
         for k in ("iri", "bnode", "literal")
     ]
-    live = branches[0]
+    union = branches[0]
     for b in branches[1:]:
-        live = live.union(b)
-    parsed = parse_turtle(live)
-    plan = parsed._jdf.queryExecution().executedPlan().toString()
-    assert len(_re.findall(r"ArrowEvalPython", plan)) == 1
-    # and the parse is still correct
-    a, b = _nt(parsed), _nt(triples_df(spark, ROWS))
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+        union = union.union(b)
+
+    cases = [
+        (lambda: parse_turtle(union.localCheckpoint(), prefixes=PREFIXES),
+         {"ArrowEvalPython": 1}),
+        (lambda: parse_turtle_docs(ttl_grouped_docs(t), prefixes=PREFIXES),
+         {"ArrowEvalPython": 1, "MapInPandas": 1}),
+    ]
+    for parse, want_evals in cases:
+        rows, nodes = _run_counting_plan_nodes(
+            spark, lambda: _nt(parse()).collect()
+        )
+        evals = {
+            k: n for k, n in nodes.items()
+            if k in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas")
+        }
+        assert evals == want_evals, nodes
+        got = spark.createDataFrame(rows, want.schema)
+        assert got.exceptAll(want).count() == 0
+        assert want.exceptAll(got).count() == 0
 
 
 def test_ttl_sentinel_bytes_take_fallback(spark):
