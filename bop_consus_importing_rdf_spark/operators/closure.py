@@ -13,17 +13,21 @@ as ONE driver-side loop over blocks of hops:
 
 - The loop probes a SLIM edge projection ``(_src, _dst)`` — two columns
   instead of the six-column statement rows, and only the follow-kind
-  statements — held as a local checkpoint. One stats job fills it and
-  sizes the two gates below; it is freed when the loop ends.
+  statements with both ends non-NULL — held as a local checkpoint. One
+  stats job fills it and sizes the two gates below; it is freed when the
+  loop ends.
 - A block is one plan: ``depth`` hop joins whose outputs are unioned and
   reduced by one ``groupBy(root, node).agg(max(_k))``, then one
   ``localCheckpoint`` and one emptiness probe of the checkpoint. Its
-  1 + 2 + … + ``depth`` hop joins all read the same checkpoint scan, so
-  AQE builds the edge broadcast (or, past the broadcast gate, the edge
-  shuffle) once per block and reuses it for the rest.
+  1 + 2 + … + ``depth`` hop joins all read the same checkpoint scan with
+  no filter of their own, so AQE builds the edge broadcast (or, past the
+  broadcast gate, the edge shuffle) once per block and reuses it for the
+  rest. The seed frontier carries the hop joins' not-null filter
+  explicitly, so the first block's ``_k = 0`` branch and its hops share
+  one shuffle of the seeds.
   Catalogue-shaped RDF is 3-4 hops deep, so it closes inside the first
   block: three driver actions in all (the stats job, the block's
-  checkpoint, its probe), which AQE runs as about ten Spark jobs. The
+  checkpoint, its probe), which AQE runs as seven to eight Spark jobs. The
   per-iteration driver actions — not data volume — dominate the loop on
   shallow graphs.
 - A node whose longest in-block path is shorter than ``depth`` had all its
@@ -102,7 +106,8 @@ def reachable_closure(
 
     ``seeds``: columns ``root, node``; usually ``root == node`` = the
     dataset subject. ``triples``: the statement table. Returns
-    ``(root, node)`` including the seeds themselves.
+    ``(root, node)`` including the seeds themselves; a seed or an edge
+    end that is NULL names no node and is dropped.
 
     Raises ``RuntimeError`` if the frontier is still non-empty after
     ``max_iters`` blocks — a silently truncated closure would quietly drop
@@ -116,9 +121,17 @@ def reachable_closure(
     # a checkpoint, not a persist: each hop join's build side is then the
     # same `Scan ExistingRDD`, so AQE plans a block's hop joins against ONE
     # broadcast (or edge shuffle) and reuses it; over a persist each hop
-    # reads its own cache scan and rebuilds the broadcast
+    # reads its own cache scan and rebuilds the broadcast. The not-null
+    # filters ride into the checkpoint's constraints, so no hop gets an
+    # inferred filter of its own; inferred ones differ between the last
+    # hop (isnotnull(_src)) and the inner hops (also isnotnull(_dst)) and
+    # would split the block's build sides across two broadcasts
     edges = (
-        triples.filter(F.col("obj_kind").isin(KIND_IRI, KIND_BNODE))
+        triples.filter(
+            F.col("obj_kind").isin(KIND_IRI, KIND_BNODE)
+            & F.col("subj").isNotNull()
+            & F.col("obj_value").isNotNull()
+        )
         .select(F.col("subj").alias("_src"), F.col("obj_value").alias("_dst"))
         .localCheckpoint(eager=False)
     )
@@ -134,7 +147,13 @@ def reachable_closure(
         dense = bool(stats["n_src"]) and stats["n"] / stats["n_src"] > _DENSE_FANOUT
         depth = _DENSE_DEPTH if dense else _DEPTH
 
-        frontier = seeds.select("root", "node").distinct()
+        # the explicit not-null is the one the first hop join infers: with
+        # it the `_k = 0` branch and the hops share one seed shuffle
+        frontier = (
+            seeds.select("root", "node")
+            .filter(F.col("node").isNotNull())
+            .distinct()
+        )
         pieces: list[DataFrame] = []
         for _ in range(max_iters):
             parts = [frontier.withColumn("_k", F.lit(0))]

@@ -14,17 +14,31 @@ The gazetteer side of the KG DAG is per run, the triples plan per bucket:
 the alias ``take``, the linking and canonical maps, the extraction
 expressions) once, before the first bucket and only if a bucket remains;
 each bucket then plans only its triples (``kg.pipeline.kg_triples``) and
-drops its extraction cache once committed.
+drops its extraction cache once its triples are written.
+
+Two buckets are in flight. A bucket costs a fixed amount of work in this
+process (planning its triples, Py4J round trips) that leaves the executor
+cores idle, so a two-thread pool plans and writes bucket b+1 while the
+calling thread commits bucket b. Commits stay serialized and in bucket order: the
+calling thread alone writes the lineage rows and appends the marker. A
+worker inherits the caller's Spark job group and tags, so the jobs it
+starts are attributed like the caller's own.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 BUCKET_COL = "conv_bucket"
+# Buckets planned and written at once. Two hide one bucket's planning
+# behind the other's write and commit; each holds an extraction cache
+# while it writes.
+_IN_FLIGHT = 2
 
 
 def with_bucket(df: DataFrame, n_buckets: int = 16) -> DataFrame:
@@ -76,6 +90,14 @@ def run_resumable(
 
     Returns the number of buckets processed this invocation.
     ``fail_after_bucket`` injects a crash after N commits (for tests).
+
+    A pool of two workers plans and writes the buckets' triples; the
+    calling thread commits them in bucket order (lineage rows, then the
+    marker append), so bucket b+1 is written while b commits. On a failure
+    — injected or real, in a worker or a commit — the queued buckets are
+    cancelled and the call waits for the writes in flight before it
+    raises. Those buckets have triples but no marker; the next run
+    replays and overwrites them.
     """
     import uuid
 
@@ -92,14 +114,31 @@ def run_resumable(
         return 0
     dictionary = build_kg_dictionary(spark, aliases)
     marker = os.path.join(out_dir, "_committed")
-    n_done = 0
-    for b in buckets:
+
+    def write_triples(b: int) -> tuple[DataFrame, str]:
         part = todo.filter(F.col(BUCKET_COL) == b).drop(BUCKET_COL)
+        triples_path = os.path.join(out_dir, f"triples/bucket={b}")
         caches: list[DataFrame] = []
-        triples = kg_triples(dictionary, part, caches=caches)
         try:
-            triples_path = os.path.join(out_dir, f"triples/bucket={b}")
-            triples.write.mode("overwrite").parquet(triples_path)
+            kg_triples(dictionary, part, caches=caches).write.mode(
+                "overwrite"
+            ).parquet(triples_path)
+        finally:
+            for df in caches:
+                df.unpersist()
+        return part, triples_path
+
+    pool = ThreadPoolExecutor(_IN_FLIGHT, thread_name_prefix="kg-bucket")
+    try:
+        # wrapped per task: each copy of the caller's job group, tags and
+        # local properties is the worker's own to change
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(write_triples), b)
+            for b in buckets
+        ]
+        n_done = 0
+        for b, future in zip(buckets, futures):
+            part, triples_path = future.result()
             # per-partition lineage rows for the bucket (north rule):
             # counted over the COMMITTED parquet, so metrics describe what
             # was durably written, not a recomputation
@@ -124,10 +163,9 @@ def run_resumable(
             spark.range(1, numPartitions=1).select(
                 F.lit(b).cast("int").alias("bucket")
             ).write.mode("append").parquet(marker)
-        finally:
-            for df in caches:
-                df.unpersist()
-        n_done += 1
-        if fail_after_bucket is not None and n_done >= fail_after_bucket:
-            raise RuntimeError(f"injected failure after bucket {b}")
-    return n_done
+            n_done += 1
+            if fail_after_bucket is not None and n_done >= fail_after_bucket:
+                raise RuntimeError(f"injected failure after bucket {b}")
+        return n_done
+    finally:
+        pool.shutdown(wait=True, cancel_futures=True)

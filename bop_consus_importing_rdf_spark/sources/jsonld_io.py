@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .rdf_io import PARSED_SCHEMA, plan_barrier
+from .rdf_io import PARSED_SCHEMA, barrier_filter, plan_barrier
 
 _JSTR = r'(?:[^"\\]|\\.)*'
 _LINE_PATTERN = (
@@ -130,7 +130,7 @@ def parse_jsonld(
         line.contains("\x01") | line.contains("\x02")
         | line.contains("\\u") | line.rlike(r'\\[^"\\/bfnrtu]')
     )
-    base = lines.filter(plan_barrier() & (stripped != ""))
+    base = lines.filter(barrier_filter(stripped != ""))
 
     # two-step clean branch: the packed pass once into an attribute, the
     # anchored inner-object extracts once into attributes, the final

@@ -43,6 +43,19 @@ def plan_barrier() -> Column:
     return F.spark_partition_id() >= F.lit(0)
 
 
+def barrier_filter(cond: Column) -> Column:
+    """A split-union parser's base filter: ``cond`` behind
+    :func:`plan_barrier` as ONE nondeterministic conjunct. Predicate
+    pushdown splits a filter into conjuncts and moves the deterministic
+    ones below a repartition, substituting the producer's projection into
+    them, so ``plan_barrier() & cond`` left ``cond`` under the exchange
+    re-evaluating the producer's expressions (a render's whole line
+    concat chain) in the filter and again in the projection. Folded into
+    one ``CASE WHEN``, the filter stays above the exchange and reads the
+    produced column."""
+    return F.when(plan_barrier(), cond).otherwise(F.lit(False))
+
+
 def fan_out_lines(lines: DataFrame) -> DataFrame:
     """The split-union parsers' fan-out guard: a narrow line stream (one
     gzip file, a few normalized documents) starves the regex parse stage,
@@ -232,14 +245,14 @@ def parse_ntriples(
 
     line = F.col(line_col)
     stripped = F.trim(line)
-    # The always-true NONDETERMINISTIC guard in the base filter keeps the
-    # branch filters above it. With an upstream exchange (a repartition,
-    # a shuffle) the two branches then share ONE reused upstream
-    # execution; without the guard, every branch predicate is pushed into
-    # each upstream union branch/scan separately and an expensive
-    # producer runs once per branch.
+    # The NONDETERMINISTIC base filter keeps itself and the branch filters
+    # above it. With an upstream exchange (a repartition, a shuffle) the
+    # two branches then share ONE reused upstream execution; without the
+    # guard, every branch predicate is pushed into each upstream union
+    # branch/scan separately and an expensive producer runs once per
+    # branch.
     base = lines.filter(
-        plan_barrier() & (stripped != "") & ~stripped.startswith("#")
+        barrier_filter((stripped != "") & ~stripped.startswith("#"))
     )
     # assist-branch routing (see docstring): raw sentinel bytes would
     # corrupt the packed split / replace-chain; \u \U need Python. Four

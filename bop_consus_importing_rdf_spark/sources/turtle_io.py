@@ -63,7 +63,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..vocab import RDF_TYPE, XSD_NS
-from .rdf_io import PARSED_SCHEMA, fan_out_lines, plan_barrier
+from .rdf_io import (
+    PARSED_SCHEMA,
+    barrier_filter,
+    fan_out_lines,
+    plan_barrier,
+)
 
 XSD_BOOLEAN = XSD_NS + "boolean"
 XSD_INTEGER = XSD_NS + "integer"
@@ -464,10 +469,11 @@ def _parse_statement_lines(
         | line.contains("\\u") | line.contains("\\U")
     )
     base = lines.filter(
-        plan_barrier()
-        & (stripped != "")
-        & ~stripped.startswith("#")
-        & ~stripped.rlike(_DIRECTIVE_FILTER)
+        barrier_filter(
+            (stripped != "")
+            & ~stripped.startswith("#")
+            & ~stripped.rlike(_DIRECTIVE_FILTER)
+        )
     )
     step = base.filter(~needs_py).select(
         *carry,
@@ -1386,12 +1392,13 @@ def parse_trig(
         .filter(
             # the barrier keeps the branch filters above from pushing
             # below the per-document explode
-            plan_barrier()
-            & F.col("_hdr").isNull()
-            & (F.trim("_line") != "")
-            & (F.trim("_line") != "}")
-            & ~F.trim("_line").startswith("#")
-            & ~F.trim("_line").rlike(_DIRECTIVE_FILTER)
+            barrier_filter(
+                F.col("_hdr").isNull()
+                & (F.trim("_line") != "")
+                & (F.trim("_line") != "}")
+                & ~F.trim("_line").startswith("#")
+                & ~F.trim("_line").rlike(_DIRECTIVE_FILTER)
+            )
         )
     )
     # Sentinel-byte fallback, same split-union routing as parse_turtle:

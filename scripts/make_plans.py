@@ -42,8 +42,13 @@ COMMENTARY = {
         "(one loop of 4-hop blocks; a block is ONE plan whose ten hop joins "
         "are broadcast-hash probes of the slim edge projection, held as a "
         "local checkpoint so that all ten read one scan and AQE builds ONE "
-        "edge broadcast per block and reuses it for the other nine; one "
-        "groupBy exchange, one checkpoint; the fixture graph closes inside "
+        "edge broadcast per block and reuses it for the other nine — the "
+        "checkpoint's not-null constraints leave no hop an inferred filter "
+        "of its own, and the seed frontier's explicit not-null filter lets "
+        "the block's k=0 branch and its hops share one seed shuffle "
+        "(test_split.py::test_closure_block_plans_one_broadcast_and_one_"
+        "seed_shuffle); one groupBy exchange, one checkpoint; the fixture "
+        "graph closes inside "
         "the first block), so the counts below cover the final consumer plan "
         "reading the checkpointed tables. The dataset-subject scan and the "
         "identifier aggregation are FUSED into one filtered groupBy; the "
@@ -88,8 +93,13 @@ COMMENTARY = {
         "parser materializes nothing: this evidence query feeds the render "
         "projection over the checkpointed fixture graph, so both branches "
         "read the graph's Scan ExistingRDD and no render union is cloned "
-        "into them. The branch filters sit above a SPARK_PARTITION_ID() >= 0 "
-        "barrier filter (Spark 4 folds the former rand() > -1 guard away)."
+        "into them. The base filter is ONE nondeterministic conjunct, "
+        "CASE WHEN SPARK_PARTITION_ID() >= 0 THEN <blank/comment tests> "
+        "ELSE false (Spark 4 folds the former rand() > -1 guard away), so "
+        "neither it nor the branch filters above it are pushed below an "
+        "upstream exchange, where the producer's projection would be "
+        "substituted into them (asserted over a repartitioned render by "
+        "test_rdf_io.py::test_base_filter_stays_above_upstream_repartition)."
     ),
     "simhash_near_pairs": (
         "64-bit SimHash block LSH: token explode + two aggregations build "

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import gzip
+import re
 
 from pyspark.sql import functions as F
 
@@ -135,3 +136,23 @@ def test_materialize_folds_fanout_single_checkpoint(spark):
         assert lines.select("value").first().value == (
             "<urn:a> <urn:p> <urn:b> ."
         )
+
+
+def test_base_filter_stays_above_upstream_repartition(spark):
+    """The split-union base filter is one nondeterministic conjunct, so
+    predicate pushdown leaves all of it above an upstream repartition,
+    reading the produced line. Left as separate conjuncts, the blank and
+    comment tests were pushed under the exchange with the render's whole
+    line expression substituted into them."""
+    src, lines = _render(spark)
+    out = parse_ntriples(lines.repartition(8))
+    assert sorted(out.collect()) == sorted(src.collect())
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    cuts = [m.start() for m in re.finditer(r"Repartition 8", plan)]
+    assert len(cuts) == 2, plan  # one per parse branch
+    for i in cuts:
+        above = plan[:i].splitlines()[-2]
+        assert "SPARK_PARTITION_ID() >= 0" in above and "trim(value" in above
+        # the subtree under the exchange: the render projection down to
+        # the fixture's scan
+        assert "Filter" not in plan[i:plan.index("LogicalRDD", i)], plan

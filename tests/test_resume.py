@@ -90,6 +90,10 @@ def _persistent_rdds(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
+def _persisted_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def _four_bucket_corpus(spark):
     from bop_consus_importing_rdf_spark.plans.resume import BUCKET_COL, with_bucket
 
@@ -158,3 +162,85 @@ def test_committed_buckets_reads_local_data_marker(spark, tmp_path):
         .select("bucket").distinct().collect()
     }
     assert done == {1, 2, 3}
+
+
+def test_run_resumable_jobs_stay_in_caller_job_group(spark, tmp_path):
+    """The bucket workers inherit the caller's job group: every Spark job
+    the run starts is in that group, none lands ungrouped."""
+    out_dir = str(tmp_path / "kg_out")
+    t = _four_bucket_corpus(spark)
+    aliases = alias_table(spark)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "resume-caller-group"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        assert run_resumable(spark, t, aliases, out_dir, n_buckets=4) == 4
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert tracker.getJobIdsForGroup(group)
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+
+
+def test_failure_commits_in_order_and_replay_overwrites(spark, tmp_path):
+    """A failure after the first commit leaves one marker, lineage only for
+    that bucket and no retained cache, although later buckets were being
+    written; the restart replays the other three buckets and yields the
+    single-shot triple set, each triple once."""
+    from bop_consus_importing_rdf_spark.kg.pipeline import (
+        build_kg,
+        release_extraction_caches,
+    )
+
+    out_dir = str(tmp_path / "kg_out")
+    t = _four_bucket_corpus(spark)
+    aliases = alias_table(spark)
+
+    before = _persisted_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_resumable(spark, t, aliases, out_dir, n_buckets=4, fail_after_bucket=1)
+    assert not _persisted_rdd_ids(spark) - before
+    assert spark.read.parquet(f"{out_dir}/_committed").count() == 1
+    committed = committed_buckets(spark, out_dir)
+    lineage = spark.read.parquet(f"{out_dir}/lineage_metrics")
+    assert {r.bucket for r in lineage.select("bucket").distinct().collect()} == (
+        committed
+    )
+
+    assert run_resumable(spark, t, aliases, out_dir, n_buckets=4) == 3
+    assert not _persisted_rdd_ids(spark) - before
+    cols = ["conv_id", "subj", "pred", "obj_value", "obj_kind"]
+    got = spark.read.parquet(f"{out_dir}/triples").select(cols)
+    ref = build_kg(spark, t, aliases)["triples"].select(cols)
+    assert got.count() == ref.count()
+    assert got.exceptAll(ref).count() == 0
+    assert ref.exceptAll(got).count() == 0
+    release_extraction_caches()
+
+
+def test_worker_failure_keeps_earlier_commits(spark, tmp_path, monkeypatch):
+    """A Spark job that fails while writing bucket 2's triples raises from
+    the run once buckets 0 and 1 have committed; nothing after it commits
+    and no extraction cache is left behind."""
+    from bop_consus_importing_rdf_spark.kg import pipeline
+
+    original = pipeline.kg_triples
+
+    def failing(dictionary, transcripts, caches=None):
+        triples = original(dictionary, transcripts, caches=caches)
+        in_2 = F.pmod(F.xxhash64("conv_id"), F.lit(4)) == 2
+        return triples.withColumn(
+            "conv_id",
+            F.when(in_2, F.raise_error(F.lit("bucket 2 cannot be written")))
+            .otherwise(F.col("conv_id")),
+        )
+
+    monkeypatch.setattr(pipeline, "kg_triples", failing)
+    out_dir = str(tmp_path / "kg_out")
+    t = _four_bucket_corpus(spark)
+    before = _persisted_rdd_ids(spark)
+    with pytest.raises(Exception, match="bucket 2 cannot be written"):
+        run_resumable(spark, t, alias_table(spark), out_dir, n_buckets=4)
+    assert committed_buckets(spark, out_dir) == {0, 1}
+    assert not _persisted_rdd_ids(spark) - before

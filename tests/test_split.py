@@ -205,7 +205,7 @@ def test_closure_releases_edge_cache(spark):
 
 def test_closure_block_broadcasts_edges_once(spark):
     """A block's hop joins share one edge broadcast. A one-block closure
-    (a 3-hop chain) runs 11 Spark jobs, counting the final ``count``; a
+    (a 3-hop chain) runs 9 Spark jobs, counting the final ``count``; a
     broadcast per hop join would add nine more. The bound leaves room for
     the job count's run-to-run flip."""
     t, seeds = _chain(spark, 3)
@@ -217,6 +217,38 @@ def test_closure_block_broadcasts_edges_once(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 14
+
+
+def test_closure_block_plans_one_broadcast_and_one_seed_shuffle(spark, monkeypatch):
+    """In the executed plan of a one-block closure (a 3-hop chain), the ten
+    hop joins build ONE edge broadcast and the ``_k = 0`` branch and the
+    hops read ONE shuffle of the seeds; every other exchange is reused.
+    The block's own groupBy shuffle is the only other exchange."""
+    t, seeds = _chain(spark, 3)
+    blocks = []
+    frame_cls = type(spark.range(0))
+    checkpoint = frame_cls.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        if "_k" in self.columns:
+            blocks.append(self)
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
+    assert reachable_closure(t, seeds).count() == 4
+    assert len(blocks) == 1
+    plan = blocks[0]._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    lines = plan.split("== Initial Plan ==")[0].splitlines()
+    # a reused exchange prints as "ReusedExchange [...], <exchange>", so
+    # "+- <exchange>" matches only the exchanges that run
+    broadcasts = [ln for ln in lines if "+- BroadcastExchange" in ln]
+    shuffles = [
+        i for i, ln in enumerate(lines) if "+- Exchange hashpartitioning" in ln
+    ]
+    seed_shuffles = [i for i in shuffles if "partial_max" not in lines[i + 1]]
+    assert len(broadcasts) == 1, plan
+    assert len(shuffles) == 2 and len(seed_shuffles) == 1, plan
 
 
 def _pairs(n):
