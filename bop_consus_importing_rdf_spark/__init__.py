@@ -9,7 +9,7 @@ RDF catalogue splitter, see /root/reference) as an idiomatic Spark batch DAG:
 - ``operators/``  relational operators (cleanup filters, reachability closure,
   manifest aggregation, dedup family, similarity search, text analysis).
 - ``kg/``         the north-rule KG pipeline over conversation transcripts:
-  batched mention detection (pandas UDF), entity linking (broadcast join),
+  mention detection (JVM regex), entity linking (broadcast join),
   MinHash blocking, connected-components canonicalization, graph materialize.
 - ``sources/``    table catalog + write/resume helpers.
 - ``plans/``      per-partition lineage & metrics.

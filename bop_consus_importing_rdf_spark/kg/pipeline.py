@@ -30,11 +30,14 @@ DataFrames, so a caller that commits one slice at a time
 once per slice. The extraction path moves the corpus through exactly one
 wide shuffle (stable ordering) and no Python worker; only relation
 triples — the one kind that can duplicate across turns — pay a dedup
-shuffle. ``rewrite_canonical`` remains the at-scale path for entity
-dictionaries too large to compose into the linking map. Skew: the one
-wide shuffle is keyed on ``conv_id``, so a hot conversation's turns share
-a partition (bounded by its turn count, not the corpus); the joins after
-it rely on AQE's skew-join split.
+shuffle. The extraction is materialized once, as a local checkpoint that
+its branches read; a caller that passes a ``checkpoints`` list frees it
+after the write, otherwise the ContextCleaner does, so no run leaves
+blocks behind in the session. ``rewrite_canonical`` remains the at-scale
+path for entity dictionaries too large to compose into the linking map.
+Skew: the one wide shuffle is keyed on ``conv_id``, so a hot
+conversation's turns share a partition (bounded by its turn count, not
+the corpus); the joins after it rely on AQE's skew-join split.
 """
 
 from __future__ import annotations
@@ -42,7 +45,6 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -76,10 +78,11 @@ def stable_turns(transcripts: DataFrame) -> DataFrame:
     (conv_id, turn_idx) double-delivery deterministically, then order.
 
     Partitions by ``conv_id`` ONLY (turn dedup via lag over the in-conv
-    sort) — so this is the single wide shuffle of the whole extraction
-    path: the downstream conv-keyed dedup aggregation and per-conversation
-    payload aggregation both satisfy their clustering requirement from
-    this partitioning and run exchange-free.
+    sort), so this is the one wide shuffle of the corpus on the
+    extraction path. The extraction's local checkpoint does not carry
+    this partitioning, so the conv-keyed aggregations behind it take
+    their own exchanges; the relation dedup's moves only relation rows,
+    map-side combined.
     """
     w = Window.partitionBy("conv_id").orderBy(
         F.col("turn_idx").asc(),
@@ -176,29 +179,12 @@ def _best_alias_map_rows(rows) -> dict[str, str]:
     return {a: e for a, (_, _, e) in best.items()}
 
 
-#: the persisted extraction frames retained by
-#: :func:`extract_candidate_triples` — see :func:`release_extraction_caches`
-_EXTRACTION_CACHES: list[DataFrame] = []
-
-
 def release_extraction_caches() -> int:
-    """Unpersist every extraction cache retained by
-    :func:`extract_candidate_triples` (round-5 verdict hygiene #1: the
-    default small-dim hot path persists its fused-extraction frame so both
-    consumer branches scan it once, and the blocks otherwise live until a
-    session-wide ``clearCache``). Long-lived sessions that call
-    ``build_kg`` repeatedly should call this between runs — derived
-    frames of a released run recompute instead of failing. Returns the
-    number of frames released."""
-    released = 0
-    for df in _EXTRACTION_CACHES:
-        try:
-            df.unpersist()
-            released += 1
-        except Exception:
-            pass  # session already stopped — nothing to release
-    _EXTRACTION_CACHES.clear()
-    return released
+    """A no-op kept for ``perfbench/worker.py``, which calls it between
+    jobs and is its only reason to exist: the extraction holds no frame
+    registry any more (its local checkpoints go to the caller's
+    ``checkpoints`` list or to the ContextCleaner). Returns 0."""
+    return 0
 
 
 _STRUCT_ARR_TYPE = (
@@ -286,7 +272,7 @@ def extraction_columns(
 def extract_candidate_triples(
     turns: DataFrame,
     columns: ExtractionColumns,
-    caches: list[DataFrame] | None = None,
+    checkpoints: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Per-turn triple extraction: mention, relation, year, text, type rows.
 
@@ -301,26 +287,23 @@ def extract_candidate_triples(
       conversation's turns → they alone pay the conv-level dedup shuffle,
       a few % of the bytes.
 
-    The fused extraction frame is persisted and appended to ``caches``
-    (default: the module registry :func:`release_extraction_caches`
-    drains); a caller that passes its own list owns the unpersist.
+    The fused extraction frame is a lazy local checkpoint, filled by the
+    first job that reads it. It is appended to ``checkpoints`` when given,
+    for the caller to free with ``operators.closure.release_checkpoints``
+    once the result is written; otherwise the ContextCleaner frees it.
     """
-    # persisted: the per-turn branch and the relation branch both scan this
-    # — without persistence the extraction subtree (the template pass, its
-    # rlike, the trie mention pass and the group strips over the corpus
-    # text) would execute twice (MEMORY_AND_DISK: spills rather than
-    # OOMs). A persist, NOT a localCheckpoint: the columnar cache lets each
-    # branch prune to the columns it reads (the rel branch never touches
-    # text), which a row-RDD checkpoint cannot — measured ~1s on the bench
-    # corpus. Projected to the three columns the consumers read —
-    # role/tool/ts would otherwise sit in every cached block behind the
-    # column-pruning barrier a persist creates.
+    # checkpointed: the per-turn branch and the relation branch both read
+    # this, so the extraction subtree (the template pass, its rlike, the
+    # trie mention pass and the group strips over the corpus text) runs
+    # once. Projected to the three columns the consumers read, so
+    # role/tool/ts are not stored in its blocks.
     with_m = (
         turns.select("conv_id", "turn_idx", "text")
         .transform(columns.add_mr)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
-    (_EXTRACTION_CACHES if caches is None else caches).append(with_m)
+    if checkpoints is not None:
+        checkpoints.append(with_m)
     per_turn = with_m.select(
         "conv_id", "turn_idx", columns.turn_rows
     ).select("conv_id", "turn_idx", "t.*")
@@ -338,13 +321,17 @@ def extract_candidate_triples(
 
 
 def extract_candidate_triples_join(
-    turns: DataFrame, aliases: DataFrame
+    turns: DataFrame,
+    aliases: DataFrame,
+    checkpoints: list[DataFrame] | None = None,
 ) -> DataFrame:
     """At-scale twin of :func:`extract_candidate_triples`: the gazetteer
     stays a DataFrame end to end (no ``alias_list`` / ``best_alias_map``
     driver collects) — tokenize + candidate join + per-turn longest-match
     verification, see ``kg/matcher.py``. Emits best-alias entity URIs;
     ``build_kg``'s at-scale branch follows with ``rewrite_canonical``.
+    Its enriched-turns checkpoint goes to ``checkpoints`` by the same rule
+    as :func:`extract_candidate_triples`.
 
     Triple-set equality with the regex path is asserted by
     ``test_kg_pipeline::test_build_kg_at_scale_path_matches_broadcast_path``
@@ -370,14 +357,11 @@ def extract_candidate_triples_join(
             ).alias("_mentions"),
         )
         .transform(with_relation_candidates)
-        # localCheckpoint, not persist (ADVICE r4): four branches consume
-        # this subtree, so it must materialize once — but a persist here
-        # would pin executor blocks for the session (the caller can't
-        # unpersist a frame buried inside the returned union's lineage).
-        # Checkpoint blocks are reclaimed by the ContextCleaner when the
-        # frame is garbage-collected; no manual bookkeeping leaks.
+        # four branches read this subtree, so it materializes once
         .localCheckpoint()
     )
+    if checkpoints is not None:
+        checkpoints.append(enriched)
 
     turn_uri = _turn_uri()
     # fixed per-turn rows need no gazetteer at all
@@ -689,18 +673,25 @@ def build_kg_dictionary(
 def kg_triples(
     dictionary: KGDictionary,
     transcripts: DataFrame,
-    caches: list[DataFrame] | None = None,
+    checkpoints: list[DataFrame] | None = None,
 ) -> DataFrame:
     """The per-slice side of :func:`build_kg`: the triples plan for
     ``transcripts`` under a prebuilt dictionary — stable ordering,
-    extraction, canonical linking and the ``dataset_id`` column. Plans
-    DataFrames only; ``caches`` is passed on to
-    :func:`extract_candidate_triples`."""
+    extraction, canonical linking and the ``dataset_id`` column.
+
+    The broadcast-scale path only plans: its extraction checkpoint is
+    lazy. The at-scale path runs the matcher's alias validation job and
+    its eager checkpoint here. Either path appends its one extraction
+    checkpoint to ``checkpoints`` when given."""
     turns = stable_turns(transcripts)
     if dictionary.columns is not None:
-        triples = extract_candidate_triples(turns, dictionary.columns, caches)
+        triples = extract_candidate_triples(
+            turns, dictionary.columns, checkpoints
+        )
     else:
-        raw = extract_candidate_triples_join(turns, dictionary.aliases)
+        raw = extract_candidate_triples_join(
+            turns, dictionary.aliases, checkpoints
+        )
         triples = rewrite_canonical(raw, dictionary.canon)
     return triples.withColumn("dataset_id", _conv_uri())
 

@@ -14,7 +14,8 @@ The gazetteer side of the KG DAG is per run, the triples plan per bucket:
 the alias ``take``, the linking and canonical maps, the extraction
 expressions) once, before the first bucket and only if a bucket remains;
 each bucket then plans only its triples (``kg.pipeline.kg_triples``) and
-drops its extraction cache once its triples are written.
+frees its extraction checkpoint (``operators.closure.release_checkpoints``)
+once its triples are written.
 
 Two buckets are in flight. A bucket costs a fixed amount of work in this
 process (planning its triples, Py4J round trips) that leaves the executor
@@ -36,8 +37,8 @@ from pyspark.util import inheritable_thread_target
 
 BUCKET_COL = "conv_bucket"
 # Buckets planned and written at once. Two hide one bucket's planning
-# behind the other's write and commit; each holds an extraction cache
-# while it writes.
+# behind the other's write and commit; each holds an extraction
+# checkpoint while it writes.
 _IN_FLIGHT = 2
 
 
@@ -102,6 +103,7 @@ def run_resumable(
     import uuid
 
     from ..kg.pipeline import build_kg_dictionary, kg_triples
+    from ..operators.closure import release_checkpoints
     from .lineage import stage_metrics, union_metrics
 
     run_id = str(uuid.uuid4())
@@ -118,14 +120,13 @@ def run_resumable(
     def write_triples(b: int) -> tuple[DataFrame, str]:
         part = todo.filter(F.col(BUCKET_COL) == b).drop(BUCKET_COL)
         triples_path = os.path.join(out_dir, f"triples/bucket={b}")
-        caches: list[DataFrame] = []
+        checkpoints: list[DataFrame] = []
         try:
-            kg_triples(dictionary, part, caches=caches).write.mode(
+            kg_triples(dictionary, part, checkpoints=checkpoints).write.mode(
                 "overwrite"
             ).parquet(triples_path)
         finally:
-            for df in caches:
-                df.unpersist()
+            release_checkpoints(checkpoints)
         return part, triples_path
 
     pool = ThreadPoolExecutor(_IN_FLIGHT, thread_name_prefix="kg-bucket")

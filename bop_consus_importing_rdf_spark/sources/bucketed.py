@@ -45,10 +45,6 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def bucketed_join_is_exchange_free(
     spark: SparkSession, left_table: str, right_table: str, on: str
 ) -> bool:

@@ -10,12 +10,16 @@ Jena (``JenaUtils.read``, ``Flows.kt:66-77``). Here:
 - **pre-process**: column-expression fix-ups (BOM strip, control-char
   removal, space-in-IRI %-encoding) — reference behavior *(ext)*, applied
   before parse exactly like the temp-file rewrite.
-- **parse**: an Arrow-batched ``mapInPandas`` N-Triples parser (no RDF lib
-  in this container; N-Triples is the reference's default output syntax and
-  our canonical comparison form). The parser is the exact inverse of
-  ``functions/ntriples.py`` — round-trip tested. Malformed lines get
-  ``obj_kind = NULL`` so callers can count rejects into lineage_metrics
-  (the reference rethrows with address context, ``Flows.kt:75-77``).
+- **parse**: the split-union N-Triples parser :func:`parse_ntriples`
+  (N-Triples is the reference's default output syntax and our canonical
+  comparison form). Clean lines take a JVM plan: one packed
+  ``regexp_replace`` pass and SQL unescaping, codegen'd end to end. Lines
+  SQL cannot parse exactly (raw sentinel bytes, ``\\u``/``\\U`` escapes) take
+  an assist branch: the exact Python parser in one Arrow-batched pandas
+  UDF. The parser is the exact inverse of ``functions/ntriples.py`` —
+  round-trip tested. Malformed lines get ``obj_kind = NULL`` so callers
+  can count rejects into lineage_metrics (the reference rethrows with
+  address context, ``Flows.kt:75-77``).
 """
 
 from __future__ import annotations
@@ -156,15 +160,6 @@ def pre_process(line: Column) -> Column:
     two halves."""
     return pre_process_iri_spaces(pre_process_controls(line))
 
-
-# Java-regex spelling of _NT_LINE (no named groups) for regexp_extract
-_NT_PATTERN = (
-    r"^\s*(<[^>]*>|_:\S+)\s+"
-    r"<([^>]*)>\s+"
-    r'(<[^>]*>|_:\S+|"(?:[^"\\]|\\.)*"'
-    r"(?:@[A-Za-z][A-Za-z0-9-]*|\^\^<[^>]*>)?)"
-    r"\s*\.\s*$"
-)
 
 # 7-group packed spelling: the object alternation captures each variant in
 # its OWN group (3 = bracketed IRI, 4 = bnode, 5 = quoted literal incl.

@@ -276,20 +276,16 @@ COMMENTARY = {
     ),
     "kg_transcripts_e2e": (
         "Transcript → KG triples (build_kg over the literal e2e corpus): "
-        "the stable_turns window is the one conv_id shuffle of the "
-        "extraction path (the second exchange is the query's own input "
-        "repartition; the counts below list both once per cache reader); "
-        "the fused mention/relation extraction is persisted "
-        "(InMemoryRelation) and read by the per-turn explode and by the "
-        "relation branch, whose conv-level dedup aggregates exchange-free on "
-        "the window's partitioning. Inside the cached plan the JVM "
-        "extraction is three stacked codegen'd Projects — packed template "
-        "regexp_replace + split, template rlike and trie "
-        "regexp_extract_all; the two whitespace strips; the year and "
-        "gazetteer-membership check building _mr. Each stage reads the one "
-        "below more than once, so CollapseProject keeps them apart and the "
-        "cached plan holds 3 regexp_replace and 1 split per turn (59 and 48 "
-        "when the extraction was one inlined Column tree)."
+        "the fused mention/relation extraction is a local checkpoint "
+        "(Scan ExistingRDD) that two branches read, the per-turn explode "
+        "and the relation branch. The checkpoint's RDD holds the "
+        "stable_turns window (the one conv_id shuffle of the corpus) and "
+        "the query's own input repartition, so neither exchange shows "
+        "below. It carries no partitioning, so the relation dedup takes "
+        "its own exchange, which moves only relation rows, combined "
+        "map-side by the partial min. That the JVM extraction runs each "
+        "regex once per turn (3 regexp_replace in its optimized plan) is "
+        "pinned by test_mentions_jvm's staged-extraction tests."
     ),
 }
 

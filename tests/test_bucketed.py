@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 
 from bop_consus_importing_rdf_spark.sources.bucketed import (
     bucketed_join_is_exchange_free,
-    read_table,
     write_bucketed,
 )
 
@@ -32,8 +31,8 @@ def test_bucketed_join_drops_exchanges(spark, tmp_path):
         )
 
         # the join itself is correct…
-        joined = read_table(spark, "bkt.triples_b").join(
-            read_table(spark, "bkt.nodes_b"), "subj"
+        joined = spark.table("bkt.triples_b").join(
+            spark.table("bkt.nodes_b"), "subj"
         )
         assert joined.count() == 5000
 
@@ -100,7 +99,7 @@ def test_split_probe_side_exchange_free_over_bucketed(spark, tmp_path):
             )
             return plan.count("Exchange hashpartitioning")
 
-        assert n_exchanges(read_table(spark, "bkt2.triples_b")) == 1
+        assert n_exchanges(spark.table("bkt2.triples_b")) == 1
         assert n_exchanges(spark.read.parquet(f"{tmp_path}/plain_t")) == 2
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)

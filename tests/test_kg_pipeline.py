@@ -18,8 +18,9 @@ from bop_consus_importing_rdf_spark.kg.pipeline import (
     PRED_MENTIONS,
     PRED_RELEASED,
     build_kg,
+    build_kg_dictionary,
     canonical_entity_map,
-    release_extraction_caches,
+    stable_turns,
 )
 from bop_consus_importing_rdf_spark.kg.synth import (
     _sql_string,
@@ -176,24 +177,23 @@ def test_build_kg_end_to_end(spark, aliases):
 
 def test_build_kg_extraction_runs_no_python_udf(spark, aliases, monkeypatch):
     """Extraction has one engine, the JVM one, whatever the host: with
-    far more cores than task slots the triples plan still holds no Python
-    UDF evaluation."""
+    far more cores than task slots the extraction frame build_kg
+    checkpoints still holds no Python UDF evaluation."""
     import os
 
     monkeypatch.setattr(os, "cpu_count", lambda: 64)
     t = synth_transcripts(spark, n_conv=4, seed=5)
-    try:
-        plan = (
-            build_kg(spark, t, aliases)["triples"]
-            ._jdf.queryExecution()
-            .optimizedPlan()
-            .toString()
-        )
-    finally:
-        release_extraction_caches()
+    columns = build_kg_dictionary(spark, aliases).columns
+    plan = (
+        stable_turns(t)
+        .transform(columns.add_mr)
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
     assert "ArrowEvalPython" not in plan
     assert "BatchEvalPython" not in plan
-    assert "regexp_extract_all" in plan  # the cached extraction is printed
+    assert "regexp_extract_all" in plan
 
 
 def test_per_turn_text_equality_under_stable_ordering(spark, aliases):

@@ -1,6 +1,5 @@
 """Session-collision hardening of oracle.py's module memo caches and the
-no-storage-leak contract of repeated build_kg calls (round-5 verdict
-"What's wrong" #1/#2)."""
+no-storage-leak contract of the kg extraction's checkpoints."""
 
 from __future__ import annotations
 
@@ -59,36 +58,47 @@ def test_graph_memo_survives_clear_cache(spark):
     assert "Union" not in plan, plan
 
 
-def test_build_kg_extraction_caches_are_releasable(spark):
-    """Repeated build_kg calls must not accumulate pinned blocks for the
-    session lifetime: every retained extraction persist is registered so
-    release_extraction_caches() drops them all without a session-wide
-    clearCache (round-5 verdict hygiene #1)."""
+def test_kg_triples_extraction_checkpoints_are_caller_owned(spark):
+    """On both dictionary paths each kg_triples call appends its one
+    extraction checkpoint to the caller's list, and releasing that list
+    after the write leaves no persisted RDD behind; the module keeps no
+    frame list of its own."""
     from bop_consus_importing_rdf_spark.kg import pipeline
     from bop_consus_importing_rdf_spark.kg.pipeline import (
-        build_kg,
-        release_extraction_caches,
+        build_kg_dictionary,
+        kg_triples,
     )
     from bop_consus_importing_rdf_spark.kg.synth import (
         alias_table,
         synth_transcripts,
     )
+    from bop_consus_importing_rdf_spark.operators.closure import (
+        release_checkpoints,
+    )
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
     aliases = alias_table(spark)
     transcripts = synth_transcripts(spark, n_conv=50, seed=3)
-
-    release_extraction_caches()  # clean slate
-    outs = []
-    for _ in range(3):
-        out = build_kg(spark, transcripts, aliases)
-        out["triples"].write.format("noop").mode("overwrite").save()
-        outs.append(out)  # keep frames alive — the realistic leak shape
-    live = list(pipeline._EXTRACTION_CACHES)
-    assert len(live) == 3, "each build_kg run should register its persist"
-    for df in live:
-        assert df.storageLevel.useMemory  # still pinned while held
-    assert release_extraction_caches() == 3
-    for out in outs:
-        # released runs still COMPUTE correctly (they just recompute)
-        assert out["triples"].limit(1).count() >= 0
-    assert not pipeline._EXTRACTION_CACHES  # registry drained
+    for threshold in (50_000, 0):  # broadcast-scale, then at-scale
+        dictionary = build_kg_dictionary(
+            spark, aliases, small_dim_threshold=threshold
+        )
+        assert (dictionary.columns is None) == (threshold == 0)
+        before = persisted()
+        ck = []
+        for n in (1, 2):
+            triples = kg_triples(dictionary, transcripts, checkpoints=ck)
+            assert len(ck) == n
+            triples.write.format("noop").mode("overwrite").save()
+        rdd_ids = {
+            df._jdf.queryExecution().analyzed().rdd().id() for df in ck
+        }
+        assert rdd_ids <= persisted()  # held until the caller frees them
+        release_checkpoints(ck)
+        assert not persisted() - before
+    assert not [
+        name for name, value in vars(pipeline).items()
+        if isinstance(value, list)
+    ]

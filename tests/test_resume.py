@@ -180,7 +180,10 @@ def test_run_resumable_jobs_stay_in_caller_job_group(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert tracker.getJobIdsForGroup(group)
-    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    # past spark.ui.retainedJobs the tracker drops its oldest jobs in
+    # batches, so ungrouped ids from before the run may vanish; none may
+    # appear
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
 
 
 def test_failure_commits_in_order_and_replay_overwrites(spark, tmp_path):
@@ -188,10 +191,7 @@ def test_failure_commits_in_order_and_replay_overwrites(spark, tmp_path):
     that bucket and no retained cache, although later buckets were being
     written; the restart replays the other three buckets and yields the
     single-shot triple set, each triple once."""
-    from bop_consus_importing_rdf_spark.kg.pipeline import (
-        build_kg,
-        release_extraction_caches,
-    )
+    from bop_consus_importing_rdf_spark.kg.pipeline import build_kg
 
     out_dir = str(tmp_path / "kg_out")
     t = _four_bucket_corpus(spark)
@@ -216,7 +216,6 @@ def test_failure_commits_in_order_and_replay_overwrites(spark, tmp_path):
     assert got.count() == ref.count()
     assert got.exceptAll(ref).count() == 0
     assert ref.exceptAll(got).count() == 0
-    release_extraction_caches()
 
 
 def test_worker_failure_keeps_earlier_commits(spark, tmp_path, monkeypatch):
@@ -227,8 +226,8 @@ def test_worker_failure_keeps_earlier_commits(spark, tmp_path, monkeypatch):
 
     original = pipeline.kg_triples
 
-    def failing(dictionary, transcripts, caches=None):
-        triples = original(dictionary, transcripts, caches=caches)
+    def failing(dictionary, transcripts, checkpoints=None):
+        triples = original(dictionary, transcripts, checkpoints=checkpoints)
         in_2 = F.pmod(F.xxhash64("conv_id"), F.lit(4)) == 2
         return triples.withColumn(
             "conv_id",
