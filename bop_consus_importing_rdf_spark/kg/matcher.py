@@ -107,14 +107,17 @@ def best_alias_entities(
     return best.select(*cols)
 
 
-def turn_candidate_aliases(
+def with_matched_mentions(
     turns: DataFrame, match_table: DataFrame
 ) -> DataFrame:
-    """``(conv_id, turn_idx, cand_aliases)`` for turns with ≥1 candidate.
-
-    Tokens are DISTINCT per turn before the join (a hot word repeated in
-    one turn joins once), and the output aggregates back to one row per
-    turn — the exploded token stream never leaves this function."""
+    """``turns`` (``conv_id, turn_idx, text``, …) plus ``mentions``: the
+    matched aliases in scan order, as :func:`~.mentions.detect_mentions`
+    finds them with the whole gazetteer. The join matcher in one place:
+    each turn's distinct tokens join ``match_table``
+    (:func:`alias_match_table`) on the first token — a hot word repeated
+    in one turn joins once — and aggregate back to one candidate set per
+    turn, which :func:`mentions_from_candidates` verifies. Turns without
+    a candidate keep their row with an empty array."""
     toks = turns.select(
         "conv_id",
         "turn_idx",
@@ -122,10 +125,18 @@ def turn_candidate_aliases(
             F.array_distinct(F.split(F.coalesce("text", F.lit("")), _WORD_SPLIT))
         ).alias("first_token"),
     ).filter(F.col("first_token") != "")
-    return (
+    cands = (
         toks.join(match_table, "first_token")
         .groupBy("conv_id", "turn_idx")
         .agg(F.collect_set("alias").alias("cand_aliases"))
+    )
+    return (
+        turns.join(cands, ["conv_id", "turn_idx"], "left")
+        .withColumn(
+            "mentions",
+            mentions_from_candidates(F.col("text"), F.col("cand_aliases")),
+        )
+        .drop("cand_aliases")
     )
 
 

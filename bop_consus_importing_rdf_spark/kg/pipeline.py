@@ -19,12 +19,12 @@ from ``ImportingRdfVerticle.kt:84-96`` incl. duplicates-kept (J4).
 
 Scale notes: the work splits into a per-run dictionary and a per-slice
 plan. :func:`build_kg_dictionary` does everything that depends on the
-gazetteer alone, once: one ``take`` decides small vs at-scale, and the
-small branch turns the rows into the linking map (canonicalization
-composed in: MinHash→LSH→Jaccard→CC over the gazetteer, exact on the
-driver) and the extraction ``Column``s; the at-scale branch holds the
-distributed canonical map instead, so its driver-side CC fixpoint
-(O(log d) iterations) also runs once. :func:`kg_triples` then only plans
+gazetteer alone, once: :func:`small_gazetteer_rows` decides
+broadcast-scale vs at-scale, and the broadcast branch turns its rows into
+the linking map (canonicalization composed in: MinHash→LSH→Jaccard→CC
+over the gazetteer, exact on the driver) and the extraction ``Column``s;
+the at-scale branch holds the distributed canonical map instead, so its
+driver-side CC fixpoint (O(log d) iterations) also runs once. :func:`kg_triples` then only plans
 DataFrames, so a caller that commits one slice at a time
 (``plans.resume.run_resumable``) pays the dictionary once per run, not
 once per slice. The extraction path moves the corpus through exactly one
@@ -42,6 +42,7 @@ the corpus); the joins after it rely on AQE's skew-join split.
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -63,6 +64,33 @@ PRED_IN_YEAR = KG_NS + "pred:inYear"
 PRED_TEXT = KG_NS + "pred:text"
 CLASS_TURN = KG_NS + "class:Turn"
 XSD_GYEAR = XSD_NS + "gYear"
+
+#: alias rows up to which the gazetteer is broadcast-scale: matched with a
+#: literal trie regex and canonicalized on the driver; past it the
+#: gazetteer stays a DataFrame (join matcher, distributed LSH + CC)
+SMALL_GAZETTEER_ROWS = 50_000
+
+_log = logging.getLogger(__name__)
+
+
+def small_gazetteer_rows(aliases: DataFrame) -> list | None:
+    """The one gazetteer-scale decision: the gazetteer's rows when it is
+    broadcast-scale (at most :data:`SMALL_GAZETTEER_ROWS`), else ``None``.
+
+    One ``take(N + 1)`` is both the probe and, on the broadcast branch, the
+    only read of the gazetteer, so every consumer (``build_kg_dictionary``,
+    ``canonical_entity_map``, ``stream_extract_triples``) builds from the
+    rows it decided on. Logged with the bound and the branch taken."""
+    bound = SMALL_GAZETTEER_ROWS
+    rows = aliases.take(bound + 1)
+    small = len(rows) <= bound
+    _log.info(
+        "gazetteer scale: %s (%s %d alias rows)",
+        "broadcast" if small else "at-scale",
+        "at most" if small else "more than",
+        bound,
+    )
+    return rows if small else None
 
 
 def _turn_uri() -> F.Column:
@@ -163,9 +191,9 @@ def best_alias_map(aliases: DataFrame) -> dict[str, str]:
 
 def _best_alias_map_rows(rows) -> dict[str, str]:
     """Driver-side core of :func:`best_alias_map` over already-collected
-    gazetteer rows — lets :func:`build_kg_dictionary` reuse ONE collect for
-    the threshold probe, the alias list, the argmax map and the canonical
-    map."""
+    gazetteer rows — lets :func:`build_kg_dictionary` build the alias list,
+    the argmax map and the canonical map from the rows of
+    :func:`small_gazetteer_rows`."""
     best: dict[str, tuple[bool, float, str]] = {}
     for r in rows:
         cur = best.get(r.alias)
@@ -335,26 +363,19 @@ def extract_candidate_triples_join(
 
     Triple-set equality with the regex path is asserted by
     ``test_kg_pipeline::test_build_kg_at_scale_path_matches_broadcast_path``
-    (which forces ``small_dim_threshold=0``, routing extraction through
+    (which sets ``SMALL_GAZETTEER_ROWS`` to 0, routing extraction through
     this function).
     """
     from .matcher import (
         alias_match_table,
         best_alias_entities,
-        mentions_from_candidates,
-        turn_candidate_aliases,
+        with_matched_mentions,
     )
     best = best_alias_entities(aliases)
-    cands = turn_candidate_aliases(turns, alias_match_table(aliases))
     enriched = (
-        turns.join(cands, ["conv_id", "turn_idx"], "left")
-        .select(
-            "conv_id",
-            "turn_idx",
-            "text",
-            mentions_from_candidates(
-                F.col("text"), F.col("cand_aliases")
-            ).alias("_mentions"),
+        with_matched_mentions(
+            turns.select("conv_id", "turn_idx", "text"),
+            alias_match_table(aliases),
         )
         .transform(with_relation_candidates)
         # four branches read this subtree, so it materializes once
@@ -383,7 +404,7 @@ def extract_candidate_triples_join(
         enriched.select(
             "conv_id",
             "turn_idx",
-            F.explode(F.array_distinct("_mentions")).alias("alias"),
+            F.explode(F.array_distinct("mentions")).alias("alias"),
         )
         .join(best, "alias")
         .select("conv_id", "turn_idx", F.col("entity_uri"))
@@ -451,43 +472,28 @@ def extract_candidate_triples_join(
     )
 
 
-def canonical_entity_map(
-    aliases: DataFrame,
-    small_dim_threshold: int = 50_000,
-    small: bool | None = None,
-) -> DataFrame:
+def canonical_entity_map(aliases: DataFrame) -> DataFrame:
     """``(entity_uri, canonical_id)`` via similarity blocking + CC.
 
     canonical_id = lexicographic min URI of the merged component.
 
-    Two physical strategies, same semantics:
+    Two physical strategies, same semantics, picked by
+    :func:`small_gazetteer_rows`:
 
-    - **small dim** (≤ ``small_dim_threshold`` alias rows): the gazetteer is
-      broadcast-scale; a dozen Spark jobs of fixed overhead dwarf the work.
-      Collect once, compute exact shingle-Jaccard + union-find on the
+    - **broadcast-scale**: a dozen Spark jobs of fixed overhead dwarf the
+      work, so the taken rows get exact shingle-Jaccard + union-find on the
       driver. (Exact — a strict superset of what LSH recall gives.)
     - **at scale**: MinHash/LSH blocking self-join + distributed CC
       (``entity_similarity_edges`` + ``connected_components``) — never
       materializes the pair space.
     """
-    spark = aliases.sparkSession
-    # `small` lets the caller (build_kg) evaluate the threshold probe ONCE
-    # and share the decision — two independent limit+count jobs would both
-    # waste a job and re-open the small/at-scale disagreement window on a
-    # nondeterministic aliases plan
-    if small is None:
-        small = (
-            aliases.limit(small_dim_threshold + 1).count()
-            <= small_dim_threshold
-        )
-    if small:
-        rows = aliases.select("entity_uri", "alias").collect()
-        mapping = _driver_canonical_map(
-            [(r.entity_uri, r.alias) for r in rows]
-        )
-        return spark.createDataFrame(
-            sorted(mapping.items()), "entity_uri string, canonical_id string"
-        )
+    rows = small_gazetteer_rows(aliases)
+    if rows is None:
+        return _distributed_canonical_map(aliases)
+    return _canonical_frame(aliases.sparkSession, _driver_canonical_map(rows))
+
+
+def _distributed_canonical_map(aliases: DataFrame) -> DataFrame:
     edges = entity_similarity_edges(aliases)
     comp = connected_components(edges)
     all_entities = aliases.select("entity_uri").distinct()
@@ -499,12 +505,22 @@ def canonical_entity_map(
     )
 
 
+def _canonical_frame(
+    spark: SparkSession, mapping: dict[str, str]
+) -> DataFrame:
+    """The driver-built canonical map as a local frame (costs no job)."""
+    return spark.createDataFrame(
+        sorted(mapping.items()), "entity_uri string, canonical_id string"
+    )
+
+
 def _driver_canonical_map(
-    pairs: list[tuple[str, str]],
+    rows,
     shingle_n: int = 3,
     threshold: float = 0.8,
 ) -> dict[str, str]:
-    """Exact driver-side twin of the distributed canonicalization.
+    """Exact driver-side twin of the distributed canonicalization, over
+    gazetteer rows (``entity_uri``, ``alias``).
 
     Mirrors ``blocking.entity_profiles`` (legal-suffix normalization, sorted
     deduped profile) + exact Jaccard at the same threshold + union-find.
@@ -514,6 +530,7 @@ def _driver_canonical_map(
 
     from .blocking import _LEGAL_SUFFIXES
 
+    pairs = [(r.entity_uri, r.alias) for r in rows]
     profiles: dict[str, set[str]] = defaultdict(set)
     for uri, alias in pairs:
         norm = re.sub(r"\s+", " ", re.sub(_LEGAL_SUFFIXES, "", alias.lower())).strip()
@@ -612,8 +629,8 @@ class KGDictionary:
 
     #: the gazetteer (``alias, entity_uri, prior``) as given
     aliases: DataFrame
-    #: ``(entity_uri, canonical_id)``: driver-built rows when small, the
-    #: distributed blocking + CC frame at scale
+    #: ``(entity_uri, canonical_id)``: driver-built rows when
+    #: broadcast-scale, the distributed blocking + CC frame at scale
     canon: DataFrame
     #: the broadcast-scale extraction; ``None`` selects the at-scale
     #: join-based matcher + ``rewrite_canonical``
@@ -621,53 +638,36 @@ class KGDictionary:
 
 
 def build_kg_dictionary(
-    spark: SparkSession,
-    aliases: DataFrame,
-    small_dim_threshold: int = 50_000,
+    spark: SparkSession, aliases: DataFrame
 ) -> KGDictionary:
     """The per-run dictionary side of :func:`build_kg`.
 
-    Canonicalization has two physical strategies keyed on ONE threshold —
-    the same one ``canonical_entity_map`` branches on, so the two decisions
-    can never disagree:
+    Two physical strategies, picked once by :func:`small_gazetteer_rows`:
 
-    - **broadcast-scale dictionary** (≤ ``small_dim_threshold`` alias rows):
-      the canonical map composes INTO the linking map (alias → canonical
-      entity), extraction emits canonical URIs directly, and the post-hoc
-      rewrite joins vanish from the hot path.
+    - **broadcast-scale dictionary**: the taken rows are the whole
+      dictionary side — the canonical map composes INTO the linking map
+      (alias → canonical entity), extraction emits canonical URIs
+      directly, and the post-hoc rewrite joins vanish from the hot path.
     - **at scale**: NOTHING gazetteer-sized touches the driver. Extraction
       runs the join-based matcher (``extract_candidate_triples_join`` /
       ``kg/matcher.py`` — tokenize + candidate join + per-turn
       longest-match verification, argmax linking as a struct-min
-      aggregate), the canonical map is never collected
-      (``canonical_entity_map`` already went distributed), and the
-      canonical rewrite runs as ``rewrite_canonical``'s broadcast/shuffle
-      joins. Same triple set — ``test_kg_pipeline`` asserts equality
-      between the two paths. A mined 10^8-alias dictionary flows through
-      this branch end to end as DataFrames.
+      aggregate), the canonical map is the distributed blocking + CC
+      frame, and the canonical rewrite runs as ``rewrite_canonical``'s
+      broadcast/shuffle joins. Same triple set — ``test_kg_pipeline``
+      asserts equality between the two paths. A mined 10^8-alias
+      dictionary flows through this branch end to end as DataFrames.
     """
-    # ONE driver action covers the whole dictionary side of the small
-    # branch: take(threshold+1) IS the threshold probe (same evaluation
-    # canonical_entity_map branches on, so the two decisions cannot
-    # disagree) and, when small, the returned rows feed the alias list,
-    # the argmax linking map and the driver canonicalization directly.
-    taken = aliases.take(small_dim_threshold + 1)
-    if len(taken) > small_dim_threshold:
-        canon = canonical_entity_map(aliases, small_dim_threshold, small=False)
-        return KGDictionary(aliases, canon, None)
-    best = _best_alias_map_rows(taken)
-    mapping = _driver_canonical_map([(r.entity_uri, r.alias) for r in taken])
-    # the canonical map DataFrame is only consumed by build_kg's lazy
-    # `entities` output — building it from the driver-side mapping costs
-    # no job here
-    canon = spark.createDataFrame(
-        sorted(mapping.items()), "entity_uri string, canonical_id string"
-    )
+    rows = small_gazetteer_rows(aliases)
+    if rows is None:
+        return KGDictionary(aliases, _distributed_canonical_map(aliases), None)
+    best = _best_alias_map_rows(rows)
+    mapping = _driver_canonical_map(rows)
     columns = extraction_columns(
-        sorted({r.alias for r in taken}),
+        sorted({r.alias for r in rows}),
         {a: mapping.get(e, e) for a, e in best.items()},
     )
-    return KGDictionary(aliases, canon, columns)
+    return KGDictionary(aliases, _canonical_frame(spark, mapping), columns)
 
 
 def kg_triples(
@@ -701,16 +701,15 @@ def build_kg(
     transcripts: DataFrame,
     aliases: DataFrame,
     catalogue: str = "transcripts",
-    small_dim_threshold: int = 50_000,
 ) -> dict[str, DataFrame]:
     """Run the full DAG. Returns {triples, entities, datasets, manifest}.
 
-    The dictionary (:func:`build_kg_dictionary`, small vs at-scale
-    strategy) and the triples plan (:func:`kg_triples`) are the two parts
+    The dictionary (:func:`build_kg_dictionary`, broadcast-scale vs
+    at-scale strategy) and the triples plan (:func:`kg_triples`) are the two parts
     a resumable run calls separately; this adds the per-conversation
     datasets, the manifest and the entity table on top.
     """
-    dictionary = build_kg_dictionary(spark, aliases, small_dim_threshold)
+    dictionary = build_kg_dictionary(spark, aliases)
     triples = kg_triples(dictionary, transcripts)
 
     rendered = triples.withColumn(

@@ -76,6 +76,23 @@ def fan_out_lines(lines: DataFrame) -> DataFrame:
     return lines if fanned is lines else fanned.localCheckpoint()
 
 
+def materialize_lines(lines: DataFrame, line_transform=None) -> DataFrame:
+    """A line stream that code builds for a split-union parser,
+    materialized ONCE: the parse reads its input from several places (both
+    branches, a Turtle parse's prefix extraction), so a producer left in
+    the plan — a normalizer's Python re-assembly, the N-Quads graph split
+    — would run once per reader. ``line_transform`` (Column → Column on
+    ``value``) runs before the checkpoint. A narrow stream (a handful of
+    document partitions, one small file) is repartitioned to the session
+    parallelism first; the parse fan-out guard then no-ops on it."""
+    if line_transform is not None:
+        lines = lines.withColumn("value", line_transform(F.col("value")))
+    target = lines.sparkSession.sparkContext.defaultParallelism
+    if lines.rdd.getNumPartitions() < target:
+        lines = lines.repartition(target)
+    return lines.localCheckpoint()
+
+
 _NT_LINE = re.compile(
     r"^\s*(?P<subj><[^>]*>|_:\S+)\s+"
     r"<(?P<pred>[^>]*)>\s+"
@@ -361,17 +378,24 @@ def parse_nquads(
 
     Per the N-Quads spec the graph label is OPTIONAL — a plain N-Triples
     line parses with ``graph`` NULL (the default graph). IRI labels are
-    unbracketed; blank-node labels pass through as ``_:…``."""
+    unbracketed; blank-node labels pass through as ``_:…``. The split-off
+    line stream is one :func:`materialize_lines` checkpoint, so the label
+    split runs once per line, not once per parse branch."""
     line = F.col(line_col)
-    g_raw = F.nullif(F.regexp_extract(line, _NQ_SPLIT, 2), F.lit(""))
-    graph = F.when(
-        g_raw.startswith("<"),
-        F.substring(g_raw, F.lit(2), F.length(g_raw) - 2),
-    ).otherwise(g_raw)
+    # one projection evaluates the regex pass twice per line (the label
+    # extract, the rewrite); the label is unbracketed above it, where it
+    # is read three times without re-running the extract.
     # matched lines shrink to their SPO triple; unmatched pass through
     # unchanged (either a valid 3-term line → default graph, or malformed)
-    rewritten = F.regexp_replace(line, _NQ_SPLIT, "$1 .")
-    base = lines.select(graph.alias("graph"), rewritten.alias("_nt"))
+    split = lines.select(
+        F.regexp_extract(line, _NQ_SPLIT, 2).alias("_g"),
+        F.regexp_replace(line, _NQ_SPLIT, "$1 .").alias("_nt"),
+    )
+    g = F.col("_g")
+    graph = F.when(
+        g.startswith("<"), F.substring(g, F.lit(2), F.length(g) - 2)
+    ).otherwise(F.nullif(g, F.lit("")))
+    base = materialize_lines(split.select(graph.alias("graph"), "_nt"))
     return parse_ntriples(
         base, "_nt", keep_malformed=keep_malformed, carry_cols=("graph",)
     )

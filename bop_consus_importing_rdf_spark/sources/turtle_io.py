@@ -67,6 +67,7 @@ from .rdf_io import (
     PARSED_SCHEMA,
     barrier_filter,
     fan_out_lines,
+    materialize_lines,
     plan_barrier,
 )
 
@@ -1157,22 +1158,6 @@ def _expand_statement(tokens: list[str], gen: list[int]) -> list[str]:
 MAX_TTL_DOC_BYTES = 1 << 30
 
 
-def _materialize_lines(lines: DataFrame, line_transform) -> DataFrame:
-    """A normalizer's output, materialized ONCE: the re-assembly is a
-    Python producer, and the parse reads its lines from several places
-    (prefix extraction, both split-union branches). ``line_transform``
-    (Column → Column on ``value``) runs before the checkpoint. The stream
-    inherits the DOCUMENT partitioning (a handful of partitions for a
-    grouped dump), so a narrow one is repartitioned to the session
-    parallelism first; the parse fan-out guard then no-ops on it."""
-    if line_transform is not None:
-        lines = lines.withColumn("value", line_transform(F.col("value")))
-    target = lines.sparkSession.sparkContext.defaultParallelism
-    if lines.rdd.getNumPartitions() < target:
-        lines = lines.repartition(target)
-    return lines.localCheckpoint()
-
-
 def normalize_turtle_docs(
     docs: DataFrame,
     ttl_col: str = "ttl",
@@ -1225,7 +1210,7 @@ def normalize_turtle_docs(
                     rows.append([*(r[c] for c in carry), line])
             yield pd.DataFrame(rows, columns=[*carry, "value"])
 
-    return _materialize_lines(docs.mapInPandas(_norm, schema), line_transform)
+    return materialize_lines(docs.mapInPandas(_norm, schema), line_transform)
 
 
 def parse_turtle_docs(
@@ -1296,7 +1281,7 @@ def normalize_trig_docs(
                     rows.append([*(r[c] for c in carry), g, line])
             yield pd.DataFrame(rows, columns=[*carry, "graph", "value"])
 
-    return _materialize_lines(docs.mapInPandas(_norm, schema), line_transform)
+    return materialize_lines(docs.mapInPandas(_norm, schema), line_transform)
 
 
 def parse_trig_docs(

@@ -3,9 +3,11 @@
 
     python scripts/make_plans.py [QUERY ...]
 
-Runs each query at sf0.001, counts exchange/broadcast operators in the
-formatted explain, extracts ReadSchema/PushedFilters lines, and prepends a
-hand-maintained commentary block per query (edit COMMENTARY below). With
+Runs each query at sf0.001 through its own QueryExecution, counts the
+exchange/broadcast operators and codegen stages of the plan that ran
+(AQE's final plan) in the formatted explain, extracts
+ReadSchema/PushedFilters lines, and prepends a hand-maintained
+commentary block per query (edit COMMENTARY below). With
 query names, only those sections are regenerated and the rest of PLANS.md
 is kept as it is; with none, the whole file is rewritten.
 """
@@ -181,11 +183,14 @@ COMMENTARY = {
         "milliseconds). 10.6s at the 2.18M-edge sf1 shortcut closure."
     ),
     "bgp_orders_chain": (
-        "Conjunctive BGP evaluation: every constant term reaches the "
-        "parquet scan as a pushed filter (test_bgp pins PushedFilters), "
-        "shared variables become equi-joins Catalyst reorders freely; "
-        "with the subj-bucketed statement layout, subject-chained "
-        "patterns co-locate."
+        "Conjunctive BGP evaluation: over a parquet statement table "
+        "every constant term reaches the scan as a pushed filter "
+        "(test_bgp pins PushedFilters); the fixture graph here is an "
+        "eager local checkpoint (Scan ExistingRDD), so each pattern's "
+        "constants are a Filter directly above it and the four "
+        "shared-variable equi-joins, which Catalyst reorders freely, all "
+        "broadcast. With the subj-bucketed statement layout, "
+        "subject-chained patterns co-locate."
     ),
     "prefix_jaccard_pairs": (
         "EXACT all-pairs Jaccard via prefix filtering (Bayardo WWW "
@@ -290,15 +295,43 @@ COMMENTARY = {
 }
 
 
+_TREE_NODE = re.compile(r"^[ :|+*-]*[A-Za-z][\w ]*? \((\d+)\)(?:, .*)?$")
+_DETAIL = re.compile(r"^\((\d+)\) (.+?)(?: \[codegen id : (\d+)\])?$", re.M)
+
+
+def _executed_nodes(plan: str) -> list[tuple[str, str]]:
+    """``(node name, codegen id)`` of the nodes that ran, from a formatted
+    explain: an executed adaptive plan also prints AQE's "Initial Plan",
+    whose nodes never ran, so its subtrees are skipped."""
+    ran, skip_from = set(), None
+    for line in plan.splitlines():
+        col = len(line) - len(line.lstrip(" :|+*-"))
+        if skip_from is not None and col >= skip_from:
+            if "== Final Plan ==" not in line:
+                continue
+        skip_from = None
+        if "== Initial Plan ==" in line:
+            skip_from = col
+        elif m := _TREE_NODE.match(line):
+            ran.add(m.group(1))
+    return [
+        (name, cg) for nid, name, cg in _DETAIL.findall(plan) if nid in ran
+    ]
+
+
 def _section(name: str, df) -> str:
-    df.write.format("noop").mode("overwrite").save()  # AQE-final plan
+    # run the frame's OWN QueryExecution (a noop write would plan and run
+    # a separate one), so the explain below prints the plan that ran:
+    # AQE's final plan, with its collapsed codegen stages
+    df._jdf.queryExecution().toRdd().count()
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
     plan = buf.getvalue()
-    n_shuffle = len(re.findall(r"\(\d+\) Exchange\b", plan))
-    n_bcast = len(re.findall(r"\(\d+\) BroadcastExchange\b", plan))
-    n_wsc = len(set(re.findall(r"codegen id : (\d+)", plan)))
+    ran = _executed_nodes(plan)
+    n_shuffle = sum(name == "Exchange" for name, _ in ran)
+    n_bcast = sum(name == "BroadcastExchange" for name, _ in ran)
+    n_wsc = len({cg for _, cg in ran if cg})
     schemas = sorted(set(re.findall(r"ReadSchema: \S+", plan)))
     pushed = sorted(set(re.findall(r"PushedFilters: \[[^\]]*\]", plan)))
     lines = [

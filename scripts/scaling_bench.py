@@ -161,13 +161,14 @@ disagrees with the builder's own methodology" finding.
   the parse stage's durable resume checkpoint. Below threshold the cache
   branch remains (no write amplification at CLI scale).
 - **Join-matcher at-scale path characterized** (238k turns, local[32],
-  interleaved pairs): `build_kg(small_dim_threshold=0)` — tokenize+join
-  mention matching, distributed CC, rewrite joins, zero driver-side
-  gazetteer state — runs 17.1-19.8s vs 5.6-7.7s for the broadcast path
-  with the 120-alias fixture gazetteer. The ~2.6x constant overhead is
-  the price of unbounded dictionary capacity; the 50k-alias threshold
-  keys the branch so real workloads sit on the right side, and the two
-  paths are triple-set-equal by test.
+  interleaved pairs): `build_kg` with `SMALL_GAZETTEER_ROWS = 0` —
+  tokenize+join mention matching, distributed CC, rewrite joins, zero
+  driver-side gazetteer state — runs 17.1-19.8s vs 5.6-7.7s for the
+  broadcast path with the 120-alias fixture gazetteer. The ~2.6x
+  constant overhead is the price of unbounded dictionary capacity; the
+  50k-alias bound (`SMALL_GAZETTEER_ROWS`) keys the branch so real
+  workloads sit on the right side, and the two paths are
+  triple-set-equal by test.
 - **Round-4 final quiet-host bench** (3 interleaved fresh-JVM passes,
   per-query min, sf0.1 local[32]): total **38.1-40.3s** vs 60.6s recorded
   in round 3 under host load. nt_parse 6.3-6.6s (target <=8s MET),

@@ -26,3 +26,29 @@ def triples_df(spark, rows):
         "subj string, pred string, obj_value string, obj_kind string, "
         "obj_lang string, obj_datatype string",
     )
+
+
+def executed_plan_nodes(spark, run):
+    """``run()``'s result and the ``(name, desc)`` of every physical-plan
+    node of every SQL execution it starts (read from the SQL status
+    store)."""
+    sc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def execution_ids():
+        sc.listenerBus().waitUntilEmpty()
+        it = store.executionsList().iterator()
+        ids = set()
+        while it.hasNext():
+            ids.add(it.next().executionId())
+        return ids
+
+    before = execution_ids()
+    result = run()
+    nodes = []
+    for eid in execution_ids() - before:
+        it = store.planGraph(eid).allNodes().iterator()
+        while it.hasNext():
+            n = it.next()
+            nodes.append((n.name(), n.desc()))
+    return result, nodes

@@ -13,8 +13,7 @@ from pyspark.sql import functions as F
 from bop_consus_importing_rdf_spark.kg.matcher import (
     alias_match_table,
     best_alias_entities,
-    mentions_from_candidates,
-    turn_candidate_aliases,
+    with_matched_mentions,
 )
 from bop_consus_importing_rdf_spark.kg.mentions import detect_mentions
 
@@ -53,12 +52,9 @@ def test_join_matcher_equals_regex_matcher(spark, gaz):
         [("c", i, t) for i, t in enumerate(TEXTS)],
         "conv_id string, turn_idx int, text string",
     )
-    cands = turn_candidate_aliases(turns, alias_match_table(gaz))
-    joined = turns.join(cands, ["conv_id", "turn_idx"], "left").select(
+    joined = with_matched_mentions(turns, alias_match_table(gaz)).select(
         "turn_idx",
-        mentions_from_candidates(F.col("text"), F.col("cand_aliases")).alias(
-            "via_join"
-        ),
+        F.col("mentions").alias("via_join"),
         detect_mentions(F.col("text"), alias_list).alias("via_regex"),
     )
     rows = {r.turn_idx: (r.via_join, r.via_regex) for r in joined.collect()}

@@ -58,7 +58,9 @@ def test_graph_memo_survives_clear_cache(spark):
     assert "Union" not in plan, plan
 
 
-def test_kg_triples_extraction_checkpoints_are_caller_owned(spark):
+def test_kg_triples_extraction_checkpoints_are_caller_owned(
+    spark, monkeypatch
+):
     """On both dictionary paths each kg_triples call appends its one
     extraction checkpoint to the caller's list, and releasing that list
     after the write leaves no persisted RDD behind; the module keeps no
@@ -82,9 +84,8 @@ def test_kg_triples_extraction_checkpoints_are_caller_owned(spark):
     aliases = alias_table(spark)
     transcripts = synth_transcripts(spark, n_conv=50, seed=3)
     for threshold in (50_000, 0):  # broadcast-scale, then at-scale
-        dictionary = build_kg_dictionary(
-            spark, aliases, small_dim_threshold=threshold
-        )
+        monkeypatch.setattr(pipeline, "SMALL_GAZETTEER_ROWS", threshold)
+        dictionary = build_kg_dictionary(spark, aliases)
         assert (dictionary.columns is None) == (threshold == 0)
         before = persisted()
         ck = []

@@ -11,7 +11,12 @@ from bop_consus_importing_rdf_spark.functions.formats import (
 )
 from bop_consus_importing_rdf_spark.functions.ntriples import nt_line
 from bop_consus_importing_rdf_spark.sources.jsonld_io import parse_jsonld
-from bop_consus_importing_rdf_spark.sources.rdf_io import parse_nquads
+from bop_consus_importing_rdf_spark.sources.rdf_io import (
+    _NQ_SPLIT,
+    parse_nquads,
+)
+
+from .conftest import executed_plan_nodes
 
 KEY = ["subj", "pred", "obj_value", "obj_kind", "obj_lang", "obj_datatype"]
 
@@ -67,6 +72,40 @@ def test_nquads_default_graph_and_malformed(spark):
     assert rows == {("urn:a", None), ("urn:a", "_:g")}
     assert sum(1 for r in kept if r.obj_kind is None) == 1
     assert got is not None  # silence lints
+
+
+def test_nquads_file_parse_scans_and_splits_each_line_once(spark, tmp_path):
+    """Over a file scan the graph-label split is one materialized line
+    stream: across every execution the parse starts there is ONE file
+    scan and ONE projection running the label regex (its extract and its
+    rewrite), not a copy per split-union branch."""
+    import re
+
+    lines = [
+        "<urn:s> <urn:p> <urn:o> <urn:g> .",
+        '<urn:s> <urn:p> "x"@en _:g1 .',
+        '<urn:s> <urn:p> "caf\\u00e9" <urn:g> .',  # assist branch
+        "<urn:a> <urn:b> <urn:c> .",  # default graph
+        "junk",
+    ]
+    path = tmp_path / "dump.nq"
+    path.write_text("\n".join(lines) + "\n", encoding="utf-8")
+    rows, nodes = executed_plan_nodes(
+        spark, lambda: parse_nquads(spark.read.text(str(path))).collect()
+    )
+    assert sorted((r.graph or "", r.subj, r.obj_value) for r in rows) == [
+        ("", "urn:a", "urn:c"),
+        ("_:g1", "urn:s", "x"),
+        ("urn:g", "urn:s", "café"),
+        ("urn:g", "urn:s", "urn:o"),
+    ]
+    scans = [n for n, _ in nodes if n.startswith("Scan text")]
+    assert scans == ["Scan text "]
+    split = re.compile(
+        r"regexp_(extract|replace)\(\w+#\d+, " + re.escape(_NQ_SPLIT)
+    )
+    carriers = [(n, split.findall(d)) for n, d in nodes if split.search(d)]
+    assert carriers == [("Project", ["extract", "replace"])], carriers
 
 
 def test_jsonld_parse_render_roundtrip(spark):

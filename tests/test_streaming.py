@@ -38,12 +38,16 @@ def test_stream_drains_and_matches_batch(spark, tmp_path):
     assert got.count() == batch.count()
 
 
-def test_stream_at_scale_gazetteer_matches_small_path(spark, tmp_path):
-    """Round-5 (round-4 verdict What's-missing #3): with the threshold
-    forced to 0 the stream routes through the join-based matcher — the
-    gazetteer never touches the driver — and must produce the identical
-    linked-mention set (schema, rows, scores) as the broadcast-scale
-    path on the same input."""
+def test_stream_at_scale_gazetteer_matches_small_path(
+    spark, tmp_path, monkeypatch
+):
+    """Round-5 (round-4 verdict What's-missing #3): with
+    SMALL_GAZETTEER_ROWS set to 0 the stream routes through the join-based
+    matcher — the gazetteer never touches the driver — and must produce
+    the identical linked-mention set (schema, rows, scores) as the
+    broadcast-scale path on the same input."""
+    from bop_consus_importing_rdf_spark.kg import pipeline
+
     t = synth_transcripts(spark, n_conv=5, seed=11)
     aliases = alias_table(spark)
 
@@ -52,9 +56,8 @@ def test_stream_at_scale_gazetteer_matches_small_path(spark, tmp_path):
         in_dir = str(tmp_path / f"in_{name}")
         out_dir = str(tmp_path / f"out_{name}")
         t.write.parquet(in_dir)
-        q = stream_extract_triples(
-            spark, in_dir, out_dir, aliases, small_dim_threshold=thresh
-        )
+        monkeypatch.setattr(pipeline, "SMALL_GAZETTEER_ROWS", thresh)
+        q = stream_extract_triples(spark, in_dir, out_dir, aliases)
         q.awaitTermination(120)
         outs[name] = spark.read.parquet(f"{out_dir}/batch_id=0")
 

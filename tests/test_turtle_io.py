@@ -26,7 +26,7 @@ from bop_consus_importing_rdf_spark.sources.turtle_io import (
 )
 from bop_consus_importing_rdf_spark.vocab import RDF_TYPE, XSD_NS
 
-from .conftest import triples_df
+from .conftest import executed_plan_nodes, triples_df
 
 KEY = ["subj", "pred", "obj_value", "obj_kind", "obj_lang", "obj_datatype"]
 
@@ -120,25 +120,8 @@ def test_ttl_base_directive_raises(spark):
 def _run_counting_plan_nodes(spark, run):
     """``run()``'s result and the physical-plan node names summed over
     every SQL execution it starts (read from the SQL status store)."""
-    sc = spark.sparkContext._jsc.sc()
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def execution_ids():
-        sc.listenerBus().waitUntilEmpty()
-        it = store.executionsList().iterator()
-        ids = set()
-        while it.hasNext():
-            ids.add(it.next().executionId())
-        return ids
-
-    before = execution_ids()
-    result = run()
-    counts = Counter()
-    for eid in execution_ids() - before:
-        nodes = store.planGraph(eid).allNodes().iterator()
-        while nodes.hasNext():
-            counts[nodes.next().name()] += 1
-    return result, counts
+    result, nodes = executed_plan_nodes(spark, run)
+    return result, Counter(name for name, _ in nodes)
 
 
 def test_parser_plans_one_python_eval_over_materialized_lines(spark, tmp_path):
