@@ -350,14 +350,17 @@ def extract_candidate_triples(
 
 def extract_candidate_triples_join(
     turns: DataFrame,
-    aliases: DataFrame,
+    match_table: DataFrame,
+    best: DataFrame,
     checkpoints: list[DataFrame] | None = None,
 ) -> DataFrame:
     """At-scale twin of :func:`extract_candidate_triples`: the gazetteer
     stays a DataFrame end to end (no ``alias_list`` / ``best_alias_map``
-    driver collects) — tokenize + candidate join + per-turn longest-match
-    verification, see ``kg/matcher.py``. Emits best-alias entity URIs;
-    ``build_kg``'s at-scale branch follows with ``rewrite_canonical``.
+    driver collects) — tokenize + candidate join against ``match_table``
+    (``matcher.alias_match_table``) + per-turn longest-match
+    verification, see ``kg/matcher.py``. Emits the best-alias entity URIs
+    of ``best`` (``matcher.best_alias_entities``); ``build_kg``'s at-scale
+    branch follows with ``rewrite_canonical``.
     Its enriched-turns checkpoint goes to ``checkpoints`` by the same rule
     as :func:`extract_candidate_triples`.
 
@@ -366,16 +369,11 @@ def extract_candidate_triples_join(
     (which sets ``SMALL_GAZETTEER_ROWS`` to 0, routing extraction through
     this function).
     """
-    from .matcher import (
-        alias_match_table,
-        best_alias_entities,
-        with_matched_mentions,
-    )
-    best = best_alias_entities(aliases)
+    from .matcher import with_matched_mentions
+
     enriched = (
         with_matched_mentions(
-            turns.select("conv_id", "turn_idx", "text"),
-            alias_match_table(aliases),
+            turns.select("conv_id", "turn_idx", "text"), match_table
         )
         .transform(with_relation_candidates)
         # four branches read this subtree, so it materializes once
@@ -627,14 +625,18 @@ class KGDictionary:
     per run by :func:`build_kg_dictionary`, applied to any number of
     transcript slices by :func:`kg_triples`."""
 
-    #: the gazetteer (``alias, entity_uri, prior``) as given
-    aliases: DataFrame
     #: ``(entity_uri, canonical_id)``: driver-built rows when
     #: broadcast-scale, the distributed blocking + CC frame at scale
     canon: DataFrame
     #: the broadcast-scale extraction; ``None`` selects the at-scale
     #: join-based matcher + ``rewrite_canonical``
     columns: ExtractionColumns | None
+    #: at scale, the join matcher's validated ``(first_token, alias)``
+    #: table (``matcher.alias_match_table``); ``None`` at broadcast scale
+    match_table: DataFrame | None = None
+    #: at scale, ``(alias, entity_uri)`` argmax linking
+    #: (``matcher.best_alias_entities``); ``None`` at broadcast scale
+    best: DataFrame | None = None
 
 
 def build_kg_dictionary(
@@ -656,18 +658,27 @@ def build_kg_dictionary(
       frame, and the canonical rewrite runs as ``rewrite_canonical``'s
       broadcast/shuffle joins. Same triple set — ``test_kg_pipeline``
       asserts equality between the two paths. A mined 10^8-alias
-      dictionary flows through this branch end to end as DataFrames.
+      dictionary flows through this branch end to end as DataFrames; its
+      match table (one validation job) and argmax frame are built here,
+      once per run, not per :func:`kg_triples` call.
     """
     rows = small_gazetteer_rows(aliases)
     if rows is None:
-        return KGDictionary(aliases, _distributed_canonical_map(aliases), None)
+        from .matcher import alias_match_table, best_alias_entities
+
+        return KGDictionary(
+            _distributed_canonical_map(aliases),
+            None,
+            alias_match_table(aliases),
+            best_alias_entities(aliases),
+        )
     best = _best_alias_map_rows(rows)
     mapping = _driver_canonical_map(rows)
     columns = extraction_columns(
         sorted({r.alias for r in rows}),
         {a: mapping.get(e, e) for a, e in best.items()},
     )
-    return KGDictionary(aliases, _canonical_frame(spark, mapping), columns)
+    return KGDictionary(_canonical_frame(spark, mapping), columns)
 
 
 def kg_triples(
@@ -680,9 +691,10 @@ def kg_triples(
     extraction, canonical linking and the ``dataset_id`` column.
 
     The broadcast-scale path only plans: its extraction checkpoint is
-    lazy. The at-scale path runs the matcher's alias validation job and
-    its eager checkpoint here. Either path appends its one extraction
-    checkpoint to ``checkpoints`` when given."""
+    lazy. The at-scale path runs its eager checkpoint here (the alias
+    validation job ran once, in :func:`build_kg_dictionary`). Either path
+    appends its one extraction checkpoint to ``checkpoints`` when
+    given."""
     turns = stable_turns(transcripts)
     if dictionary.columns is not None:
         triples = extract_candidate_triples(
@@ -690,7 +702,7 @@ def kg_triples(
         )
     else:
         raw = extract_candidate_triples_join(
-            turns, dictionary.aliases, checkpoints
+            turns, dictionary.match_table, dictionary.best, checkpoints
         )
         triples = rewrite_canonical(raw, dictionary.canon)
     return triples.withColumn("dataset_id", _conv_uri())

@@ -7,13 +7,14 @@ canonical flattened single-statement shape); full JSON-LD expansion with
 ``@context`` resolution is out of scope — such documents land in the
 malformed bucket, loudly countable via ``keep_malformed``.
 
-Same architecture as the other parsers: JVM regexp structure parse +
+The line parse runs through ``rdf_io.split_union_parse``, the one
+split-union skeleton of every line parser: JVM regexp structure parse +
 JVM-chain unescaping of the named JSON escapes. Lines carrying a raw
 sentinel byte, a ``\\uXXXX`` escape (``json.loads`` handles surrogate
 pairs, a ``chr()`` map cannot), or any OTHER non-named escape (strict
 JSON rejects ``\\x`` etc. — such lines are malformed and must land in
 the reject bucket, not crash or silently mis-decode) take the exact
-whole-line Python fallback, which catches decode errors per line.
+whole-line Python parser, which catches decode errors per line.
 """
 
 from __future__ import annotations
@@ -25,7 +26,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .rdf_io import PARSED_SCHEMA, barrier_filter, plan_barrier
+from .rdf_io import (
+    PARSED_COLUMNS,
+    PARSED_SCHEMA,
+    plan_barrier,
+    split_union_parse,
+)
 
 _JSTR = r'(?:[^"\\]|\\.)*'
 _LINE_PATTERN = (
@@ -88,12 +94,8 @@ def parse_jsonld(
     """Flattened JSON-LD statement lines → statement rows
     (``rdf_io.PARSED_SCHEMA``).
 
-    Round-5 rebuild on the split-union architecture of the other parsers
-    (previously a single projection with per-column
-    ``when(has_ctl, fb[...])`` coalesces — that spelling inlines the
-    fallback UDF into every output column AND re-evaluates the whole
-    chain in the malformed-drop filter: measured **59.7s vs 4.6s** for
-    the identical 905k-line parse at local[32]):
+    Through ``rdf_io.split_union_parse`` (plan discipline and input
+    contract there: pass a scan, a cache or a checkpoint):
 
     - **clean branch** (no escapes beyond the seven named ones): 100%
       JVM — one packed regex pass projected into an attribute, anchored
@@ -101,96 +103,81 @@ def parse_jsonld(
       unescaping; whole-stage codegen end to end.
     - **assist branch** (raw sentinel bytes, ``\\uXXXX`` — needs
       ``json.loads`` incl. surrogate pairs — or any non-named escape,
-      which strict JSON rejects): whole-line exact Python fallback,
-      ``asNondeterministic`` as the plan barrier, malformed-drop on the
-      output struct (same discipline as ``rdf_io.parse_ntriples``).
-
-    Same input contract as ``rdf_io.parse_ntriples``: both branches read
-    ``lines``, so pass a scan, a cache or a checkpoint."""
-
-    @F.pandas_udf(f"struct<{PARSED_SCHEMA}>")
-    def _parse_fallback(s: pd.Series) -> pd.DataFrame:
-        cols = ["subj", "pred", "obj_value", "obj_kind", "obj_lang",
-                "obj_datatype"]
-        mask = s.notna()
-        out = pd.DataFrame(None, index=s.index, columns=cols, dtype=object)
-        if mask.any():
-            out.loc[mask] = pd.DataFrame(
-                [_parse_one_jsonld(x) for x in s[mask]],
-                columns=cols,
-                index=s.index[mask],
-            )
-        return out
-
-    _parse_fallback = _parse_fallback.asNondeterministic()
-
+      which strict JSON rejects): ``_parse_one_jsonld`` on the whole
+      line."""
     line = F.col(line_col)
-    stripped = F.trim(line)
-    has_ctl = (
+    # not rdf_io.needs_exact_parse: JSON's \U is no escape at all, so the
+    # non-named-escape probe routes it with the other rejects
+    needs_exact = (
         line.contains("\x01") | line.contains("\x02")
         | line.contains("\\u") | line.rlike(r'\\[^"\\/bfnrtu]')
     )
-    base = lines.filter(barrier_filter(stripped != ""))
-
     # two-step clean branch: the packed pass once into an attribute, the
     # anchored inner-object extracts once into attributes, the final
     # projection touches only attributes (filter predicates get no
     # subexpression sharing — same discipline as turtle_io)
     sep = "\x01"
     packed = F.regexp_replace(line, _LINE_PATTERN, f"$1{sep}$2{sep}$3")
-    step = base.filter(~has_ctl).select(
-        line.alias("_l"),
-        plan_barrier().alias("_g"),
-        F.split(packed, sep).alias("_parts"),
+
+    def clean(routed: DataFrame) -> DataFrame:
+        step = routed.select(
+            line.alias("_l"),
+            plan_barrier().alias("_g"),
+            F.split(packed, sep).alias("_parts"),
+        )
+        parts = F.col("_parts")
+        inner = F.get(parts, 2)
+        step = step.select(
+            "_l",
+            "_g",
+            (F.size(parts) == 3).alias("_matched"),
+            F.get(parts, 0).alias("_subj_raw"),
+            F.get(parts, 1).alias("_pred_raw"),
+            inner.rlike(_NODE_RE).alias("_is_node"),
+            inner.rlike(_VALUE_RE).alias("_is_value"),
+            F.nullif(F.regexp_extract(inner, _NODE_RE, 1), F.lit("")).alias(
+                "_node_id"
+            ),
+            F.regexp_extract(inner, _VALUE_RE, 1).alias("_body_raw"),
+            F.nullif(F.regexp_extract(inner, _VALUE_RE, 2), F.lit("")).alias(
+                "_lang"
+            ),
+            F.nullif(F.regexp_extract(inner, _VALUE_RE, 3), F.lit("")).alias(
+                "_dt_raw"
+            ),
+        )
+        is_node = F.col("_is_node")
+        is_value = F.col("_is_value")
+        ok = F.col("_matched") & (is_node | is_value)
+        if not keep_malformed:
+            step = step.filter(F.col("_g") & ok)
+        obj_node = _unescape_json_col(F.col("_node_id"))
+        return step.select(
+            F.when(ok, _unescape_json_col(F.col("_subj_raw"))).alias("subj"),
+            F.when(ok, _unescape_json_col(F.col("_pred_raw"))).alias("pred"),
+            F.when(~ok, F.col("_l"))
+            .when(is_node, obj_node)
+            .otherwise(_unescape_json_col(F.col("_body_raw")))
+            .alias("obj_value"),
+            F.when(ok & is_node & obj_node.startswith("_:"), "bnode")
+            .when(ok & is_node, "iri")
+            .when(ok, "literal")
+            .alias("obj_kind"),
+            F.when(ok & is_value, F.col("_lang")).alias("obj_lang"),
+            F.when(
+                ok & is_value, _unescape_json_col(F.col("_dt_raw"))
+            ).alias("obj_datatype"),
+        )
+
+    return split_union_parse(
+        lines,
+        line_col,
+        base=F.trim(line) != "",
+        needs_exact=needs_exact,
+        clean=clean,
+        parse_one=_parse_one_jsonld,
+        keep_malformed=keep_malformed,
     )
-    parts = F.col("_parts")
-    inner = F.get(parts, 2)
-    step = step.select(
-        "_l",
-        "_g",
-        (F.size(parts) == 3).alias("_matched"),
-        F.get(parts, 0).alias("_subj_raw"),
-        F.get(parts, 1).alias("_pred_raw"),
-        inner.rlike(_NODE_RE).alias("_is_node"),
-        inner.rlike(_VALUE_RE).alias("_is_value"),
-        F.nullif(F.regexp_extract(inner, _NODE_RE, 1), F.lit("")).alias(
-            "_node_id"
-        ),
-        F.regexp_extract(inner, _VALUE_RE, 1).alias("_body_raw"),
-        F.nullif(F.regexp_extract(inner, _VALUE_RE, 2), F.lit("")).alias(
-            "_lang"
-        ),
-        F.nullif(F.regexp_extract(inner, _VALUE_RE, 3), F.lit("")).alias(
-            "_dt_raw"
-        ),
-    )
-    is_node = F.col("_is_node")
-    is_value = F.col("_is_value")
-    ok = F.col("_matched") & (is_node | is_value)
-    if not keep_malformed:
-        step = step.filter(F.col("_g") & ok)
-    obj_node = _unescape_json_col(F.col("_node_id"))
-    clean = step.select(
-        F.when(ok, _unescape_json_col(F.col("_subj_raw"))).alias("subj"),
-        F.when(ok, _unescape_json_col(F.col("_pred_raw"))).alias("pred"),
-        F.when(~ok, F.col("_l"))
-        .when(is_node, obj_node)
-        .otherwise(_unescape_json_col(F.col("_body_raw")))
-        .alias("obj_value"),
-        F.when(ok & is_node & obj_node.startswith("_:"), "bnode")
-        .when(ok & is_node, "iri")
-        .when(ok, "literal")
-        .alias("obj_kind"),
-        F.when(ok & is_value, F.col("_lang")).alias("obj_lang"),
-        F.when(ok & is_value, _unescape_json_col(F.col("_dt_raw"))).alias(
-            "obj_datatype"
-        ),
-    )
-    assist = base.filter(has_ctl).select(_parse_fallback(line).alias("_p"))
-    if not keep_malformed:
-        assist = assist.filter(F.col("_p.obj_kind").isNotNull())
-    assist = assist.select("_p.*")
-    return clean.unionByName(assist)
 
 
 # ---------------------------------------------------------------------------
@@ -580,9 +567,7 @@ def _parse_jsonld(
     from collections.abc import Iterator
 
     carry = list(carry_cols)
-    stmt_cols = [
-        "subj", "pred", "obj_value", "obj_kind", "obj_lang", "obj_datatype"
-    ]
+    stmt_cols = list(PARSED_COLUMNS)
     schema = PARSED_SCHEMA
     if with_graph:
         schema = "graph string, " + schema

@@ -10,54 +10,151 @@ Jena (``JenaUtils.read``, ``Flows.kt:66-77``). Here:
 - **pre-process**: column-expression fix-ups (BOM strip, control-char
   removal, space-in-IRI %-encoding) — reference behavior *(ext)*, applied
   before parse exactly like the temp-file rewrite.
-- **parse**: the split-union N-Triples parser :func:`parse_ntriples`
-  (N-Triples is the reference's default output syntax and our canonical
-  comparison form). Clean lines take a JVM plan: one packed
-  ``regexp_replace`` pass and SQL unescaping, codegen'd end to end. Lines
-  SQL cannot parse exactly (raw sentinel bytes, ``\\u``/``\\U`` escapes) take
-  an assist branch: the exact Python parser in one Arrow-batched pandas
-  UDF. The parser is the exact inverse of ``functions/ntriples.py`` —
-  round-trip tested. Malformed lines get ``obj_kind = NULL`` so callers
-  can count rejects into lineage_metrics (the reference rethrows with
-  address context, ``Flows.kt:75-77``).
+- **parse**: :func:`split_union_parse`, the one split-union skeleton every
+  line parser (N-Triples / N-Quads here, Turtle and TriG in
+  ``turtle_io``, flattened JSON-LD in ``jsonld_io``) runs through: lines
+  SQL can parse exactly take an all-JVM codegen branch, the rest take one
+  Arrow-batched exact Python parser. :func:`parse_ntriples` (N-Triples
+  is the reference's default output syntax and our canonical comparison
+  form) is the exact inverse of ``functions/ntriples.py`` — round-trip
+  tested. Malformed lines get ``obj_kind = NULL`` so callers can count
+  rejects into lineage_metrics (the reference rethrows with address
+  context, ``Flows.kt:75-77``).
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
+from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-PARSED_SCHEMA = (
-    "subj string, pred string, obj_value string, obj_kind string, "
-    "obj_lang string, obj_datatype string"
+PARSED_COLUMNS = (
+    "subj", "pred", "obj_value", "obj_kind", "obj_lang", "obj_datatype"
 )
+PARSED_SCHEMA = ", ".join(f"{c} string" for c in PARSED_COLUMNS)
 
 
 def plan_barrier() -> Column:
     """An always-true NONDETERMINISTIC predicate, for the split-union
     parsers. Catalyst does not push the branch filters above it, nor
     substitute a projection it rides in, so the two branches keep reading
-    one upstream plan (see :func:`parse_ntriples`). Spelled on the
+    one upstream plan (see :func:`split_union_parse`). Spelled on the
     partition id: Spark 4 folds ``rand() > -1`` to ``true``
     (``OptimizeRand``), which removed the barrier."""
     return F.spark_partition_id() >= F.lit(0)
 
 
-def barrier_filter(cond: Column) -> Column:
-    """A split-union parser's base filter: ``cond`` behind
-    :func:`plan_barrier` as ONE nondeterministic conjunct. Predicate
-    pushdown splits a filter into conjuncts and moves the deterministic
-    ones below a repartition, substituting the producer's projection into
-    them, so ``plan_barrier() & cond`` left ``cond`` under the exchange
-    re-evaluating the producer's expressions (a render's whole line
-    concat chain) in the filter and again in the projection. Folded into
-    one ``CASE WHEN``, the filter stays above the exchange and reads the
-    produced column."""
-    return F.when(plan_barrier(), cond).otherwise(F.lit(False))
+def needs_exact_parse(line: Column) -> Column:
+    """The N-Triples/Turtle routing predicate of :func:`split_union_parse`:
+    a raw ``\\x01``/``\\x02`` byte (plain N-Triples and Turtle PERMIT raw
+    C0 controls in literal bodies; they would corrupt the clean branch's
+    in-band sentinels) or a ``\\u``/``\\U`` escape (the one construct the
+    SQL replace-chain cannot unescape). Four non-regex contains probes,
+    codegen'd. A ``\\u`` inside an IRI or behind an escaped backslash
+    over-routes harmlessly — the Python parser is exact."""
+    return (
+        line.contains("\x01") | line.contains("\x02")
+        | line.contains("\\u") | line.contains("\\U")
+    )
+
+
+def _exact_parse_udf(parse_one: Callable[[str], tuple]):
+    """The assist branch's exact parser: ``parse_one`` (line → a
+    :data:`PARSED_COLUMNS` tuple) over Arrow batches.
+
+    Marked nondeterministic (it is not, semantically) as a PLAN BARRIER:
+    a deterministic UDF referenced by the malformed-drop filter gets
+    substituted below the output projection by PushDownPredicates — and
+    InferFiltersFromConstraints re-derives pushable isnotnull copies even
+    behind a nondeterministic guard conjunct — planning a SECOND
+    ArrowEvalPython that re-runs the parser per consumer. Nondeterminism
+    is the one property every such rule refuses to move or duplicate."""
+
+    @F.pandas_udf(f"struct<{PARSED_SCHEMA}>")
+    def _parse_fallback(s: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame(
+            [parse_one(x) for x in s], columns=PARSED_COLUMNS, index=s.index
+        )
+
+    return _parse_fallback.asNondeterministic()
+
+
+def split_union_parse(
+    lines: DataFrame,
+    line_col: str,
+    base: Column,
+    needs_exact: Column,
+    clean: Callable[[DataFrame], DataFrame],
+    parse_one: Callable[[str], tuple],
+    keep_malformed: bool,
+    carry_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """The one split-union line parse: rows of ``lines`` passing ``base``
+    (blank/comment/directive tests) split on ``needs_exact`` into two
+    branches whose :data:`PARSED_COLUMNS` rows (+ ``carry_cols``) are
+    unioned.
+
+    - **clean branch** (``~needs_exact`` — in practice everything):
+      ``clean`` projects the routed rows with pure column expressions,
+      whole-stage codegen end to end, ZERO Python, no Arrow round trip,
+      and drops its own malformed rows unless ``keep_malformed``.
+    - **assist branch** (``needs_exact`` — lines SQL cannot parse
+      exactly): ``parse_one`` on the whole line through ONE Arrow-batched
+      pandas UDF (:func:`_exact_parse_udf`).
+
+    Each syntax supplies only ``base``, ``needs_exact``, ``clean`` and
+    ``parse_one``; the plan discipline, each rule measured once, lives
+    here:
+
+    - One branch fed per-row NULLs to an always-on pandas UDF: at 905k
+      clean lines / local[32] that Python exchange cost 2.4× end-to-end
+      (6.5s vs 2.7s) even with all-NULL batches, and folding the assist
+      UDF into per-column ``when(needs, udf[...])`` coalesces cost 59.7s
+      vs 4.6s (JSON-LD) and ~30s vs ~6s (Turtle). The split removes
+      Python from the hot path; the upstream exchange is reused across
+      the two branches (ReusedExchange), so the source is still scanned
+      once per shuffle boundary.
+    - ``base`` runs behind :func:`plan_barrier` as ONE nondeterministic
+      conjunct, ``CASE WHEN plan_barrier() THEN base ELSE false``, which
+      keeps itself and the branch filters above it. With an upstream
+      exchange the branches then share one reused upstream execution;
+      without the barrier every branch predicate — a directive ``rlike``
+      included — is pushed into each upstream union branch or scan
+      separately and an expensive producer re-runs per branch (measured
+      38-61s vs ~7s on the 905k-line rendered input). As
+      ``plan_barrier() & base``, pushdown split the conjuncts and moved
+      ``base`` below an upstream repartition, substituting the producer's
+      projection (a render's whole line concat chain) into it.
+    - The malformed drop happens PER BRANCH, never as an outer
+      ``filter(obj_kind.isNotNull())`` over the union: Catalyst
+      substitutes a computed column's expression into the predicate, so
+      the outer spelling re-evaluates the whole clean parse chain in the
+      filter on top of the projection (14.5s vs 5.3s at 905k lines). The
+      assist branch filters the ArrowEvalPython OUTPUT struct BEFORE field
+      expansion: filtering the expanded ``obj_kind`` column lets
+      CollapseProject substitute the UDF into the predicate and plan a
+      SECOND ArrowEvalPython that re-runs the parser just for the drop.
+
+    INPUT: both branches read ``lines``, so it should be cheap to scan
+    twice — a file scan, a cache or a checkpoint. Code that builds a
+    Python or union line stream materializes it once itself
+    (:func:`materialize_lines`); a live union fed here has the assist
+    branch's UDF cloned into every producer branch (measured 5× plan
+    inflation off an 18-branch render union). The parse-stage fan-out
+    guard (:func:`fan_out_lines`) is the caller's: it applies where the
+    line stream may be narrow."""
+    kept = lines.filter(F.when(plan_barrier(), base).otherwise(F.lit(False)))
+    assist = kept.filter(needs_exact).select(
+        *carry_cols, _exact_parse_udf(parse_one)(F.col(line_col)).alias("_p")
+    )
+    if not keep_malformed:
+        assist = assist.filter(F.col("_p.obj_kind").isNotNull())
+    return clean(kept.filter(~needs_exact)).unionByName(
+        assist.select(*carry_cols, "_p.*")
+    )
 
 
 def fan_out_lines(lines: DataFrame) -> DataFrame:
@@ -158,7 +255,7 @@ def pre_process_iri_spaces(line: Column) -> Column:
     LINE-oriented by design: ``(<[^> ]*) ([^>]*>)`` pairs the nearest
     ``<``/``>`` — across a whole multi-statement document it can pair a
     ``<`` inside one literal with a ``>`` in a later IRI and rewrite
-    literal content across statement boundaries (ADVICE r4). Apply it to
+    literal content across statement boundaries. Apply it to
     single statements/lines only; ``harvest.py`` runs it AFTER Turtle
     statement re-assembly and per physical line for TriG."""
     c = line
@@ -185,7 +282,7 @@ def pre_process(line: Column) -> Column:
 # yields every field and the clean branch needs NO further regex at all —
 # the object kind falls out of which group is non-empty (groups 3 and 5
 # keep their delimiters, so an empty-IRI/empty-literal object still
-# registers as non-empty). This is NOT the round-3 6-group dead end: that
+# registers as non-empty). This is NOT the measured 6-group dead end: that
 # pattern carried the full object AND the literal body (packed string ~2×
 # the line); here each byte of the line lands in at most one group.
 _NT_PACKED_PATTERN = (
@@ -204,81 +301,30 @@ def parse_ntriples(
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """S5: N-Triples text → statement rows (+ ``carry_cols`` passed through,
-    e.g. the graph column :func:`parse_nquads` splits off).
+    e.g. the graph column :func:`parse_nquads` splits off), through
+    :func:`split_union_parse` behind the :func:`fan_out_lines` guard.
 
-    The ingestion hot path at 100 TB, so the plan SPLITS the line stream on
-    a cheap codegen'd predicate and unions two branches:
-
-    - **clean branch** (in practice: everything): a 100% JVM plan — one
-      packed ``regexp_replace`` pass for structure, short anchored extracts
-      for the object sub-fields, a ``replace``-chain for ECHAR unescaping.
-      Whole-stage-codegen end to end, ZERO Python, no Arrow round trip.
-    - **assist branch** (lines carrying ``\\x01``/``\\x02`` — plain
-      N-Triples PERMITS raw C0 controls in literal bodies, only *canonical*
-      NT mandates escapes — or a ``\\u``/``\\U`` sequence, the one construct
-      SQL can't unescape): whole-line exact Python parse (``_parse_one``,
-      round-trip tested) through one Arrow-batched pandas UDF.
-
-    Earlier rounds kept ONE branch and shipped per-row NULLs to the pandas
-    UDFs instead; measured at 905k clean lines / local[32], those always-on
-    Python exchanges cost 2.4× end-to-end (6.5s vs 2.7s) even with all-NULL
-    batches — the split-union removes them from the hot path entirely, and
-    the upstream exchange is reused across the two branches
-    (ReusedExchange), so the source is still scanned once per shuffle
-    boundary. Other measured dead ends (so nobody re-tries them): a 6-group
-    packed pattern (~8% slower — the packed string carries the literal body
-    twice), is-literal gating of the short extracts (a wash), and a pandas
-    ``.str``-chain rewrite of the fallback (2× slower than the row loop).
+    The ingestion hot path at 100 TB. The clean branch is one packed
+    ``regexp_replace`` pass for structure, emptiness probes and substrings
+    for the object sub-fields, a ``replace``-chain for ECHAR unescaping;
+    lines :func:`needs_exact_parse` routes take ``_parse_one``
+    (round-trip tested). Measured dead ends (so nobody re-tries them): a
+    6-group packed pattern (~8% slower — the packed string carries the
+    literal body twice), is-literal gating of the short extracts (a
+    wash), and a pandas ``.str``-chain rewrite of the exact parser (2×
+    slower than the row loop).
 
     Malformed/comment/blank lines are dropped unless ``keep_malformed``
     (then returned with ``obj_kind`` NULL and the raw line in
-    ``obj_value`` for lineage auditing).
-
-    INPUT: both branches read ``lines``, so it should be cheap to scan
-    twice — a file scan, a cache or a checkpoint. Code that builds a
-    Python or union line stream materializes it once itself (as
-    ``turtle_io.normalize_turtle_docs`` does); a live union fed here has
-    the assist branch's UDF cloned into every producer branch.
+    ``obj_value`` for lineage auditing). Input contract: see
+    :func:`split_union_parse`.
     """
-    lines = fan_out_lines(lines)
-
-    @F.pandas_udf(f"struct<{PARSED_SCHEMA}>")
-    def _parse_py(s: pd.Series) -> pd.DataFrame:
-        cols = ["subj", "pred", "obj_value", "obj_kind", "obj_lang",
-                "obj_datatype"]
-        return pd.DataFrame(
-            [_parse_one(x) for x in s], columns=cols, index=s.index
-        )
-
-    # plan barrier, not semantics (see turtle_io._ttl_fallback_udf): keeps
-    # PushDownPredicates / constraint inference from substituting the UDF
-    # below its projection and planning a second ArrowEvalPython
-    _parse_py = _parse_py.asNondeterministic()
-
     line = F.col(line_col)
     stripped = F.trim(line)
-    # The NONDETERMINISTIC base filter keeps itself and the branch filters
-    # above it. With an upstream exchange (a repartition, a shuffle) the
-    # two branches then share ONE reused upstream execution; without the
-    # guard, every branch predicate is pushed into each upstream union
-    # branch/scan separately and an expensive producer runs once per
-    # branch.
-    base = lines.filter(
-        barrier_filter((stripped != "") & ~stripped.startswith("#"))
-    )
-    # assist-branch routing (see docstring): raw sentinel bytes would
-    # corrupt the packed split / replace-chain; \u \U need Python. Four
-    # non-regex contains probes, codegen'd. A \u inside an IRI or behind an
-    # escaped backslash over-routes harmlessly — the Python parser is exact.
-    needs_py = (
-        line.contains("\x01") | line.contains("\x02")
-        | line.contains("\\u") | line.contains("\\U")
-    )
-    carry = [F.col(c) for c in carry_cols]
 
     # ONE regex pass over the line: pack ALL SEVEN groups with a \x01
-    # separator, then split — the round-2 3-group pack measured 4× cheaper
-    # than three independent regexp_extract calls, but still re-ran three
+    # separator, then split — a 3-group pack measured 4× cheaper than
+    # three independent regexp_extract calls, but still re-ran three
     # anchored extracts on the object for body/lang/datatype; this 7-group
     # pack (see _NT_PACKED_PATTERN) leaves ZERO regex work after the one
     # pass — object kind and every sub-field come from emptiness probes +
@@ -322,42 +368,39 @@ def parse_ntriples(
     dt = F.nullif(dt_raw, F.lit(""))
 
     iri_value = F.substring(iri_raw, F.lit(2), F.length(iri_raw) - 2)
-    # Malformed-drop happens PER BRANCH, not as an outer
-    # filter(obj_kind.isNotNull()) over the union: Catalyst substitutes a
-    # computed column's expression into the predicate, so the outer spelling
-    # re-evaluates the whole packed-parse chain in the filter on top of the
-    # projection — measured 14.5s vs 5.3s for the identical result at 905k
-    # lines. The clean branch's cheap equivalent is `matched` (obj_kind is
-    # non-NULL iff the pack matched); the assist branch filters on the
-    # ArrowEvalPython OUTPUT attribute, which never re-runs the UDF.
-    clean_pred = ~needs_py
-    if not keep_malformed:
-        clean_pred = clean_pred & matched
-    clean = base.filter(clean_pred).select(
-        *carry,
-        F.when(matched, subj).alias("subj"),
-        F.when(matched, pred_raw).alias("pred"),
-        F.when(~matched, line)
-        .when(is_iri, iri_value)
-        .when(is_bnode, bnode_raw)
-        .otherwise(body)
-        .alias("obj_value"),
-        F.when(matched & is_iri, "iri")
-        .when(matched & is_bnode, "bnode")
-        .when(matched, "literal")
-        .alias("obj_kind"),
-        F.when(matched & ~is_iri & ~is_bnode, lang).alias("obj_lang"),
-        F.when(matched & ~is_iri & ~is_bnode, dt).alias("obj_datatype"),
+
+    def clean(routed: DataFrame) -> DataFrame:
+        # the malformed drop's cheap spelling: obj_kind is non-NULL iff
+        # the pack matched
+        if not keep_malformed:
+            routed = routed.filter(matched)
+        return routed.select(
+            *carry_cols,
+            F.when(matched, subj).alias("subj"),
+            F.when(matched, pred_raw).alias("pred"),
+            F.when(~matched, line)
+            .when(is_iri, iri_value)
+            .when(is_bnode, bnode_raw)
+            .otherwise(body)
+            .alias("obj_value"),
+            F.when(matched & is_iri, "iri")
+            .when(matched & is_bnode, "bnode")
+            .when(matched, "literal")
+            .alias("obj_kind"),
+            F.when(matched & ~is_iri & ~is_bnode, lang).alias("obj_lang"),
+            F.when(matched & ~is_iri & ~is_bnode, dt).alias("obj_datatype"),
+        )
+
+    return split_union_parse(
+        fan_out_lines(lines),
+        line_col,
+        base=(stripped != "") & ~stripped.startswith("#"),
+        needs_exact=needs_exact_parse(line),
+        clean=clean,
+        parse_one=_parse_one,
+        keep_malformed=keep_malformed,
+        carry_cols=carry_cols,
     )
-    # struct-attribute filter BEFORE field expansion: filtering the
-    # expanded obj_kind column lets CollapseProject substitute the UDF into
-    # the predicate and plan a SECOND ArrowEvalPython that re-runs the
-    # parser just for the malformed drop (round-5 contract-test finding)
-    assist = base.filter(needs_py).select(*carry, _parse_py(line).alias("_p"))
-    if not keep_malformed:
-        assist = assist.filter(F.col("_p.obj_kind").isNotNull())
-    assist = assist.select(*carry, "_p.*")
-    return clean.unionByName(assist)
 
 
 # N-Quads = N-Triples + optional graph label (IRI or bnode) before the dot.

@@ -1,12 +1,13 @@
 """Turtle / TriG input parse (reference S5 — the remaining input syntaxes).
 
 The reference reads any standard RDF syntax through Jena (``JenaUtils.read``,
-reference ``Flows.kt:66-77``); round 2 shipped N-Triples and RDF/XML *parse*
-but only *rendered* Turtle/TriG. This module closes the ingestion gap with
-the same architecture as ``rdf_io.parse_ntriples``: a split-union plan
-whose clean branch is 100% JVM (whole-stage codegen, one packed regex pass
-per line), with lines carrying raw sentinel bytes or ``\\u``/``\\U``
-escapes routed whole to an exact Arrow-batched Python parser.
+reference ``Flows.kt:66-77``). This module parses Turtle and TriG through
+the one split-union skeleton every line parser shares,
+``rdf_io.split_union_parse``: a clean branch that is 100% JVM (whole-stage
+codegen, one packed regex pass per line, :func:`ttl_statement_columns`),
+with lines carrying raw sentinel bytes or ``\\u``/``\\U`` escapes
+(``rdf_io.needs_exact_parse``) routed whole to the exact Python twin
+``_parse_one_ttl``.
 
 Scope — honest and documented: **line-oriented Turtle**, i.e. the form our
 own ``functions/formats.ttl_line`` renderer emits plus the common
@@ -21,7 +22,7 @@ single-line statement subset:
 - numeric (integer / decimal / double) and boolean literal abbreviations,
   lexical form preserved (Jena semantics).
 
-Round 4 added :func:`parse_turtle_docs`: a per-document statement
+:func:`parse_turtle_docs` adds a per-document statement
 re-assembly pass (``_split_statements``) that normalizes the FULL common
 grammar — multi-line statements, ``;`` predicate-object lists, ``,``
 object lists, triple- and single-quoted strings, comments, SPARQL-style
@@ -30,7 +31,7 @@ directives — into the single-line statement form above, so real-world
 routes ``.ttl`` sources through it (and ``.trig`` sources through
 :func:`parse_trig_docs`, the TriG twin built on the same tokenizer —
 graph blocks incl. the ``GRAPH`` keyword, default-graph statements,
-optional final ``.`` before ``}``). Round 5 completed the grammar:
+optional final ``.`` before ``}``). The re-assembly covers
 blank-node property lists ``[...]`` (fresh deterministic labels, nested),
 collections ``(...)`` (``rdf:first``/``rdf:rest`` chains), and
 ``@base``/``BASE`` with full RFC 3986 relative-IRI resolution (the
@@ -64,11 +65,12 @@ from pyspark.sql import functions as F
 
 from ..vocab import RDF_TYPE, XSD_NS
 from .rdf_io import (
-    PARSED_SCHEMA,
-    barrier_filter,
+    PARSED_COLUMNS,
     fan_out_lines,
     materialize_lines,
+    needs_exact_parse,
     plan_barrier,
+    split_union_parse,
 )
 
 XSD_BOOLEAN = XSD_NS + "boolean"
@@ -274,12 +276,11 @@ def ttl_statement_columns(
     acceptable for single-projection consumers.
 
     CONTRACT: callers must route lines carrying raw ``\\x01``/``\\x02``
-    sentinel bytes OR ``\\u``/``\\U`` escapes to the exact-Python assist
-    branch (``_ttl_fallback_udf``) — the replace-chain here handles every
-    ECHAR but not numeric escapes, and the sentinels would corrupt the
-    packed split. This is the same routing contract as
-    ``rdf_io.parse_ntriples``; keeping the Arrow unescape out of this
-    expression tree is what keeps the clean branch whole-stage-codegen
+    sentinel bytes OR ``\\u``/``\\U`` escapes
+    (``rdf_io.needs_exact_parse``) to the exact-Python assist branch — the
+    replace-chain here handles every ECHAR but not numeric escapes, and
+    the sentinels would corrupt the packed split. Keeping the Arrow
+    unescape out of this expression tree is what keeps the clean branch whole-stage-codegen
     (an embedded always-on pandas UDF measured 17-61s vs ~6s on the
     905k-line parse)."""
     if parts is None:
@@ -411,23 +412,15 @@ def parse_turtle(
     malformed bucket (``obj_kind`` NULL, raw line in ``obj_value``) and is
     dropped unless ``keep_malformed``.
 
-    Same split-union architecture as ``rdf_io.parse_ntriples`` (round-4 —
-    previously a per-column ``when(has_ctl, fb).otherwise(cols)`` coalesce
-    kept an always-on NULL-fed ArrowEvalPython stage over EVERY line;
-    measured ~30s vs ~6s for 905k lines at local[32]): the clean branch
-    (no raw sentinel bytes — in practice everything) is 100% JVM, the
-    assist branch routes whole lines through the exact Python twin, and an
-    always-true nondeterministic guard keeps Catalyst from duplicating an
-    expensive upstream into both branch filters.
-
-    INPUT: the same contract as ``rdf_io.parse_ntriples`` — the prefix
+    The parse is ``rdf_io.split_union_parse`` (its docstring holds the
+    measured plan discipline and the input contract: the prefix
     extraction and both branches read ``lines``, so pass a file scan, a
-    cache or a checkpoint (``normalize_turtle_docs`` returns one). A live
-    render union fed here gets the assist UDF cloned into every producer
-    branch (measured 5× plan inflation off an 18-branch render union)."""
+    cache or a checkpoint — ``normalize_turtle_docs`` returns one)."""
     if prefixes is None:
         prefixes = extract_prefixes(lines, line_col)
-    return _parse_statement_lines(lines, line_col, prefixes, keep_malformed)
+    return _parse_statement_lines(
+        fan_out_lines(lines), line_col, prefixes, keep_malformed
+    )
 
 
 def _parse_statement_lines(
@@ -436,98 +429,58 @@ def _parse_statement_lines(
     prefixes: dict[str, str],
     keep_malformed: bool,
     carry_cols: tuple[str, ...] = (),
+    header: Column | None = None,
 ) -> DataFrame:
-    """The shared split-union statement parse over a (materialized)
-    normalized-line stream; ``carry_cols`` (e.g. ``graph``) pass through
-    both branches. All the measured plan discipline lives here:
+    """The Turtle statement parse over a line stream, through
+    ``rdf_io.split_union_parse``: blank, comment and directive lines are
+    consumed, and so are TriG block headers (``header`` non-NULL) and
+    closing braces when ``header`` is given; ``carry_cols`` (e.g.
+    ``graph``) pass through both branches.
 
-    - nondeterministic guard FIRST in the base filter (see
-      ``rdf_io.parse_ntriples``): without it every deterministic predicate
-      — including the directive rlike — pushes below an upstream
-      union/exchange and re-evaluates per upstream branch (measured
-      38-61s vs ~7s on the 905k-line rendered input);
-    - two-step clean branch: the expensive packed-regex split is projected
-      ONCE into an attribute; every statement column and the malformed
-      filter reference the attribute, and the guard COLUMN rides in the
-      same projection so the filter's predicate stays
-      nondeterministic-derived and cannot be substituted below the
-      projection (measured 33s vs ~7s);
-    - the assist branch filters the ArrowEvalPython OUTPUT struct BEFORE
-      field expansion (a post-expansion filter plans a SECOND
-      ArrowEvalPython that re-runs the parser — round-5 contract test).
+    The clean branch is two-step: the expensive packed-regex split is
+    projected ONCE into an attribute; every statement column and the
+    malformed filter reference the attribute, and the guard COLUMN rides
+    in the same projection so the filter's predicate stays
+    nondeterministic-derived and cannot be substituted below the
+    projection (measured 33s vs ~7s).
     """
-    lines = fan_out_lines(lines)
-
     line = F.col(line_col)
     stripped = F.trim(line)
-    fallback = _ttl_fallback_udf(prefixes)
-    carry = [F.col(c) for c in carry_cols]
-
-    # assist routing per the ttl_statement_columns contract: raw sentinel
-    # bytes AND \u/\U escapes take the exact-Python branch
-    needs_py = (
-        line.contains("\x01") | line.contains("\x02")
-        | line.contains("\\u") | line.contains("\\U")
+    statement = stripped != ""
+    if header is not None:
+        statement = header.isNull() & statement & (stripped != "}")
+    statement = (
+        statement
+        & ~stripped.startswith("#")
+        & ~stripped.rlike(_DIRECTIVE_FILTER)
     )
-    base = lines.filter(
-        barrier_filter(
-            (stripped != "")
-            & ~stripped.startswith("#")
-            & ~stripped.rlike(_DIRECTIVE_FILTER)
+
+    def clean(routed: DataFrame) -> DataFrame:
+        step = routed.select(
+            *carry_cols,
+            line.alias("_l"),
+            plan_barrier().alias("_g"),
+            ttl_packed_parts(line).alias("_parts"),
         )
-    )
-    step = base.filter(~needs_py).select(
-        *carry,
-        line.alias("_l"),
-        plan_barrier().alias("_g"),
-        ttl_packed_parts(line).alias("_parts"),
-    )
-    cols = ttl_statement_columns(
-        F.col("_l"), prefixes, parts=F.col("_parts")
-    )
-    out_cols = (
-        "subj", "pred", "obj_value", "obj_kind", "obj_lang", "obj_datatype"
-    )
-    if not keep_malformed:
-        step = step.filter(F.col("_g") & cols["_ok"])
-    clean = step.select(
-        *carry_cols, *[cols[c].alias(c) for c in out_cols]
-    )
-    assist = base.filter(needs_py).select(
-        *carry, fallback(line).alias("_p")
-    )
-    if not keep_malformed:
-        assist = assist.filter(F.col("_p.obj_kind").isNotNull())
-    assist = assist.select(*carry_cols, "_p.*")
-    return clean.unionByName(assist)
+        cols = ttl_statement_columns(
+            F.col("_l"), prefixes, parts=F.col("_parts")
+        )
+        if not keep_malformed:
+            step = step.filter(F.col("_g") & cols["_ok"])
+        return step.select(
+            *carry_cols, *[cols[c].alias(c) for c in PARSED_COLUMNS]
+        )
 
-
-def _ttl_fallback_udf(prefixes: dict[str, str]):
-    """Arrow-batched exact-Python statement parser (sentinel-byte assist
-    branch of :func:`parse_turtle` / :func:`parse_trig`).
-
-    Marked nondeterministic (it isn't, semantically) as a PLAN BARRIER:
-    a deterministic UDF referenced by the malformed-drop filter gets
-    substituted below the output projection by PushDownPredicates — and
-    InferFiltersFromConstraints re-derives pushable isnotnull copies even
-    behind a nondeterministic guard conjunct — planning a SECOND
-    ArrowEvalPython that re-runs the parser per consumer. Nondeterminism
-    is the one property every such rule refuses to move or duplicate."""
-    @F.pandas_udf(f"struct<{PARSED_SCHEMA}>")
-    def _parse_fallback(s: pd.Series) -> pd.DataFrame:
-        names = ["subj", "pred", "obj_value", "obj_kind", "obj_lang",
-                 "obj_datatype"]
-        mask = s.notna()
-        out = pd.DataFrame(None, index=s.index, columns=names, dtype=object)
-        if mask.any():
-            out.loc[mask] = pd.DataFrame(
-                [_parse_one_ttl(x, prefixes) for x in s[mask]],
-                columns=names,
-                index=s.index[mask],
-            )
-        return out
-
-    return _parse_fallback.asNondeterministic()
+    return split_union_parse(
+        lines,
+        line_col,
+        base=statement,
+        needs_exact=needs_exact_parse(line),
+        clean=clean,
+        parse_one=lambda text: _parse_one_ttl(text, prefixes),
+        keep_malformed=keep_malformed,
+        carry_cols=carry_cols,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -625,7 +578,7 @@ def _tokenize_ttl(text: str) -> Iterator[tuple[str, str]]:
                 # two unescaped quotes — the terminator is the LAST 3 of a
                 # quote run, so absorb up to two extra quotes into the body
                 # ("""abc"""" = body abc"). Without this, spec-legal input
-                # raised document-level 'unterminated string' (ADVICE r4).
+                # raised document-level 'unterminated string'.
                 absorb = 0
                 while absorb < 2 and k + 3 + absorb < n and text[k + 3 + absorb] == c:
                     absorb += 1
@@ -808,7 +761,7 @@ _RDF_NIL = f"<{_RDF_NS}nil>"
 #: DOCUMENT — counters restarting per document would otherwise collide
 #: across files of a multi-file harvest and silently merge unrelated
 #: bnodes once the graphs union (Jena allocates globally fresh anon ids
-#: per parse; round-5 review finding). Two byte-identical documents share
+#: per parse). Two byte-identical documents share
 #: labels, which is set-idempotent: identical docs emit identical
 #: statements. The prefix is guarded: a document whose own blank-node
 #: labels use it raises loudly.
@@ -921,7 +874,7 @@ def _split_statements_tagged(
     def flush(terminated: bool) -> None:
         nonlocal cur, unsupported, depth
         # depth is statement-scoped: an unbalanced statement must not
-        # poison bracket tracking for everything after it (r5 review)
+        # poison bracket tracking for everything after it
         depth = 0
         if not cur:
             unsupported = False
@@ -950,7 +903,7 @@ def _split_statements_tagged(
     for kind, tok in toks:
         if kind == "WORD" and _GEN_BNODE_GUARD.match(tok):
             # guard in blank-node-LABEL position only (a literal merely
-            # containing the string is fine — r5 review): a document using
+            # containing the string is fine): a document using
             # the reserved prefix for its own labels would silently merge
             # with synthesized nodes
             raise ValueError(
@@ -993,7 +946,7 @@ def _split_statements_tagged(
             else:
                 # stray closer at depth 0: malformed content, and depth
                 # must not go negative (a later legitimate bracket would
-                # otherwise mis-track — r5 review)
+                # otherwise mis-track)
                 unsupported = True
             cur.append(tok)
         elif kind == "PUNCT" and tok == "." and depth <= 0:
@@ -1178,27 +1131,47 @@ def normalize_turtle_docs(
     on. Relative IRIs with no in-scope base raise. ``base_iri_col`` names
     a PER-ROW base column instead (e.g. ``input_file_name()`` for a
     multi-file read — each document must resolve against its OWN address,
-    not a shared directory path; r5 review) and wins over ``base_iri``.
+    not a shared directory path) and wins over ``base_iri``.
 
     Parallelism is ACROSS documents — a single multi-GB ``.ttl`` dump
     normalizes in one task (and past ``MAX_TTL_DOC_BYTES`` raises with
     guidance to split the dump into parts first); this mirrors the
     reference, which reads one document single-threaded through Jena."""
-    import pandas as pd  # noqa: F811 — local for the executor closure
-
-    carry = list(carry_cols)
-    schema = ", ".join(
-        [f"{c} string" for c in carry] + ["value string"]
+    return _normalize_docs(
+        docs, ttl_col, carry_cols, base_iri, base_iri_col, line_transform,
+        "Turtle", ("value",),
+        lambda text, base: ((line,) for line in _split_statements(text, base)),
     )
+
+
+def _normalize_docs(
+    docs: DataFrame,
+    doc_col: str,
+    carry_cols: tuple[str, ...],
+    base_iri: str | None,
+    base_iri_col: str | None,
+    line_transform,
+    syntax: str,
+    fields: tuple[str, ...],
+    split,
+) -> DataFrame:
+    """The per-document normalizer loop of :func:`normalize_turtle_docs`
+    and :func:`normalize_trig_docs`: ``split(text, base)`` yields one
+    ``fields`` tuple per normalized line, run per document in one
+    ``mapInPandas`` pass whose output is one :func:`materialize_lines`
+    checkpoint."""
+    carry = list(carry_cols)
+    names = [*carry, *fields]
+    schema = ", ".join(f"{c} string" for c in names)
 
     def _norm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for _, r in pdf.iterrows():
-                text = r[ttl_col] or ""
+                text = r[doc_col] or ""
                 if len(text) > MAX_TTL_DOC_BYTES:
                     raise ValueError(
-                        f"Turtle document of {len(text)} chars exceeds the "
+                        f"{syntax} document of {len(text)} chars exceeds the "
                         f"{MAX_TTL_DOC_BYTES}-byte single-document limit — "
                         "split the dump into parts (statement re-assembly "
                         "parallelizes across documents, not within one)"
@@ -1206,9 +1179,9 @@ def normalize_turtle_docs(
                 # per-row base wins; '' (input_file_name on a non-file
                 # source) falls back to the shared base
                 base = (r[base_iri_col] if base_iri_col else None) or base_iri
-                for line in _split_statements(text, base_iri=base):
-                    rows.append([*(r[c] for c in carry), line])
-            yield pd.DataFrame(rows, columns=[*carry, "value"])
+                prefix = [r[c] for c in carry]
+                rows.extend([*prefix, *out] for out in split(text, base))
+            yield pd.DataFrame(rows, columns=names)
 
     return materialize_lines(docs.mapInPandas(_norm, schema), line_transform)
 
@@ -1256,32 +1229,11 @@ def normalize_trig_docs(
     and default-graph statements. Materialized like
     :func:`normalize_turtle_docs`: one local checkpoint, taken after
     ``line_transform``."""
-    import pandas as pd  # noqa: F811 — local for the executor closure
-
-    carry = list(carry_cols)
-    schema = ", ".join(
-        [f"{c} string" for c in carry] + ["graph string", "value string"]
+    return _normalize_docs(
+        docs, trig_col, carry_cols, base_iri, base_iri_col, line_transform,
+        "TriG", ("graph", "value"),
+        lambda text, base: _split_statements_tagged(text, base, trig=True),
     )
-
-    def _norm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                text = r[trig_col] or ""
-                if len(text) > MAX_TTL_DOC_BYTES:
-                    raise ValueError(
-                        f"TriG document of {len(text)} chars exceeds the "
-                        f"{MAX_TTL_DOC_BYTES}-byte single-document limit — "
-                        "split the dump into parts"
-                    )
-                base = (r[base_iri_col] if base_iri_col else None) or base_iri
-                for g, line in _split_statements_tagged(
-                    text, base_iri=base, trig=True
-                ):
-                    rows.append([*(r[c] for c in carry), g, line])
-            yield pd.DataFrame(rows, columns=[*carry, "graph", "value"])
-
-    return materialize_lines(docs.mapInPandas(_norm, schema), line_transform)
 
 
 def parse_trig_docs(
@@ -1312,7 +1264,7 @@ def parse_trig_docs(
     if prefixes is None:
         prefixes = extract_prefixes(lines, "value")
     return _parse_statement_lines(
-        lines, "value", prefixes, keep_malformed,
+        fan_out_lines(lines), "value", prefixes, keep_malformed,
         carry_cols=(*carry_cols, "graph"),
     )
 
@@ -1345,7 +1297,10 @@ def parse_trig(
     ``carry_cols`` (whose uniqueness the caller couldn't be trusted to
     guarantee: with a shared key, ``_pos`` ties across documents and the
     default RANGE frame would leak graph headers between documents).
-    ``carry_cols`` are pass-through annotation columns only.
+    ``carry_cols`` are pass-through annotation columns only. After the
+    explode and the header window, the statement parse is
+    :func:`parse_turtle`'s (``rdf_io.split_union_parse``), with header and
+    ``}`` lines consumed.
 
     Same input contract as :func:`parse_turtle`: the prefix extraction
     and the per-document explode read ``docs``, so pass a scan, a cache
@@ -1374,56 +1329,10 @@ def parse_trig(
         .withColumn(
             "graph", F.last("_hdr", ignorenulls=True).over(w)
         )
-        .filter(
-            # the barrier keeps the branch filters above from pushing
-            # below the per-document explode
-            barrier_filter(
-                F.col("_hdr").isNull()
-                & (F.trim("_line") != "")
-                & (F.trim("_line") != "}")
-                & ~F.trim("_line").startswith("#")
-                & ~F.trim("_line").rlike(_DIRECTIVE_FILTER)
-            )
-        )
     )
-    # Sentinel-byte fallback, same split-union routing as parse_turtle:
-    # the JVM replace-chain in ttl_statement_columns uses \x01/\x02
-    # internally, so a literal carrying either raw byte (legal inside
-    # Turtle quoted literals) must take the exact-Python path instead of
-    # silently corrupting (\x02 → '\\') or landing in the malformed
-    # bucket (\x01). The clean branch never touches Python; the malformed
-    # drop uses the UDF-free validity expression (see parse_turtle).
-    line = F.col("_line")
-    needs_py = (
-        line.contains("\x01") | line.contains("\x02")
-        | line.contains("\\u") | line.contains("\\U")
+    # the base filter's barrier keeps the branch filters from pushing
+    # below the per-document explode
+    return _parse_statement_lines(
+        exploded, "_line", prefixes, keep_malformed,
+        carry_cols=(*carry_cols, "graph"), header=F.col("_hdr"),
     )
-    fallback = _ttl_fallback_udf(prefixes)
-    out_cols = (
-        "subj", "pred", "obj_value", "obj_kind", "obj_lang", "obj_datatype"
-    )
-    # same two-step discipline as parse_turtle: pack once into an
-    # attribute, guard column blocks predicate substitution
-    step = exploded.filter(~needs_py).select(
-        *carry_cols,
-        "graph",
-        line.alias("_l"),
-        plan_barrier().alias("_g"),
-        ttl_packed_parts(line).alias("_parts"),
-    )
-    cols = ttl_statement_columns(
-        F.col("_l"), prefixes, parts=F.col("_parts")
-    )
-    if not keep_malformed:
-        step = step.filter(F.col("_g") & cols["_ok"])
-    clean = step.select(
-        *carry_cols, "graph", *[cols[c].alias(c) for c in out_cols]
-    )
-    # struct-attribute filter before field expansion — see parse_turtle
-    assist = exploded.filter(needs_py).select(
-        *carry_cols, "graph", fallback(line).alias("_p")
-    )
-    if not keep_malformed:
-        assist = assist.filter(F.col("_p.obj_kind").isNotNull())
-    assist = assist.select(*carry_cols, "graph", "_p.*")
-    return clean.unionByName(assist)

@@ -76,10 +76,11 @@ COMMENTARY = {
         "still under the closure's 4M-edge broadcast bound)."
     ),
     "jsonld_parse_roundtrip": (
-        "Round-5 rebuild on the split-union parser architecture: the "
-        "previous single-projection spelling inlined the Python fallback "
-        "into every output column and re-evaluated it in the malformed-drop "
-        "filter — measured 59.7s vs 7.2s for the identical 905k-line parse. "
+        "The split-union parse every line parser shares "
+        "(rdf_io.split_union_parse): a single-projection spelling that "
+        "inlined the Python fallback into every output column and "
+        "re-evaluated it in the malformed-drop filter measured 59.7s vs "
+        "7.2s for the identical 905k-line parse. "
         "Clean branch = packed regex + anchored extracts projected into "
         "attributes, 100% whole-stage codegen; assist branch = one "
         "ArrowEvalPython behind a nondeterministic plan barrier."

@@ -21,6 +21,7 @@ from bop_consus_importing_rdf_spark.kg.pipeline import (
     build_kg,
     build_kg_dictionary,
     canonical_entity_map,
+    kg_triples,
     stable_turns,
 )
 from bop_consus_importing_rdf_spark.kg.synth import (
@@ -230,6 +231,31 @@ def test_build_kg_at_scale_path_matches_broadcast_path(
     assert at_scale.exceptAll(small).count() == 0
 
 
+def test_at_scale_dictionary_builds_match_table_once(
+    spark, aliases, monkeypatch
+):
+    """The at-scale dictionary holds the join matcher's validated alias
+    table: three kg_triples calls on one dictionary (three resume
+    buckets) build it, and run its validation job, once."""
+    from bop_consus_importing_rdf_spark.kg import matcher
+
+    calls = []
+
+    def counting(*args, _f=matcher.alias_match_table, **kwargs):
+        calls.append(args)
+        return _f(*args, **kwargs)
+
+    monkeypatch.setattr(matcher, "alias_match_table", counting)
+    monkeypatch.setattr(pipeline, "SMALL_GAZETTEER_ROWS", 0)
+    dictionary = build_kg_dictionary(spark, aliases)
+    t = synth_transcripts(spark, n_conv=5, seed=7)
+    for _ in range(3):
+        kg_triples(dictionary, t).write.format("noop").mode(
+            "overwrite"
+        ).save()
+    assert len(calls) == 1
+
+
 def test_gazetteer_scale_decision_is_one_rule(
     spark, tmp_path, monkeypatch, caplog
 ):
@@ -274,13 +300,14 @@ def test_gazetteer_scale_decision_is_one_rule(
     for bound, branch in ((4, "broadcast"), (3, "at-scale")):
         monkeypatch.setattr(pipeline, "SMALL_GAZETTEER_ROWS", bound)
         caplog.clear()
-        stream_branches.clear()
         columns = build_kg_dictionary(spark, gaz).columns
         assert (columns is not None) == (branch == "broadcast")
         canon_plan = (
             canonical_entity_map(gaz)._jdf.queryExecution().analyzed()
         ).toString()
         assert ("Join" in canon_plan) == (branch == "at-scale")
+        # the at-scale dictionary builds the join matcher's table too
+        stream_branches.clear()
         stream_extract_triples(
             spark, in_dir, str(tmp_path / f"out{bound}"), gaz
         ).awaitTermination(120)

@@ -157,3 +157,111 @@ def test_split_statements_bnode_collection_property(lits):
         got.append(by_sp[(node, rdf + "first")])
         node = by_sp[(node, rdf + "rest")]
     assert got == rest
+
+
+# ---------------------------------------------------------------------------
+# Line parsers: malformed lines are counted as rejects, never dropped
+# ---------------------------------------------------------------------------
+
+#: literal characters that exercise both split-union branches: the raw
+#: sentinel bytes and a backslash before ``u`` route to the exact parser
+_LIT_CHARS = ["a", "u", " ", ".", "é", '"', "\\", "\n", "\x01", "\x02"]
+
+
+def _nt_literal(s: str, use_u: bool) -> str:
+    out = _escape(s)
+    if use_u:  # non-ASCII as \uXXXX escapes
+        out = "".join(f"\\u{ord(c):04x}" if ord(c) > 127 else c for c in out)
+    return out
+
+
+def _json_literal(s: str, use_u: bool) -> str:
+    out = []
+    for c in s:
+        if c in '"\\':
+            out.append("\\" + c)
+        elif c == "\n":
+            out.append("\\n")
+        elif ord(c) < 0x20 or (use_u and ord(c) > 127):
+            out.append(f"\\u{ord(c):04x}")
+        else:
+            out.append(c)
+    return "".join(out)
+
+
+def _nt_lines(i, s, use_u):
+    good = f'<urn:s:{i}> <urn:p> "{_nt_literal(s, use_u)}" .'
+    return good, good[:-2]  # malformed: no terminating dot
+
+
+def _jsonld_lines(i, s, use_u):
+    good = (
+        f'{{"@id":"urn:s:{i}","urn:p":[{{"@value":"'
+        f'{_json_literal(s, use_u)}"}}]}}'
+    )
+    # malformed: raw (unescaped) literal, no closing brace
+    bad = f'{{"@id":"urn:s:{i}","urn:p":[{{"@value":"{s}"}}]'
+    return good, bad
+
+
+_ENTRY = st.tuples(
+    st.lists(st.sampled_from(_LIT_CHARS), max_size=8).map("".join),
+    st.booleans(),  # \u-escape the non-ASCII characters
+    st.booleans(),  # inject the malformed variant instead
+)
+#: every example carries a sentinel-byte line, a \u line and a malformed
+#: line besides the generated ones
+_FIXED = [("a\x01b\x02", False, False), ("é", True, False), ("x", False, True)]
+
+
+@settings(max_examples=6, deadline=None, derandomize=True)
+@given(entries=st.lists(_ENTRY, max_size=6))
+def test_line_parsers_count_malformed_never_drop(spark, entries):
+    """For N-Triples, Turtle, TriG and JSON-LD lines mixing valid,
+    malformed, sentinel-byte and ``\\u`` lines: with ``keep_malformed``
+    the ``obj_kind`` NULL rows are exactly the injected malformed lines
+    (raw text in ``obj_value``) and every valid line yields its
+    statement; without it the output is exactly the non-NULL rows."""
+    from bop_consus_importing_rdf_spark.sources.jsonld_io import parse_jsonld
+    from bop_consus_importing_rdf_spark.sources.rdf_io import parse_ntriples
+    from bop_consus_importing_rdf_spark.sources.turtle_io import (
+        parse_trig,
+        parse_turtle,
+    )
+
+    def line_frame(lines):
+        return spark.createDataFrame([(x,) for x in lines], "value string")
+
+    def trig_frame(lines):
+        doc = "<urn:g> {\n" + "\n".join(lines) + "\n}\n"
+        return spark.createDataFrame([(doc,)], "trig string")
+
+    parsers = [
+        ("ntriples", _nt_lines, line_frame,
+         lambda df, km: parse_ntriples(df, keep_malformed=km)),
+        ("turtle", _nt_lines, line_frame,
+         lambda df, km: parse_turtle(df, prefixes={}, keep_malformed=km)),
+        ("trig", _nt_lines, trig_frame,
+         lambda df, km: parse_trig(df, prefixes={}, keep_malformed=km)),
+        ("jsonld", _jsonld_lines, line_frame,
+         lambda df, km: parse_jsonld(df, keep_malformed=km)),
+    ]
+    cols = ["subj", "pred", "obj_value", "obj_kind", "obj_lang",
+            "obj_datatype"]
+    for name, render, frame, parse in parsers:
+        lines, bad, valid = [], [], set()
+        for i, (s, use_u, broken) in enumerate(_FIXED + entries):
+            good, malformed = render(i, s, use_u)
+            lines.append(malformed if broken else good)
+            if broken:
+                bad.append(malformed)
+            else:
+                valid.add(f"urn:s:{i}")
+        df = frame(lines)
+        kept = [tuple(r) for r in parse(df, True).select(cols).collect()]
+        rejects = sorted(r[2] for r in kept if r[3] is None)
+        assert rejects == sorted(bad), name
+        ok = sorted(r for r in kept if r[3] is not None)
+        assert sorted(r[0] for r in ok) == sorted(valid), name
+        dropped = [tuple(r) for r in parse(df, False).select(cols).collect()]
+        assert sorted(dropped) == ok, name

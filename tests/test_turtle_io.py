@@ -127,12 +127,19 @@ def _run_counting_plan_nodes(spark, run):
 def test_parser_plans_one_python_eval_over_materialized_lines(spark, tmp_path):
     """The split-union parse runs each Python pass once. A render union
     the caller checkpointed is parsed with ONE ArrowEvalPython (the assist
-    branch is not cloned into the producer branches); on the production
+    branch is not cloned into the producer branches) by every line
+    parser — Turtle, N-Triples, TriG and JSON-LD; on the production
     path, ``parse_turtle_docs``' re-assembly MapInPandas runs once, in
     the normalizer's checkpoint, and the parse adds the one
     ArrowEvalPython."""
     from bop_consus_importing_rdf_spark.functions.formats import (
-        prefix_directives, ttl_grouped_docs, ttl_line,
+        jsonld_line, prefix_directives, ttl_grouped_docs, ttl_line,
+    )
+    from bop_consus_importing_rdf_spark.sources.jsonld_io import (
+        parse_jsonld,
+    )
+    from bop_consus_importing_rdf_spark.sources.rdf_io import (
+        parse_ntriples,
     )
     from bop_consus_importing_rdf_spark.sources.turtle_io import (
         parse_turtle_docs,
@@ -145,27 +152,34 @@ def test_parser_plans_one_python_eval_over_materialized_lines(spark, tmp_path):
     )
     t = spark.read.parquet(f"{tmp_path}/t")
     want = _nt(triples_df(spark, ROWS))
-    # a multi-branch producer: one rendered branch per object kind plus
-    # the directive rows — the shape of the S10 render union
-    branches = [
-        spark.createDataFrame(
-            [(d,) for d in prefix_directives()], "value string"
-        )
-    ] + [
-        t.filter(F.col("obj_kind") == k).select(
-            ttl_line(*[F.col(c) for c in KEY]).alias("value")
-        )
-        for k in ("iri", "bnode", "literal")
-    ]
-    union = branches[0]
-    for b in branches[1:]:
-        union = union.union(b)
 
+    def render_union(line, directives=()):
+        # a multi-branch producer: one rendered branch per object kind
+        # plus the directive rows — the shape of the S10 render union
+        union = spark.createDataFrame(
+            [(d,) for d in directives], "value string"
+        )
+        for k in ("iri", "bnode", "literal"):
+            union = union.union(
+                t.filter(F.col("obj_kind") == k).select(
+                    line(*[F.col(c) for c in KEY]).alias("value")
+                )
+            )
+        return union.localCheckpoint()
+
+    one_eval = {"ArrowEvalPython": 1}
     cases = [
-        (lambda: parse_turtle(union.localCheckpoint(), prefixes=PREFIXES),
-         {"ArrowEvalPython": 1}),
+        (lambda: parse_turtle(
+            render_union(ttl_line, prefix_directives()), prefixes=PREFIXES
+        ), one_eval),
         (lambda: parse_turtle_docs(ttl_grouped_docs(t), prefixes=PREFIXES),
          {"ArrowEvalPython": 1, "MapInPandas": 1}),
+        (lambda: parse_ntriples(render_union(nt_line)), one_eval),
+        (lambda: parse_jsonld(render_union(jsonld_line)), one_eval),
+        (lambda: parse_trig(
+            trig_docs(t.withColumn("doc_id", F.lit("d1"))).localCheckpoint(),
+            prefixes=PREFIXES,
+        ), one_eval),
     ]
     for parse, want_evals in cases:
         rows, nodes = _run_counting_plan_nodes(
