@@ -11,11 +11,12 @@ natively against the statement-table model:
   pure column expression; the namespace of each predicate is declared
   inline on the property element, which sidesteps a global prefix table.
   Document assembly is one ``collect_list`` per source document.
-- **parse**: Arrow-batched ``mapInPandas`` over whole documents using
-  stdlib ``xml.etree`` — namespace-aware, full grammar since round 5:
-  ``rdf:Description`` and typed node elements, ``rdf:about``/``rdf:nodeID``
-  (blank)/``rdf:ID`` subjects, ``rdf:resource``/``rdf:nodeID`` object
-  attributes, nested node elements (anonymous → generated blank ids),
+- **parse**: ``_parse_doc`` per whole document, run by
+  ``sources/rdf_io.parse_docs`` (the one per-document driver of every
+  whole-document syntax), using stdlib ``xml.etree`` — namespace-aware,
+  full grammar since round 5: ``rdf:Description`` and typed node
+  elements, ``rdf:about``/``rdf:nodeID`` (blank)/``rdf:ID`` subjects,
+  ``rdf:resource``/``rdf:nodeID`` object attributes, nested node elements (anonymous → generated blank ids),
   literals with inherited ``xml:lang`` and ``rdf:datatype``, ``rdf:li``
   container expansion (``rdf:_1`` …), ``rdf:parseType``
   Resource/Collection/Literal, scoped ``xml:base`` + RFC 3986 relative-IRI
@@ -31,12 +32,12 @@ equal to ``nt_render`` straight off the graph.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from xml.etree.ElementTree import ParseError
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.rdf_io import PARSED_COLUMNS, parse_docs
 from ..vocab import KIND_BNODE, KIND_IRI, RDF_TYPE
 
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
@@ -382,12 +383,6 @@ def _parse_doc(xml: str, base_iri: str | None = None) -> list[tuple]:
     return rows
 
 
-PARSED_SCHEMA = (
-    "subj string, pred string, obj_value string, obj_kind string, "
-    "obj_lang string, obj_datatype string"
-)
-
-
 def parse_rdfxml(
     docs: DataFrame,
     xml_col: str = "xml",
@@ -396,7 +391,9 @@ def parse_rdfxml(
     base_iri: str | None = None,
     base_iri_col: str | None = None,
 ) -> DataFrame:
-    """Whole RDF/XML documents → statement rows, Arrow-batched.
+    """Whole RDF/XML documents → statement rows, through
+    ``sources/rdf_io.parse_docs``, the per-document driver of every
+    whole-document syntax.
 
     ``carry_cols`` (e.g. the source doc id) are replicated onto every
     emitted statement row. ``keep_malformed=True`` mirrors
@@ -412,40 +409,10 @@ def parse_rdfxml(
     with neither raises loudly (→ the reject bucket under
     ``keep_malformed``), never lands unresolved. ``base_iri_col`` names a
     column carrying a PER-ROW document address (``input_file_name()`` on
-    a directory ingest — the Turtle/JSON-LD path's convention in
-    ``harvest.py``); an empty/NULL cell falls back to ``base_iri``.
+    a directory ingest); an empty/NULL cell falls back to ``base_iri``.
     """
-    carry = list(carry_cols)
-    schema = PARSED_SCHEMA
-    for c in carry:
-        schema = f"{c} string, " + schema
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import xml.etree.ElementTree as ET
-
-        cols = carry + [
-            "subj", "pred", "obj_value", "obj_kind", "obj_lang", "obj_datatype"
-        ]
-        for pdf in it:
-            out: list[tuple] = []
-            for _, row in pdf.iterrows():
-                prefix = tuple(row[c] for c in carry)
-                base = base_iri
-                if base_iri_col is not None:
-                    per_row = row[base_iri_col]
-                    if per_row is not None and per_row != "":
-                        base = per_row
-                try:
-                    parsed = _parse_doc(row[xml_col], base_iri=base)
-                except (ET.ParseError, ValueError) as e:
-                    if not keep_malformed:
-                        raise
-                    out.append(
-                        prefix + (None, None, f"{type(e).__name__}: {e}",
-                                  None, None, None)
-                    )
-                    continue
-                out.extend(prefix + r for r in parsed)
-            yield pd.DataFrame(out, columns=cols)
-
-    return docs.mapInPandas(batches, schema)
+    return parse_docs(
+        docs, xml_col, _parse_doc, PARSED_COLUMNS, carry_cols, base_iri,
+        base_iri_col, rejects=(ParseError, ValueError),
+        keep_malformed=keep_malformed,
+    )

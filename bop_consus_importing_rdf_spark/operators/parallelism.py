@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame
 #: trigger, the ``cosine_topk`` corpus scan (780 KB × 1) must not.
 WORK_FLOOR_BYTES = 32 << 20
 
-_UNKNOWN_SIZE = (1 << 63) - 1  # Catalyst defaultSizeInBytes sentinel
+UNKNOWN_SIZE = (1 << 63) - 1  # Catalyst defaultSizeInBytes sentinel
 
 
 def _size_suffix_bytes(conf_val: str) -> int:
@@ -69,8 +69,8 @@ def plan_size_bytes(df: DataFrame) -> int:
     """The optimized logical plan's size statistic in bytes.
 
     For file scans this is file-index metadata (cheap, no physical
-    planning); for plans Catalyst can't size it is the Long.MaxValue
-    sentinel, which callers should treat as "assume wide"."""
+    planning); for plans Catalyst can't size it is :data:`UNKNOWN_SIZE`,
+    which callers should treat as "assume wide"."""
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
@@ -109,7 +109,7 @@ def ensure_min_parallelism(
     # 64-partition checkpoint as "narrow" and add a pointless shuffle
     # (measured +8s on the 905k-line NT parse). The probe is cheap here:
     # the RDD already exists, no physical planning happens.
-    if size == _UNKNOWN_SIZE or qe.analyzed().nodeName() == "LogicalRDD":
+    if size == UNKNOWN_SIZE or qe.analyzed().nodeName() == "LogicalRDD":
         if df.rdd.getNumPartitions() < target:
             return df.repartition(target)
         return df

@@ -791,8 +791,13 @@ def q_jsonld_parse_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flattened JSON-LD parse ∘ render == id (JSON escaping, \\u00XX
     control-char round-trip, @language/@type included)."""
     from .sources.jsonld_io import parse_jsonld
+    from .sources.rdf_io import materialize_lines
 
-    lines = q_jsonld_render(spark, sf_dir).withColumnRenamed("line", "value")
+    # materialized once, as the other roundtrips checkpoint their render:
+    # both parse branches read the line stream
+    lines = materialize_lines(
+        q_jsonld_render(spark, sf_dir).withColumnRenamed("line", "value")
+    )
     parsed = parse_jsonld(lines)
     return parsed.select(
         nt_line(

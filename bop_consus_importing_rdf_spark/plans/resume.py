@@ -48,20 +48,20 @@ def with_bucket(df: DataFrame, n_buckets: int = 16) -> DataFrame:
     )
 
 
-def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
-    """Existence check through the Hadoop FileSystem API — works for
-    ``file:``, ``hdfs:``, ``s3a:``… (``os.path.exists`` silently answers
-    False for any non-local URI, which would restart finished runs on an
-    object store)."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
+def hadoop_path(spark: SparkSession, path: str):
+    """``path`` as a Hadoop ``(FileSystem, Path)`` pair, for existence
+    checks and deletes that work for ``file:``, ``hdfs:``, ``s3a:``…
+    (``os.path.exists`` silently answers False for any non-local URI,
+    which would restart finished runs on an object store)."""
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs.exists(hpath)
+    return fs, hpath
 
 
 def committed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
     marker = os.path.join(out_dir, "_committed")
-    if not _hadoop_path_exists(spark, marker):
+    fs, hpath = hadoop_path(spark, marker)
+    if not fs.exists(hpath):
         return set()
     return {
         r.bucket for r in spark.read.parquet(marker).select("bucket").collect()

@@ -6,6 +6,9 @@ line, ``{"@id": s, pred: [{"@id": o} | {"@value": v, "@language"?: l,
 canonical flattened single-statement shape); full JSON-LD expansion with
 ``@context`` resolution is out of scope — such documents land in the
 malformed bucket, loudly countable via ``keep_malformed``.
+Compact-form DOCUMENTS (inline ``@context``, named graphs) are expanded
+per document by ``_expand_jsonld_doc`` through ``rdf_io.parse_docs``, the
+one per-document driver of every whole-document syntax.
 
 The line parse runs through ``rdf_io.split_union_parse``, the one
 split-union skeleton of every line parser: JVM regexp structure parse +
@@ -22,13 +25,12 @@ from __future__ import annotations
 import json
 import re
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .rdf_io import (
     PARSED_COLUMNS,
-    PARSED_SCHEMA,
+    parse_docs,
     plan_barrier,
     split_union_parse,
 )
@@ -555,63 +557,20 @@ def _expand_jsonld_doc(text: str, base_iri: str | None) -> list[tuple]:
     return st.out
 
 
-def _parse_jsonld(
-    docs: DataFrame,
-    jsonld_col: str,
-    carry_cols: tuple[str, ...],
-    keep_malformed: bool,
-    base_iri: str | None,
-    base_iri_col: str | None,
-    with_graph: bool,
-) -> DataFrame:
-    from collections.abc import Iterator
+#: what turns one compact document into a reject row (``rdf_io.parse_docs``)
+_DOC_REJECTS = (ValueError, KeyError, TypeError)
 
-    carry = list(carry_cols)
-    stmt_cols = list(PARSED_COLUMNS)
-    schema = PARSED_SCHEMA
-    if with_graph:
-        schema = "graph string, " + schema
-        stmt_cols = ["graph"] + stmt_cols
-    for c in carry:
-        schema = f"{c} string, " + schema
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = carry + stmt_cols
-        n_nulls = len(stmt_cols) - 4
-        for pdf in it:
-            out: list[tuple] = []
-            for _, row in pdf.iterrows():
-                prefix = tuple(row[c] for c in carry)
-                base = base_iri
-                if base_iri_col is not None and row[base_iri_col]:
-                    base = row[base_iri_col]
-                try:
-                    parsed = _expand_jsonld_doc(row[jsonld_col], base)
-                    if not with_graph and any(
-                        r[0] is not None for r in parsed
-                    ):
-                        raise ValueError(
-                            "document contains named graphs (quads) — "
-                            "parse with parse_jsonld_quads, the triple "
-                            "schema cannot hold a graph label"
-                        )
-                except (ValueError, KeyError, TypeError,
-                        json.JSONDecodeError) as e:
-                    if not keep_malformed:
-                        raise
-                    out.append(
-                        prefix
-                        + (None,) * n_nulls
-                        + (f"{type(e).__name__}: {e}", None, None, None)
-                    )
-                    continue
-                if with_graph:
-                    out.extend(prefix + r for r in parsed)
-                else:
-                    out.extend(prefix + r[1:] for r in parsed)
-            yield pd.DataFrame(out, columns=cols)
-
-    return docs.mapInPandas(batches, schema)
+def _expand_jsonld_triples(text: str, base_iri: str | None) -> list[tuple]:
+    """:func:`_expand_jsonld_doc` for the triple schema: a named graph
+    cannot be held there, so it raises."""
+    rows = _expand_jsonld_doc(text, base_iri)
+    if any(r[0] is not None for r in rows):
+        raise ValueError(
+            "document contains named graphs (quads) — parse with "
+            "parse_jsonld_quads, the triple schema cannot hold a graph label"
+        )
+    return [r[1:] for r in rows]
 
 
 def parse_jsonld_docs(
@@ -624,24 +583,24 @@ def parse_jsonld_docs(
 ) -> DataFrame:
     """Whole compact-form JSON-LD documents → statement rows (triples).
 
-    Same document-level mapInPandas architecture as
-    ``functions/rdfxml.parse_rdfxml`` (whole-document formats parallelize
-    across files; the per-document expansion is inherently recursive
-    Python): an unparseable/unsupported document yields ONE reject row
-    (``obj_kind`` NULL, error text in ``obj_value``) under
-    ``keep_malformed=True``, else raises. ``base_iri_col`` names a column
-    holding EACH document's own address (e.g. ``input_file_name()``) —
-    with a directory input a single path-derived base would mis-resolve
-    every file's relative IRIs (the turtle_io per-file-base rule);
-    a non-empty per-row value overrides ``base_iri``.
+    Through ``rdf_io.parse_docs``, the per-document driver of every
+    whole-document syntax (they parallelize across files; the
+    per-document expansion is inherently recursive Python): an
+    unparseable/unsupported document yields ONE reject row (``obj_kind``
+    NULL, error text in ``obj_value``) under ``keep_malformed=True``,
+    else raises. ``base_iri_col`` names a column holding EACH document's
+    own address (e.g. ``input_file_name()``) — with a directory input a
+    single path-derived base would mis-resolve every file's relative
+    IRIs; a non-empty per-row value overrides ``base_iri``.
 
     A document carrying NAMED graphs is not representable in the triple
     schema and lands in the reject bucket (or raises) — parse those with
     :func:`parse_jsonld_quads`, which emits the ``graph`` column.
     """
-    return _parse_jsonld(
-        docs, jsonld_col, carry_cols, keep_malformed, base_iri,
-        base_iri_col, with_graph=False,
+    return parse_docs(
+        docs, jsonld_col, _expand_jsonld_triples, PARSED_COLUMNS, carry_cols,
+        base_iri, base_iri_col, rejects=_DOC_REJECTS,
+        keep_malformed=keep_malformed,
     )
 
 
@@ -665,7 +624,8 @@ def parse_jsonld_quads(
     - graph content nested in object position works the same way (the
       node id is both the object and the graph name).
     """
-    return _parse_jsonld(
-        docs, jsonld_col, carry_cols, keep_malformed, base_iri,
-        base_iri_col, with_graph=True,
+    return parse_docs(
+        docs, jsonld_col, _expand_jsonld_doc, ("graph", *PARSED_COLUMNS),
+        carry_cols, base_iri, base_iri_col, rejects=_DOC_REJECTS,
+        keep_malformed=keep_malformed,
     )

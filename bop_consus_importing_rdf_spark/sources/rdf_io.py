@@ -20,12 +20,19 @@ Jena (``JenaUtils.read``, ``Flows.kt:66-77``). Here:
   tested. Malformed lines get ``obj_kind = NULL`` so callers can count
   rejects into lineage_metrics (the reference rethrows with address
   context, ``Flows.kt:75-77``).
+- **whole documents**: :func:`parse_docs`, the one per-document driver
+  every whole-document syntax (Turtle and TriG re-assembly in
+  ``turtle_io``, compact JSON-LD in ``jsonld_io``, RDF/XML in
+  ``functions/rdfxml``) runs through; each supplies only its
+  ``(text, base) → rows`` function. The driver owns the Arrow-batched
+  loop, the per-row base IRI, the :data:`MAX_DOC_BYTES` bound and the
+  reject row.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Callable
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -190,6 +197,76 @@ def materialize_lines(lines: DataFrame, line_transform=None) -> DataFrame:
     return lines.localCheckpoint()
 
 
+#: one document is parsed by one task (the reference's per-document Jena
+#: read, ``Flows.kt:66-77``); past ~1GB a single document also approaches
+#: Spark's single-string limits, so fail loudly with actionable guidance
+#: instead of OOMing mid-task.
+MAX_DOC_BYTES = 1 << 30
+
+
+def parse_docs(
+    docs: DataFrame,
+    doc_col: str,
+    parse_doc: Callable[[str, str | None], Iterable[tuple]],
+    fields: tuple[str, ...],
+    carry_cols: tuple[str, ...] = (),
+    base_iri: str | None = None,
+    base_iri_col: str | None = None,
+    rejects: tuple[type[Exception], ...] = (),
+    keep_malformed: bool = False,
+) -> DataFrame:
+    """The one per-document parse of the whole-document syntaxes (Turtle
+    and TriG re-assembly, compact JSON-LD, RDF/XML): ``parse_doc(text,
+    base)`` yields one ``fields`` tuple per output row, run per document
+    in one Arrow-batched ``mapInPandas`` pass; rows are ``carry_cols`` +
+    ``fields``, all strings. Parallelism is ACROSS documents, as in the
+    reference, which reads one document single-threaded through Jena.
+
+    - **base**: a non-empty ``base_iri_col`` cell (``input_file_name()``
+      on a multi-file read — each document resolves against its OWN
+      address, reference ``Flows.kt:69``) wins, otherwise ``base_iri``
+      (``input_file_name()`` is ``''`` on a non-file source).
+    - **size**: a document past :data:`MAX_DOC_BYTES` raises, whatever
+      ``keep_malformed`` says.
+    - **rejects**: a ``rejects`` exception becomes ONE reject row under
+      ``keep_malformed`` — every field NULL except ``obj_value``, which
+      holds the error text (the reference rethrows with address context,
+      ``Flows.kt:75-77``; here the address is a carry column) — and is
+      raised otherwise."""
+    carry = list(carry_cols)
+    names = [*carry, *fields]
+    schema = ", ".join(f"{c} string" for c in names)
+
+    def reject_row(e: Exception) -> tuple:
+        err = f"{type(e).__name__}: {e}"
+        return tuple(err if f == "obj_value" else None for f in fields)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for _, r in pdf.iterrows():
+                text = r[doc_col]
+                if text is not None and len(text) > MAX_DOC_BYTES:
+                    raise ValueError(
+                        f"document of {len(text)} chars exceeds the "
+                        f"{MAX_DOC_BYTES}-byte single-document limit — "
+                        "split the dump into parts (document parsing "
+                        "parallelizes across documents, not within one)"
+                    )
+                base = (r[base_iri_col] if base_iri_col else None) or base_iri
+                try:
+                    out = list(parse_doc(text, base))
+                except rejects as e:
+                    if not keep_malformed:
+                        raise
+                    out = [reject_row(e)]
+                prefix = [r[c] for c in carry]
+                rows.extend([*prefix, *o] for o in out)
+            yield pd.DataFrame(rows, columns=names)
+
+    return docs.mapInPandas(run, schema)
+
+
 _NT_LINE = re.compile(
     r"^\s*(?P<subj><[^>]*>|_:\S+)\s+"
     r"<(?P<pred>[^>]*)>\s+"
@@ -334,7 +411,9 @@ def parse_ntriples(
     packed = F.regexp_replace(
         line, _NT_PACKED_PATTERN, sep.join(f"${i}" for i in range(1, 8))
     )
-    parts = F.split(packed, sep, -1)
+    # the clean branch reads the split pack from an attribute (step 1
+    # below), so every field and the malformed filter share ONE regex pass
+    parts = F.col("_parts")
     matched = F.size(parts) == 7
     # F.get (NULL on out-of-bounds), NOT parts[i]: ANSI mode raises on OOB
     subj_raw = F.get(parts, 0)
@@ -370,15 +449,24 @@ def parse_ntriples(
     iri_value = F.substring(iri_raw, F.lit(2), F.length(iri_raw) - 2)
 
     def clean(routed: DataFrame) -> DataFrame:
-        # the malformed drop's cheap spelling: obj_kind is non-NULL iff
-        # the pack matched
+        # two-step, as turtle_io's clean branch: the packed split is
+        # projected ONCE into an attribute next to the guard COLUMN, so
+        # the malformed filter on ``_g & matched`` stays
+        # nondeterministic-derived and is not substituted below the
+        # projection, where it would re-run the regex pass per line
+        step = routed.select(
+            *carry_cols,
+            line.alias("_l"),
+            plan_barrier().alias("_g"),
+            F.split(packed, sep, -1).alias("_parts"),
+        )
         if not keep_malformed:
-            routed = routed.filter(matched)
-        return routed.select(
+            step = step.filter(F.col("_g") & matched)
+        return step.select(
             *carry_cols,
             F.when(matched, subj).alias("subj"),
             F.when(matched, pred_raw).alias("pred"),
-            F.when(~matched, line)
+            F.when(~matched, F.col("_l"))
             .when(is_iri, iri_value)
             .when(is_bnode, bnode_raw)
             .otherwise(body)

@@ -23,7 +23,9 @@ single-line statement subset:
   lexical form preserved (Jena semantics).
 
 :func:`parse_turtle_docs` adds a per-document statement
-re-assembly pass (``_split_statements``) that normalizes the FULL common
+re-assembly pass (``_split_statements``, run by ``rdf_io.parse_docs``,
+the one per-document driver of every whole-document syntax; TriG's
+``_split_statements_tagged`` runs there too) that normalizes the FULL common
 grammar — multi-line statements, ``;`` predicate-object lists, ``,``
 object lists, triple- and single-quoted strings, comments, SPARQL-style
 directives — into the single-line statement form above, so real-world
@@ -59,7 +61,6 @@ from __future__ import annotations
 import re
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -69,6 +70,7 @@ from .rdf_io import (
     fan_out_lines,
     materialize_lines,
     needs_exact_parse,
+    parse_docs,
     plan_barrier,
     split_union_parse,
 )
@@ -495,9 +497,9 @@ def _parse_statement_lines(
 # already handles: long/short strings are re-quoted to escaped double-quote
 # form, ``;``/``,`` lists are expanded into full ``subj pred obj .``
 # statements, directives pass through for ``extract_prefixes``. It runs
-# per-document inside ``mapInPandas`` — corpus parallelism is ACROSS
-# documents (same architecture as the RDF/XML reader); the per-statement
-# parse stays columnar downstream.
+# per-document in ``rdf_io.parse_docs``, the driver every whole-document
+# syntax shares — corpus parallelism is ACROSS documents; the
+# per-statement parse stays columnar downstream.
 #
 # Loud-failure policy (matches the rest of the module): ``@base`` raises in
 # ``extract_prefixes``; constructs the statement parser cannot represent —
@@ -1104,13 +1106,6 @@ def _expand_statement(tokens: list[str], gen: list[int]) -> list[str]:
     return lines or bad  # e.g. bare '[] .' produces no triples → malformed
 
 
-#: one document is re-assembled by one task (same per-document execution
-#: model as the reference's Jena read, ``Flows.kt:66-77``); past ~1GB a
-#: single document also approaches Spark's single-string limits, so fail
-#: loudly with actionable guidance instead of OOMing mid-task.
-MAX_TTL_DOC_BYTES = 1 << 30
-
-
 def normalize_turtle_docs(
     docs: DataFrame,
     ttl_col: str = "ttl",
@@ -1120,70 +1115,24 @@ def normalize_turtle_docs(
     line_transform=None,
 ) -> DataFrame:
     """Whole Turtle documents → one normalized statement/directive line per
-    row (column ``value`` + ``carry_cols``), via an Arrow-batched
-    per-document re-assembly pass, returned as one local checkpoint at
-    no less than the session parallelism (``line_transform`` — e.g.
+    row (column ``value`` + ``carry_cols``), re-assembled per document by
+    ``rdf_io.parse_docs`` and returned as one local checkpoint at no less
+    than the session parallelism (``line_transform`` — e.g.
     ``harvest.py``'s line-scoped space-in-IRI fix — runs before it).
 
     ``base_iri`` is the initial base for relative-IRI resolution (the
     reference passes the request address as ``baseUri``, ``Flows.kt:69``);
     an ``@base`` directive inside a document overrides it from that point
     on. Relative IRIs with no in-scope base raise. ``base_iri_col`` names
-    a PER-ROW base column instead (e.g. ``input_file_name()`` for a
-    multi-file read — each document must resolve against its OWN address,
-    not a shared directory path) and wins over ``base_iri``.
-
-    Parallelism is ACROSS documents — a single multi-GB ``.ttl`` dump
-    normalizes in one task (and past ``MAX_TTL_DOC_BYTES`` raises with
-    guidance to split the dump into parts first); this mirrors the
-    reference, which reads one document single-threaded through Jena."""
-    return _normalize_docs(
-        docs, ttl_col, carry_cols, base_iri, base_iri_col, line_transform,
-        "Turtle", ("value",),
-        lambda text, base: ((line,) for line in _split_statements(text, base)),
+    a PER-ROW base column and wins over ``base_iri``; a document past
+    ``rdf_io.MAX_DOC_BYTES`` raises with guidance to split the dump into
+    parts first (see ``rdf_io.parse_docs``)."""
+    lines = parse_docs(
+        docs, ttl_col,
+        lambda text, base: [(ln,) for ln in _split_statements(text or "", base)],
+        ("value",), carry_cols, base_iri, base_iri_col,
     )
-
-
-def _normalize_docs(
-    docs: DataFrame,
-    doc_col: str,
-    carry_cols: tuple[str, ...],
-    base_iri: str | None,
-    base_iri_col: str | None,
-    line_transform,
-    syntax: str,
-    fields: tuple[str, ...],
-    split,
-) -> DataFrame:
-    """The per-document normalizer loop of :func:`normalize_turtle_docs`
-    and :func:`normalize_trig_docs`: ``split(text, base)`` yields one
-    ``fields`` tuple per normalized line, run per document in one
-    ``mapInPandas`` pass whose output is one :func:`materialize_lines`
-    checkpoint."""
-    carry = list(carry_cols)
-    names = [*carry, *fields]
-    schema = ", ".join(f"{c} string" for c in names)
-
-    def _norm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                text = r[doc_col] or ""
-                if len(text) > MAX_TTL_DOC_BYTES:
-                    raise ValueError(
-                        f"{syntax} document of {len(text)} chars exceeds the "
-                        f"{MAX_TTL_DOC_BYTES}-byte single-document limit — "
-                        "split the dump into parts (statement re-assembly "
-                        "parallelizes across documents, not within one)"
-                    )
-                # per-row base wins; '' (input_file_name on a non-file
-                # source) falls back to the shared base
-                base = (r[base_iri_col] if base_iri_col else None) or base_iri
-                prefix = [r[c] for c in carry]
-                rows.extend([*prefix, *out] for out in split(text, base))
-            yield pd.DataFrame(rows, columns=names)
-
-    return materialize_lines(docs.mapInPandas(_norm, schema), line_transform)
+    return materialize_lines(lines, line_transform)
 
 
 def parse_turtle_docs(
@@ -1229,11 +1178,12 @@ def normalize_trig_docs(
     and default-graph statements. Materialized like
     :func:`normalize_turtle_docs`: one local checkpoint, taken after
     ``line_transform``."""
-    return _normalize_docs(
-        docs, trig_col, carry_cols, base_iri, base_iri_col, line_transform,
-        "TriG", ("graph", "value"),
-        lambda text, base: _split_statements_tagged(text, base, trig=True),
+    lines = parse_docs(
+        docs, trig_col,
+        lambda text, base: _split_statements_tagged(text or "", base),
+        ("graph", "value"), carry_cols, base_iri, base_iri_col,
     )
+    return materialize_lines(lines, line_transform)
 
 
 def parse_trig_docs(

@@ -81,6 +81,8 @@ def load_triples(spark, path: str, fmt: str, pre: bool, keep_malformed: bool):
         parse_nquads,
         parse_ntriples,
         pre_process,
+        pre_process_controls,
+        pre_process_iri_spaces,
         read_rdf_source,
     )
 
@@ -100,135 +102,75 @@ def load_triples(spark, path: str, fmt: str, pre: bool, keep_malformed: bool):
 
         return parse_jsonld(lines, keep_malformed=keep_malformed)
 
-    # whole-document syntaxes (Turtle goes through statement re-assembly:
-    # real .ttl dumps use `;`/`,` lists, multi-line statements, [...] /
-    # (...) and @base). NOTE the per-document parallelism model matches
-    # the reference (Jena reads one document in one thread,
-    # Flows.kt:66-77): corpus parallelism is ACROSS files.
-    # normalize_turtle_docs raises loudly on a single document past ~1GB —
-    # split such dumps into parts first.
-    docs = spark.read.text(path, wholetext=True)
-    if pre and fmt in ("ttl", "trig"):
-        # Turtle-family only — and document-level gets ONLY the
-        # character-local half (BOM/control strip): the space-in-IRI
-        # %-encode pairs the nearest <...> brackets, which across a
-        # multi-statement document can fuse a '<' inside one literal with
-        # a '>' in a later IRI and rewrite literal content across
-        # statement boundaries (ADVICE r4). It runs line-scoped below:
-        # per re-assembled statement for Turtle, per physical line for
-        # TriG. (XML is rejected outright — element tags ARE <...> with
-        # legitimate attribute spaces.)
-        from bop_consus_importing_rdf_spark.sources.rdf_io import (
-            pre_process_controls,
-        )
-
-        docs = docs.select(pre_process_controls(F.col("value")).alias("value"))
-    elif pre:
+    # whole-document syntaxes, one document per file (Turtle and TriG go
+    # through statement re-assembly: real dumps use `;`/`,` lists,
+    # multi-line statements, [...] / (...) and @base). The per-document
+    # model matches the reference (Jena reads one document in one thread,
+    # Flows.kt:66-77): corpus parallelism is ACROSS files, and a single
+    # document past rdf_io.MAX_DOC_BYTES raises — split such dumps first.
+    if pre and fmt not in ("ttl", "trig"):
         raise SystemExit(
             "--pre-process is not supported for RDF/XML or compact "
             "JSON-LD input (the space-in-IRI fix-up would corrupt XML "
             "attribute spacing / JSON punctuation)"
         )
+    # a whole document gets ONLY the character-local half of the
+    # pre-process (BOM/control strip): the space-in-IRI %-encode pairs the
+    # nearest <...> brackets, which across a multi-statement document can
+    # fuse a '<' inside one literal with a '>' in a later IRI and rewrite
+    # literal content across statement boundaries. It runs line-scoped,
+    # on each re-assembled statement before the normalizer's checkpoint.
+    value = pre_process_controls(F.col("value")) if pre else F.col("value")
+    transform = pre_process_iri_spaces if pre else None
+    # EACH DOCUMENT's own address is its base IRI, exactly the reference's
+    # JenaUtils.read(content, contentType, address) at Flows.kt:69: with a
+    # directory input, a per-path base would resolve every file's relative
+    # IRIs against the directory URI (RFC 3986 strips the last segment),
+    # silently mis-addressing them. input_file_name() is the per-row file
+    # URI; the whole-path base stays as the fallback for sources where it
+    # is empty.
+    docs = spark.read.text(path, wholetext=True).select(
+        value.alias("value"), F.input_file_name().alias("_src")
+    )
+    bases = {"base_iri": input_base_iri(path), "base_iri_col": "_src"}
     if fmt == "ttl":
-        from bop_consus_importing_rdf_spark.sources.rdf_io import (
-            pre_process_iri_spaces,
-        )
         from bop_consus_importing_rdf_spark.sources.turtle_io import (
             normalize_turtle_docs,
             parse_turtle,
         )
 
-        # EACH DOCUMENT's own address is its base IRI, exactly the
-        # reference's JenaUtils.read(content, contentType, address) at
-        # Flows.kt:69 — with a directory input, a per-path base would
-        # resolve every file's relative IRIs against the directory URI
-        # (RFC 3986 strips the last segment), silently mis-addressing
-        # them (r5 review). input_file_name() is the per-row file URI;
-        # the whole-path base stays as the fallback for sources where
-        # it is empty.
-        base = (
-            input_base_iri(path) if "://" not in path else path
-        )
-        # the space-in-IRI fix runs per re-assembled statement, before
-        # the normalizer's checkpoint
         lines = normalize_turtle_docs(
-            docs.select(
-                F.col("value").alias("ttl"),
-                F.input_file_name().alias("_src"),
-            ),
-            base_iri=base,
-            base_iri_col="_src",
-            line_transform=pre_process_iri_spaces if pre else None,
+            docs, "value", line_transform=transform, **bases
         )
         return parse_turtle(lines, keep_malformed=keep_malformed)
+    if fmt == "trig":
+        from bop_consus_importing_rdf_spark.sources.turtle_io import (
+            parse_trig_docs,
+        )
+
+        return parse_trig_docs(
+            docs, "value", keep_malformed=keep_malformed,
+            line_transform=transform, **bases,
+        ).drop("graph")
     if fmt == "jsonld-doc":
         # compact-form JSON-LD documents (inline @context); the
         # line-oriented "jsonld" format remains the flattened
-        # one-statement-per-line form our serializer emits. Each file's
-        # own address is its base IRI (same rule as the ttl path).
+        # one-statement-per-line form our serializer emits
         from bop_consus_importing_rdf_spark.sources.jsonld_io import (
-            parse_jsonld_docs,
+            parse_jsonld_docs as parse,
         )
-
-        base = input_base_iri(path) if "://" not in path else path
-        return parse_jsonld_docs(
-            docs.select(
-                F.col("value").alias("jsonld"),
-                F.input_file_name().alias("_src"),
-            ),
-            keep_malformed=keep_malformed,
-            base_iri=base,
-            base_iri_col="_src",
-        )
-    if fmt == "rdfxml":
+    else:  # rdfxml
         from bop_consus_importing_rdf_spark.functions.rdfxml import (
-            parse_rdfxml,
+            parse_rdfxml as parse,
         )
-
-        # per-document base (input_file_name), same rule as the ttl path:
-        # relative rdf:about/rdf:resource and rdf:ID fragments resolve
-        # against the file's own address unless xml:base overrides
-        base = input_base_iri(path) if "://" not in path else path
-        return parse_rdfxml(
-            docs.select(
-                F.col("value").alias("xml"),
-                F.input_file_name().alias("_src"),
-            ),
-            keep_malformed=keep_malformed,
-            base_iri=base,
-            base_iri_col="_src",
-        )
-    from bop_consus_importing_rdf_spark.sources.turtle_io import (
-        parse_trig_docs,
-    )
-
-    transform = None
-    if pre:
-        from bop_consus_importing_rdf_spark.sources.rdf_io import (
-            pre_process_iri_spaces,
-        )
-
-        # line-scoped space-in-IRI fix, applied to each RE-ASSEMBLED
-        # statement line (never across statement boundaries)
-        transform = pre_process_iri_spaces
-    # per-document base (input_file_name), same as the ttl path above
-    base = input_base_iri(path) if "://" not in path else path
-    return parse_trig_docs(
-        docs.select(
-            F.col("value").alias("trig"),
-            F.input_file_name().alias("_src"),
-        ),
-        keep_malformed=keep_malformed,
-        base_iri=base,
-        base_iri_col="_src",
-        line_transform=transform,
-    ).drop("graph")
+    return parse(docs, "value", keep_malformed=keep_malformed, **bases)
 
 
 def input_base_iri(path: str) -> str:
-    """A local input path as a ``file://`` base IRI (the reference passes
-    the request address as the parse base, ``Flows.kt:69``)."""
-    return Path(path).resolve().as_uri()
+    """An input path as its base IRI (the reference passes the request
+    address as the parse base, ``Flows.kt:69``): a URI (``scheme://…``)
+    as it is, a local path as a ``file://`` URI."""
+    return path if "://" in path else Path(path).resolve().as_uri()
 
 
 def run_harvest(
@@ -277,6 +219,7 @@ def run_harvest(
         with_counter,
     )
     from bop_consus_importing_rdf_spark.operators.parallelism import (
+        UNKNOWN_SIZE,
         plan_size_bytes,
     )
     from bop_consus_importing_rdf_spark.operators.split import split_datasets
@@ -284,6 +227,7 @@ def run_harvest(
         stage_metrics,
         union_metrics,
     )
+    from bop_consus_importing_rdf_spark.plans.resume import hadoop_path
     from bop_consus_importing_rdf_spark.sources.bucketed import write_bucketed
 
     if fmt == "auto":
@@ -298,9 +242,7 @@ def run_harvest(
         # same files as plain parquet (the in-memory catalog does not
         # survive restarts without a Hive metastore) — the parse work is
         # skipped either way, which is the expensive part.
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(f"{output}/triples")
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, p = hadoop_path(spark, f"{output}/triples")
         if fs.exists(p):
             parsed = spark.read.parquet(f"{output}/triples")
             resumed = True
@@ -315,7 +257,7 @@ def run_harvest(
     if (
         not resumed
         and bucket_threshold_bytes is not None
-        and src_bytes != (1 << 63) - 1
+        and src_bytes != UNKNOWN_SIZE
         and src_bytes >= bucket_threshold_bytes
     ):
         bucketed_table = f"harvest_triples_{run_id}"
@@ -339,11 +281,8 @@ def run_harvest(
         # a valid durable checkpoint — drop it AND its external files.
         if bucketed_table is not None:
             spark.sql(f"DROP TABLE IF EXISTS {bucketed_table}")
-            jvm = spark._jvm
-            p = jvm.org.apache.hadoop.fs.Path(f"{output}/triples")
-            p.getFileSystem(
-                spark._jsc.hadoopConfiguration()
-            ).delete(p, True)
+            fs, p = hadoop_path(spark, f"{output}/triples")
+            fs.delete(p, True)
         hint = ""
         if fmt == "jsonld":
             # the line format expects one flattened statement object per

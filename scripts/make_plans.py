@@ -83,7 +83,11 @@ COMMENTARY = {
         "7.2s for the identical 905k-line parse. "
         "Clean branch = packed regex + anchored extracts projected into "
         "attributes, 100% whole-stage codegen; assist branch = one "
-        "ArrowEvalPython behind a nondeterministic plan barrier."
+        "ArrowEvalPython behind a nondeterministic plan barrier. The "
+        "render is materialized once (rdf_io.materialize_lines), as the "
+        "parse's input contract asks: parsed live, the render fused into "
+        "the clean branch's codegen stage, which Janino could not compile "
+        "(Code grows beyond 64 KB) and ran without whole-stage codegen."
     ),
     "events_sessionize": "Single window per user; scan pruned to (user_id, event_id, ts).",
     "nt_parse": (

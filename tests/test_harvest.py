@@ -295,11 +295,11 @@ def test_harvest_resume_skips_parse(spark, tmp_path, graph):
 
 
 def test_harvest_multi_file_dir_per_doc_bases_and_labels(spark, tmp_path):
-    """r5 review: with a DIRECTORY input, each file's relative IRIs resolve
-    against that file's OWN address (input_file_name — the reference passes
-    each document's address as baseUri, Flows.kt:69), and synthesized
-    bnode labels are document-scoped so bnode subtrees from different
-    files can never merge in the combined triple table."""
+    """With a DIRECTORY input, each file's relative IRIs resolve against
+    that file's OWN address (input_file_name — the reference passes each
+    document's address as baseUri, Flows.kt:69) in every document syntax,
+    and synthesized bnode labels are document-scoped so bnode subtrees
+    from different files can never merge in the combined triple table."""
     from harvest import load_triples
 
     d = tmp_path / "dumps"
@@ -322,6 +322,33 @@ def test_harvest_multi_file_dir_per_doc_bases_and_labels(spark, tmp_path):
         r.obj_value for r in rows if r.pred == "urn:p:dist"
     }
     assert len(labels) == 2 and all(l.startswith("_:tgen-") for l in labels)
+
+    # the same relative self-reference in each other document syntax
+    self_docs = {
+        "trig": ('<> <urn:p:self> "{n}" .\n'
+                 '<urn:g> {{ <urn:s:{n}> <urn:p:in> "{n}" . }}\n'),
+        "rdfxml": (
+            '<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#"'
+            ' xmlns:p="urn:p:"><rdf:Description rdf:about="">'
+            "<p:self>{n}</p:self></rdf:Description></rdf:RDF>"
+        ),
+        "jsonld-doc": '{{"@id": "", "urn:p:self": "{n}"}}',
+    }
+    for fmt, doc in self_docs.items():
+        fd = tmp_path / f"dumps-{fmt}"
+        fd.mkdir()
+        for n in ("a", "b"):
+            (fd / n).write_text(doc.format(n=n), encoding="utf-8")
+        rows = load_triples(
+            spark, str(fd), fmt, pre=False, keep_malformed=False
+        ).collect()
+        assert all(r.obj_kind is not None for r in rows), (fmt, rows)
+        selfs = sorted(
+            (r.subj, r.obj_value) for r in rows if r.pred == "urn:p:self"
+        )
+        assert selfs == [
+            (f"file://{fd}/a", "a"), (f"file://{fd}/b", "b")
+        ], (fmt, selfs)
 
 
 def test_harvest_compact_jsonld_directory(spark, tmp_path):

@@ -5,16 +5,18 @@ from __future__ import annotations
 import gzip
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from bop_consus_importing_rdf_spark.functions.ntriples import nt_line
 from bop_consus_importing_rdf_spark.sources.rdf_io import (
+    _NT_PACKED_PATTERN,
     parse_ntriples,
     pre_process,
     read_rdf_source,
 )
 
-from .conftest import triples_df
+from .conftest import executed_plan_nodes, triples_df
 
 ROUNDTRIP_ROWS = [
     ("urn:s", "urn:p", "urn:o", "iri"),
@@ -156,3 +158,66 @@ def test_base_filter_stays_above_upstream_repartition(spark):
         # the subtree under the exchange: the render projection down to
         # the fixture's scan
         assert "Filter" not in plan[i:plan.index("LogicalRDD", i)], plan
+
+
+def test_clean_branch_runs_the_packed_regex_in_one_operator(spark, tmp_path):
+    """The N-Triples clean branch projects the packed split into an
+    attribute and drops malformed lines on that attribute, so with
+    ``keep_malformed=False`` the executed plan evaluates the packed
+    pattern in ONE operator — not once in the malformed-drop filter and
+    again in the projection above it."""
+    path = tmp_path / "dump.nt"
+    path.write_text(
+        "\n".join([
+            "<urn:s> <urn:p> <urn:o> .",
+            '<urn:s> <urn:p> "x"@en .',
+            '<urn:s> <urn:p> "caf\\u00e9" .',  # assist branch
+            "# comment",
+            "junk",
+        ]) + "\n",
+        encoding="utf-8",
+    )
+    rows, nodes = executed_plan_nodes(
+        spark,
+        lambda: parse_ntriples(spark.read.text(str(path))).collect(),
+    )
+    assert sorted(r.obj_value for r in rows) == ["café", "urn:o", "x"]
+    packed = re.compile(
+        r"regexp_replace\(\w+#\d+, " + re.escape(_NT_PACKED_PATTERN)
+    )
+    carriers = [n for n, d in nodes if packed.search(d)]
+    assert carriers == ["Project"], carriers
+
+
+def test_every_document_syntax_enforces_the_size_bound(spark, monkeypatch):
+    """One document past ``MAX_DOC_BYTES`` raises the driver's guard in
+    each whole-document syntax — under ``keep_malformed`` too, where it
+    would otherwise become a reject row."""
+    from bop_consus_importing_rdf_spark.functions.rdfxml import parse_rdfxml
+    from bop_consus_importing_rdf_spark.sources import rdf_io
+    from bop_consus_importing_rdf_spark.sources.jsonld_io import (
+        parse_jsonld_docs,
+    )
+    from bop_consus_importing_rdf_spark.sources.turtle_io import (
+        normalize_trig_docs,
+        normalize_turtle_docs,
+    )
+
+    monkeypatch.setattr(rdf_io, "MAX_DOC_BYTES", 16)
+    ttl = "<urn:a> <urn:p> <urn:b> ."
+    cases = [
+        (lambda d: normalize_turtle_docs(d, "d"), ttl),
+        (lambda d: normalize_trig_docs(d, "d"), f"<urn:g> {{ {ttl} }}"),
+        (lambda d: parse_jsonld_docs(d, "d", keep_malformed=True),
+         '{"@id": "urn:a", "urn:p": "a long enough value"}'),
+        (lambda d: parse_rdfxml(d, "d", keep_malformed=True),
+         '<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#"'
+         "/>"),
+    ]
+    for parse, doc in cases:
+        docs = spark.createDataFrame([(doc,)], "d string")
+        with pytest.raises(Exception, match=(
+            rf"ValueError: document of {len(doc)} chars exceeds the "
+            "16-byte single-document limit"
+        )):
+            parse(docs).collect()
